@@ -186,22 +186,14 @@ object Bench {
     // scan (observed: a row-local signature query "took" 0.24s by computing
     // nothing). The noop writer consumes full rows.
     val spark = session(cpus)
-    // s01 is the complete-mode streaming EQUIVALENCE PROOF (its state grows
-    // with window count — SCALE.md flags it as non-production shape); it
-    // stays in Verify/CORRECTNESS and StreamingSpec but is excluded from the
-    // perf suite so the headline doesn't carry 6.7s of proof-only surface.
-    // s02 (watermark+append) and s04 (custom state) are the production
-    // streaming shapes and remain benched.
-    val benchSkip = Set("s01_stream_window")
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => benchSkip(q._1)).map { case (name, fn) =>
+    val results = SparkEntry.registry.filter(_.benched).sortBy(_.name).map { q =>
       val t0 = System.nanoTime()
       val ok = try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
+        q.run(spark, sfDir).write.mode("overwrite").format("noop").save(); true
       } catch {
-        case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+        case e: Throwable => System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false
       }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")

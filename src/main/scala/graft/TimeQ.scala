@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single-query timing probe (diagnostic only, like Micro — not a contract
+/** Single-query timing probe (diagnostic only — not a contract
   * surface): `runMain graft.TimeQ <queryName> <sfDir>` times one
   * SparkEntry.queries entry through the noop sink, 4 passes. */
 object TimeQ {

@@ -90,41 +90,44 @@ object RealPdfGen {
         bitCnt -= 8
       }
     }
-    val dict = new java.util.HashMap[String, Integer](4096)
-    def resetDict(): Unit = {
-      dict.clear()
-      var b = 0
-      while (b < 256) { dict.put(String.valueOf(b.toChar), Integer.valueOf(b)); b += 1 }
-    }
-    resetDict()
+    // int trie over codes: the children of code p are firstChild(p), then
+    // nextSibling(...) links, each carrying its last byte in `suffix`; 0 =
+    // none (added codes start at 258, single bytes are the implicit roots).
+    // Small fixed arrays, reset by clearing firstChild below `next`.
+    val firstChild = new Array[Int](4096)
+    val nextSibling = new Array[Int](4096)
+    val suffix = new Array[Int](4096)
     var next = 258
     putCode(256) // leading clear (what real encoders emit)
-    var w = ""
-    var i = 0
+    var w = if (data.length > 0) data(0) & 0xff else -1 // current prefix code; -1 = empty
+    var i = 1
     var emittedSinceClear = false
     while (i < data.length) {
-      val c = (data(i) & 0xff).toChar
-      val wc = w + c
-      if (dict.containsKey(wc)) w = wc
+      val c = data(i) & 0xff
+      var k = firstChild(w)
+      while (k != 0 && suffix(k) != c) k = nextSibling(k)
+      if (k != 0) w = k
       else {
-        putCode(dict.get(w).intValue()); emittedSinceClear = true
+        putCode(w); emittedSinceClear = true
         if (next < 4096) {
-          dict.put(wc, Integer.valueOf(next)); next += 1
+          suffix(next) = c; nextSibling(next) = firstChild(w); firstChild(w) = next
+          next += 1
           // width pairing: the decoder's entry count lags the encoder's by
           // one at the same stream position, and (early change) the decoder
           // widens when ITS next+1 would overflow — so the encoder widens
           // when its own next reaches the boundary exactly
           if (next >= (1 << codeBits) && codeBits < 12) codeBits += 1
         } else {
-          putCode(256); resetDict(); next = 258; codeBits = 9
+          putCode(256); java.util.Arrays.fill(firstChild, 0, next, 0)
+          next = 258; codeBits = 9
           emittedSinceClear = false
         }
-        w = String.valueOf(c)
+        w = c
       }
       i += 1
     }
-    if (w.nonEmpty) {
-      putCode(dict.get(w).intValue())
+    if (w >= 0) {
+      putCode(w)
       // the decoder adds one more table entry upon reading this flush code
       // (it is not miss-driven here, so the loop above never counted it) —
       // mirror that entry so EOD is emitted at the width the decoder will

@@ -83,17 +83,18 @@ object ImageHeaders {
     } else None
 
   /** BMP: dispatch on the DIB header size at offset 14 — BITMAPINFOHEADER
-    * (≥40) carries int32 width/height at 18/22 (negative height = top-down
-    * rows, dimensions are the absolute value); the OS/2 BITMAPCOREHEADER
-    * (12) carries uint16 width/height at 18/20 — reading it with the int32
-    * layout would fuse width|height into one garbage dimension. */
+    * (40+) and the OS/2 BITMAPINFOHEADER2 short forms (16..64) carry int32
+    * width/height at 18/22 (negative height = top-down rows, dimensions are
+    * the absolute value); the OS/2 BITMAPCOREHEADER (12) carries uint16
+    * width/height at 18/20 — reading it with the int32 layout would fuse
+    * width|height into one garbage dimension. */
   private def bmpDims(b: Array[Byte]): Option[Dims] =
     if (b.length >= 26) {
       le32(b, 14) match {
         case 12 =>
           val w = le16(b, 18); val h = le16(b, 20)
           if (w > 0 && h > 0) Some(Dims(w, h)) else None
-        case sz if sz >= 40 =>
+        case sz if sz >= 16 =>
           val w = le32(b, 18); val h = math.abs(le32(b, 22))
           if (w > 0 && h > 0) Some(Dims(w, h)) else None
         case _ => None

@@ -157,35 +157,6 @@ object MultimodalFunctions {
       snap32(w * ratio).as("out_w"), snap32(h * ratio).as("out_h"))
   }
 
-  /** STUB frame sampling for video-ish payloads: one row per sampled frame
-    * (url, frame_idx, frame_ts_ms, feature) — the real Spark shape of
-    * frame extraction (explode to per-frame rows that downstream ops join
-    * or embed) with a deterministic fake decoder (no codecs in sandbox).
-    * Frame count = min(maxFrames, 1 + n_bytes/strideBytes); features derive
-    * from md5(payload digest ++ frame_idx). No shuffle: scan → mapPartitions
-    * → rows. */
-  def frameSample(pages: Dataset[PageRow], strideBytes: Int = 4096,
-                  maxFrames: Int = 8): DataFrame = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { p =>
-        val payload = if (p.html == null) Array.emptyByteArray else p.html
-        md.reset()
-        val digest = md.digest(payload)
-        val nFrames = math.min(maxFrames, 1 + payload.length / strideBytes)
-        (0 until nFrames).map { i =>
-          md.reset()
-          md.update(digest)
-          md.update(i.toByte)
-          val fd = md.digest()
-          val feat = Array.tabulate(8)(k => (fd(k) & 0xff).toFloat / 255.0f)
-          (p.url, i, i.toLong * 40L, feat) // 40ms ≈ 25fps frame spacing
-        }
-      }
-    }.toDF("url", "frame_idx", "frame_ts_ms", "feature")
-  }
-
   final case class VideoFrameMeta(
       url: String,
       n_bytes: Long,

@@ -843,8 +843,12 @@ object HtmlTokenizer {
     // follows as children — honoring the slash would orphan the content as
     // siblings and lose the tag's class/id hints for classification; for
     // rawtext elements the same rule means '<script src=x/>' opens a script
-    // whose body must be skipped. Only genuinely void elements self-close.
-    val kind = if (HtmlNames.isVoid(name)) Tok.SelfClose else Tok.Start
+    // whose body must be skipped. Only genuinely void elements self-close —
+    // and the foreign-content roots svg/math, where HTML5 honors the slash:
+    // '<a><svg class="icon"/>Home</a>' must not open a never-closed skip subtree.
+    val kind =
+      if (HtmlNames.isVoid(name) || (selfClose && (name == "svg" || name == "math"))) Tok.SelfClose
+      else Tok.Start
     arena.add(kind, i0, j, arena.intern(name), flag)
     j
   }

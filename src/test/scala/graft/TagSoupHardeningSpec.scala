@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.Extractor
-import graft.htmltok.Charsets
+import graft.htmltok.{Charsets, HtmlTokenizer, TokenArena}
 
 /** Regressions for real-world tag-soup/charset behaviors found by review:
   * each of these silently emptied or corrupted extraction before the fix. */
@@ -55,6 +55,27 @@ class TagSoupHardeningSpec extends AnyFunSuite {
     val got = extract("<body><script src=\"x\"/>if(a&&b){do_stuff();}</script>" +
       "<p>real paragraph with enough words here</p></body>")
     assert(got == "real paragraph with enough words here")
+  }
+
+  test("self-closing foreign roots <svg/> and <math/> close at once") {
+    // HTML5 honors the slash on foreign-content roots: an icon svg must not
+    // open a never-closed skip subtree that eats the rest of the block, and
+    // an empty <math/> must not turn the following text into a formula
+    assert(extract("<p><svg/>Home is where the long paragraph text lives</p>")
+      == "Home is where the long paragraph text lives")
+    assert(extract("<p><math/>Home is where the long paragraph text lives</p>")
+      == "Home is where the long paragraph text lives")
+    // the extractor leaves link text out, so the anchor itself is pinned
+    // through anchorTexts
+    val arena = new TokenArena()
+    for (root <- Seq("svg", "math")) {
+      val pairs = HtmlTokenizer.anchorTexts(
+        s"""<a href="/h"><$root class="icon"/>Home</a>""".getBytes("UTF-8"), arena)
+      assert(pairs == Vector("/h" -> "Home"), pairs)
+    }
+    // the slash stays ignored on HTML elements: <div/> opens a div
+    assert(extract("<div/>Home is where the long paragraph text lives")
+      == "Home is where the long paragraph text lives")
   }
 
   test("CDATA wrapper markup is stripped, inner text kept") {
