@@ -182,10 +182,14 @@ object SparkEntry {
           chunkThreshold = 0, minChunkBytes = 2048).toDF()
         .select(col("url"), col("text"), col("nSpans").as("n_spans"))
         .orderBy("url")),
-    // PDF mega-doc tile-explode path (skew handling; seam-equivalence proven
-    // in PdfPagedSpec)
+    // PDF mega-doc page-explode path: the same splitter over the corpus's
+    // PDF rows (skew handling; identity with the single pass proven in
+    // PdfPagedSpec)
     Query("x07_pdf_paged", (s, _) =>
-      graft.pipeline.PdfPagedExtract.run(CorpusSource.pages(s, 280))
+      graft.pipeline.ChunkedExtract.run(
+          CorpusSource.pages(s, 280).filter(p => graft.pdf.PdfBranch.isPdf(p.html)),
+          chunkThreshold = 0).toDF()
+        .select("url", "text", "status", "truncated")
         .orderBy("url")),
     // word-level offsets over EXTRACTION output (cal_ocr_word_box applied to
     // extracted text; rows-only check — corpus-synthesized input). The spans

@@ -3,7 +3,8 @@ package graft.corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.extract.{ExtractConfig, Extractor, ExtractorState}
+import graft.model.PageRow
+import graft.pipeline.Extract
 
 /** PubTabNet-style table-annotation label files (the reference's
   * `PubTabDataSet`, ppocr/data/pubtab_dataset.py:24-110): one JSON object per
@@ -84,19 +85,15 @@ object PubTab {
     * table path (occupancy grid, span semantics — Extractor.assembleTable). */
   def tableText(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    read(spark, path)
+    val pages = read(spark, path)
       .select(col("filename"), col("structure"), col("cells"))
       .as[(String, Seq[String], Seq[String])]
-      .mapPartitions { it =>
-        val state = new ExtractorState()
-        it.map { case (name, structure, cells) =>
-          val html = s"<html><body>${toHtml(structure, cells)}</body></html>"
-          val doc = Extractor.extract(name, html.getBytes("UTF-8"),
-            ExtractConfig(), state)
-          (name, doc.text)
-        }
+      .map { case (name, structure, cells) =>
+        val html = s"<html><body>${toHtml(structure, cells)}</body></html>"
+        PageRow(name, null, html.getBytes("UTF-8"), null, null)
       }
-      .toDF("filename", "table_text")
+    Extract.run(pages).toDF()
+      .select(col("url").as("filename"), col("text").as("table_text"))
       // numeric order, not lexical: 'table_1000.png' sorts before
       // 'table_999.png' lexically once the %03d pad overflows
       .orderBy(regexp_extract(col("filename"), "(\\d+)", 1).cast("long"),

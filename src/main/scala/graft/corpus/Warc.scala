@@ -452,24 +452,8 @@ object Warc {
       "WARC-Date" -> date,
       "Content-Type" -> "text/plain"), text)
 
-  /** One WET segment: warcinfo leader + a conversion record per doc, EACH
-    * its own gzip member (the seekable CC convention — [[gzipMembers]] and
-    * a CDX-style index work on a WET exactly as on a WARC). Empty input
-    * yields empty bytes: an empty partition writes no segment. */
-  def wetSegment(docs: Seq[WetDoc]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(1 << 20)
-    if (docs.nonEmpty) {
-      out.write(gzipMember(warcinfoRecord(formatDate(docs.head.ts))))
-      docs.foreach { d =>
-        out.write(gzipMember(conversionRecord(d.url, formatDate(d.ts),
-          d.text.getBytes(StandardCharsets.UTF_8))))
-      }
-    }
-    out.toByteArray
-  }
-
   /** Conversion records of a WET segment, parsed back to rows — the reader
-    * side of [[wetSegment]] (round-trip pinned byte-exactly in WarcSpec). */
+    * side of [[wetExport]] (round-trip pinned byte-exactly in WarcSpec). */
   def wetRows(raw: Array[Byte]): Vector[WetDoc] =
     allRecords(raw).filter(_.warcType.equalsIgnoreCase("conversion"))
       .map { r =>
@@ -484,7 +468,10 @@ object Warc {
     * per-partition arena reuse, segment assembly at the partition boundary),
     * zero shuffle: the same stage shape as [[graft.pipeline.Extract.run]],
     * which is exactly how the public WET artifact is produced from a WARC
-    * segment. One segment per non-empty partition; record ORDER inside a
+    * segment. A segment is a warcinfo leader + one conversion record per
+    * doc, EACH its own gzip member (the seekable CC convention —
+    * [[gzipMembers]] and a CDX-style index work on a WET exactly as on a
+    * WARC). One segment per non-empty partition; record ORDER inside a
     * segment follows partition order (segment grouping is a parallelism
     * artifact — the RECORD SET is what's deterministic, and what x29
     * verifies after re-parsing). */
@@ -498,7 +485,6 @@ object Warc {
       // materializing the partition's texts into a Vector first held the
       // whole partition's extracted text AND its compressed copy live at
       // once; here live memory is one record plus the growing gzip output
-      // (bytes identical to the wetSegment formulation, spec-pinned)
       val docs = it.map { p =>
         val e = graft.extract.Extractor.extract(p.url, p.html, cfg, state)
         WetDoc(p.url, p.warc_ts, e.text)

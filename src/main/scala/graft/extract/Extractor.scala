@@ -61,12 +61,6 @@ object TextNormalizer {
     }
     sb.toString
   }
-
-  def countNonWs(s: String): Int = {
-    var c = 0; var i = 0
-    while (i < s.length) { if (!isWs(s.charAt(i))) c += 1; i += 1 }
-    c
-  }
 }
 
 /** Per-partition reusable extraction state (arena discipline: zero steady-state
@@ -287,7 +281,7 @@ object Extractor {
     val rawOk = Charsets.rawByteSafe(charset) &&
       !(Charsets.rawByteHazardCdata(charset) && Charsets.containsCdata(input))
     if (rawOk)
-      extractHtml(url, input, charset, bom, truncated, cfg, state)
+      extractHtmlGrouped(url, input, charset, bom, truncated, cfg, state)._1
     else {
       // transcode-first path (utf-16/32, iso-2022, …): these encodings can put
       // structural-looking bytes inside character sequences, so the raw-byte
@@ -308,24 +302,18 @@ object Extractor {
           while (end > 0 && (utf8all(end) & 0xc0) == 0x80) end -= 1
           (java.util.Arrays.copyOf(utf8all, end), true)
         }
-      val doc = extractHtml(url, utf8, Charsets.Utf8, 0, truncated || reTruncated,
-        cfg, state)
+      val doc = extractHtmlGrouped(url, utf8, Charsets.Utf8, 0, truncated || reTruncated,
+        cfg, state)._1
       doc.copy(charset = charset.name().toLowerCase(java.util.Locale.ROOT))
     }
   }
 
-  /** HTML kernel with an explicit charset/BOM (used directly by the chunked
-    * mega-document path, which sniffs once on the whole payload and extracts
-    * fragments with the inherited charset). */
-  def extractHtml(url: String, input: Array[Byte], charset: Charset, bom: Int,
-                  truncated: Boolean, cfg: ExtractConfig,
-                  state: ExtractorState): ExtractedDoc =
-    extractHtmlGrouped(url, input, charset, bom, truncated, cfg, state)._1
-
-  /** [[extractHtml]] plus the kept-group partition (spans per assembly group,
-    * in order) — the chunked path ships these sizes to its merge so the
-    * global block cap truncates at the SAME group boundary the single-pass
-    * kernel uses (ChunkedExtract's lockstep contract). */
+  /** HTML kernel with an explicit charset/BOM, plus the kept-group partition
+    * (spans per assembly group, in order). The chunked mega-document path
+    * sniffs once on the whole payload, extracts fragments with the inherited
+    * charset, and ships these sizes to its merge so the global block cap
+    * truncates at the SAME group boundary the single-pass kernel uses
+    * (ChunkedExtract's lockstep contract). */
   private[graft] def extractHtmlGrouped(
       url: String, input: Array[Byte], charset: Charset, bom: Int,
       truncated: Boolean, cfg: ExtractConfig,

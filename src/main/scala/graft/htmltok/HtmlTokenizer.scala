@@ -126,7 +126,6 @@ object TokenFlags {
   */
 object Charsets {
   val Utf8: Charset = StandardCharsets.UTF_8
-  val Latin1: Charset = StandardCharsets.ISO_8859_1
 
   // cache: charset resolution + safety classification are hot (per document)
   private val resolveCache = new java.util.concurrent.ConcurrentHashMap[String, Charset]()

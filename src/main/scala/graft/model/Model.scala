@@ -13,9 +13,6 @@ import java.sql.Timestamp
   *                   (ppstructure/predict_system.py:236-252)
   *  - ExtractedDoc ≡ structure result: assembled markdown/text + typed regions
   *                   (ppstructure/recovery/recovery_to_markdown.py:129-187)
-  *  - PartitionLineage ≡ per-stage time_dict threaded through every call
-  *                   (tools/infer/predict_system.py:77), persisted per partition
-  *                   so failed partitions resume from checkpoint (north rule).
   */
 final case class PageRow(
     url: String,
@@ -53,23 +50,4 @@ final case class ExtractedDoc(
       * text is missing those pages) | "pdf_unparsed" (nothing decodable).
       * Decode loss is recorded, never silent. */
     status: String = "ok"
-)
-
-/** Per-partition lineage + metrics row (north-rule checkpoint/resume unit).
-  * Stage timings mirror the reference's time_dict keys
-  * (ppstructure/predict_system.py:99-109) recast for the HTML graft.
-  */
-final case class PartitionLineage(
-    partId: Int,
-    attempt: Int,
-    status: String, // "ok" | "failed"
-    docs: Long,
-    bytes: Long,
-    emptyDocs: Long,
-    truncatedDocs: Long,
-    tokenizeNanos: Long,
-    domNanos: Long,
-    classifyNanos: Long,
-    assembleNanos: Long,
-    totalNanos: Long
 )

@@ -43,7 +43,7 @@ object PdfBranch {
   final case class PBlock(x: Int, y: Int, w: Int, h: Int, text: String, off: Int, end: Int)
 
   /** Pages of one payload + parse status, shared by the single-pass extract
-    * and the per-page explode path (PdfPagedExtract) so both are structurally
+    * and the per-page explode path (ChunkedExtract) so both are structurally
     * identical. `pagesTruncated` = the maxPdfPages cap fired (≡ img[:page_num],
     * tools/infer/predict_system.py:221-224); `status` = "ok" | "pdf_partial"
     * (some content streams failed to decode — the extracted text is missing
@@ -82,18 +82,23 @@ object PdfBranch {
     val byteTruncated = payload.length > cfg.maxHtmlBytes
     val input = if (byteTruncated) java.util.Arrays.copyOf(payload, cfg.maxHtmlBytes) else payload
     val parsed = parsePayload(input, cfg)
-    val orderedPages = parsed.pages.map { case (w, blocks) => orderPage(w, blocks) }
-    val pageTexts = orderedPages.map(bs => bs.map(_.text).mkString("\n\n")).filter(_.nonEmpty)
-    val text = pageTexts.mkString("\n\n")
-    var idx = -1
-    val spans = orderedPages.zipWithIndex.flatMap { case (bs, p) =>
-      bs.map { b =>
-        idx += 1
-        Span(idx, s"pdf/page$p", b.off, b.end, "content", 1.0, b.text)
-      }
-    }
+    val pages = parsed.pages.zipWithIndex.map { case ((w, blocks), p) => extractPage(p, w, blocks) }
+    val text = pages.map(_._1).filter(_.nonEmpty).mkString("\n\n")
+    val spans = pages.flatMap(_._2).zipWithIndex.map { case (s, i) => s.copy(blockIdx = i) }
     ExtractedDoc(url, text, spans.length, spans, "utf-8",
       byteTruncated || parsed.pagesTruncated, parsed.status)
+  }
+
+  /** One page's reading order → (page text, spans with page-local blockIdx).
+    * The per-page step of both [[extract]] and the page explode in
+    * ChunkedExtract, so the two cannot drift; callers renumber blockIdx
+    * across pages and join non-empty page texts with "\n\n". */
+  def extractPage(pageIdx: Int, pageW: Int, blocks: Seq[PBlock]): (String, Vector[Span]) = {
+    val ordered = orderPage(pageW, blocks.toVector)
+    (ordered.map(_.text).mkString("\n\n"),
+      ordered.zipWithIndex.map { case (b, i) =>
+        Span(i, s"pdf/page$pageIdx", b.off, b.end, "content", 1.0, b.text)
+      })
   }
 
   /** Parse into (pageWidth, blocks-in-payload-order) per page. Malformed lines

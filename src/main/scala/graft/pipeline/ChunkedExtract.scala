@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
 
 import graft.extract.{ExtractConfig, Extractor, ExtractorState, HtmlChunker}
@@ -9,15 +10,24 @@ import graft.htmltok.Charsets
 import graft.model.{ExtractedDoc, PageRow, Span}
 import graft.pdf.PdfBranch
 
-/** Chunked extraction for mega HTML documents: plan safe split points
-  * (HtmlChunker), extract each fragment independently, merge seam-exactly —
-  * letting one 100 MB page fan out across tasks instead of straggling one.
+/** Chunked extraction for mega documents — one explode → extract → merge
+  * driver for both payload types, letting one 100 MB page or 10k-page PDF
+  * fan out across tasks instead of straggling one:
+  *  - HTML: plan safe split points (HtmlChunker) and extract each fragment
+  *    independently — the reference's slice → offset-rebase → merge path
+  *    (tools/infer/predict_system.py:86-107);
+  *  - PDF: parse once, explode one row per page carrying its typed blocks,
+  *    and lay each page out independently (`PdfBranch.extractPage`, the
+  *    single pass's own per-page step) — the reference's PDF page explode →
+  *    page concat (ppocr/utils/utility.py:119-152,
+  *    ppstructure/predict_system.py:343-388).
   *
-  * Merge contract (proven byte-identical to the single-pass kernel in
-  * ChunkedExtractSpec): chunk texts join with "\n\n" (empty chunks skipped,
-  * exactly the single-pass group separator), span blockIdx renumbers
-  * cumulatively, and span byte offsets rebase by (chunkStart − prefixLen) —
-  * the slice-offset rebase of SURVEY.md §2.3.
+  * Merge contract (proven identical to `Extractor.extract` — text and spans —
+  * in ChunkedExtractSpec and PdfPagedSpec): chunk texts join with "\n\n"
+  * (empty chunks skipped, exactly the single-pass group / page separator),
+  * span blockIdx renumbers cumulatively, and span byte offsets rebase by
+  * (chunkStart − prefixLen) — the slice-offset rebase of SURVEY.md §2.3
+  * (zero for PDF pages, whose spans already carry payload offsets).
   *
   * `maxBlocksPerDoc` is enforced GLOBALLY at merge (r2 ADVICE): fragments
   * extract UNCAPPED (their output is intrinsically bounded by fragment
@@ -34,13 +44,18 @@ object ChunkedExtract {
   final case class ChunkRow(
       rowUid: Long, // per-input-row identity (crawl data can repeat urls)
       url: String,
-      chunkIdx: Int, // -1 = whole-doc passthrough (small docs, PDFs)
+      chunkIdx: Int, // -1 = whole-doc passthrough, else fragment / page index
       chunkStart: Int,
       prefixLen: Int,
-      payload: Array[Byte],
+      payload: Array[Byte], // null on a PDF page row
       charsetName: String,
       bom: Int,
-      truncated: Boolean)
+      truncated: Boolean,
+      page: Option[PdfPage] = None)
+
+  /** One exploded PDF page: its parsed blocks, the page width, and the whole
+    * document's parse status. */
+  final case class PdfPage(width: Int, blocks: Seq[PdfBranch.PBlock], status: String)
 
   final case class ChunkResult(
       rowUid: Long,
@@ -53,29 +68,38 @@ object ChunkedExtract {
       charset: String,
       truncated: Boolean,
       status: String,
-      /** spans per assembly group, in order (empty for passthrough rows) —
-        * lets merge re-apply the block cap group-atomically. */
+      /** spans per assembly group, in order (empty for passthrough and PDF
+        * page rows) — lets merge re-apply the block cap group-atomically. */
       groupSizes: Seq[Int])
 
   /** Split one page into chunk rows (pass-through when chunking does not
-    * apply). Charset is sniffed once on the (truncated) whole payload and
-    * inherited by every fragment. */
+    * apply). HTML: charset is sniffed once on the (truncated) whole payload
+    * and inherited by every fragment. PDF: the (truncated) payload is parsed
+    * once and each page becomes a row; fewer than two pages — unparsable
+    * included — pass through whole, so the document cannot vanish. */
   def chunkRows(p: PageRow, cfg: ExtractConfig, chunkThreshold: Int,
                 minChunkBytes: Int, rowUid: Long = 0L): Seq[ChunkRow] = {
     val html = p.html
-    if (html == null || html.length < chunkThreshold || PdfBranch.isPdf(html))
-      return Seq(ChunkRow(rowUid, p.url, -1, 0, 0, html, "", 0, truncated = false))
+    val passthrough = Seq(ChunkRow(rowUid, p.url, -1, 0, 0, html, "", 0, truncated = false))
+    if (html == null || html.length < chunkThreshold) return passthrough
     val truncated = html.length > cfg.maxHtmlBytes
     val input = if (truncated) java.util.Arrays.copyOf(html, cfg.maxHtmlBytes) else html
+    if (PdfBranch.isPdf(html)) {
+      val parsed = PdfBranch.parsePayload(input, cfg)
+      if (parsed.pages.length < 2) return passthrough
+      return parsed.pages.zipWithIndex.map { case ((w, blocks), idx) =>
+        ChunkRow(rowUid, p.url, idx, 0, 0, null, "", 0,
+          truncated || parsed.pagesTruncated, Some(PdfPage(w, blocks, parsed.status)))
+      }
+    }
     val (charset, bom) = Charsets.sniff(input)
     // utf-16/32 etc: byte-splitting is unsound; ditto CDATA in a non-UTF-8
     // multi-byte charset (']' trail-byte hazard — same gate as Extractor)
     if (!Charsets.rawByteSafe(charset) ||
         (Charsets.rawByteHazardCdata(charset) && Charsets.containsCdata(input)))
-      return Seq(ChunkRow(rowUid, p.url, -1, 0, 0, html, "", 0, truncated = false))
+      return passthrough
     val chunks = HtmlChunker.plan(input, minChunkBytes)
-    if (chunks.length == 1)
-      return Seq(ChunkRow(rowUid, p.url, -1, 0, 0, html, "", 0, truncated = false))
+    if (chunks.length == 1) return passthrough
     chunks.zipWithIndex.map { case (c, idx) =>
       val prefix = c.prefix.getBytes(StandardCharsets.US_ASCII)
       val payload = new Array[Byte](prefix.length + (c.end - c.start))
@@ -86,31 +110,36 @@ object ChunkedExtract {
     }
   }
 
-  /** Extract one chunk row (fragment or passthrough). */
-  def extractChunk(r: ChunkRow, cfg: ExtractConfig, state: ExtractorState): ChunkResult = {
-    if (r.chunkIdx < 0) {
-      val doc = Extractor.extract(r.url, r.payload, cfg, state)
-      ChunkResult(r.rowUid, r.url, r.chunkIdx, r.chunkStart, r.prefixLen, doc.text,
-        doc.spans, doc.charset, doc.truncated, doc.status, Nil)
-    } else {
-      // fragments extract UNCAPPED: a per-fragment block cap would REMOVE the
-      // very group on which the single-pass global walk stops, and the merge
-      // walk (seeing only the survivors) would then keep later groups the
-      // single pass never reaches (r3 review, confirmed divergence). The
-      // global cap is merge's job alone; per-task output stays intrinsically
-      // bounded by O(fragment bytes).
-      val uncapped = cfg.copy(maxBlocksPerDoc = Int.MaxValue)
-      val (doc, sizes) = Extractor.extractHtmlGrouped(r.url, r.payload,
-        Charsets.resolve(r.charsetName), r.bom, r.truncated, uncapped, state)
-      ChunkResult(r.rowUid, r.url, r.chunkIdx, r.chunkStart, r.prefixLen, doc.text,
-        doc.spans, doc.charset, doc.truncated, doc.status, sizes)
+  /** Extract one chunk row (passthrough, PDF page or HTML fragment). */
+  def extractChunk(r: ChunkRow, cfg: ExtractConfig, state: ExtractorState): ChunkResult =
+    r.page match {
+      case Some(pg) =>
+        val (text, spans) = PdfBranch.extractPage(r.chunkIdx, pg.width, pg.blocks)
+        ChunkResult(r.rowUid, r.url, r.chunkIdx, 0, 0, text, spans, "utf-8",
+          r.truncated, pg.status, Nil)
+      case None if r.chunkIdx < 0 =>
+        val doc = Extractor.extract(r.url, r.payload, cfg, state)
+        ChunkResult(r.rowUid, r.url, r.chunkIdx, r.chunkStart, r.prefixLen, doc.text,
+          doc.spans, doc.charset, doc.truncated, doc.status, Nil)
+      case None =>
+        // fragments extract UNCAPPED: a per-fragment block cap would REMOVE
+        // the very group on which the single-pass global walk stops, and the
+        // merge walk (seeing only the survivors) would then keep later groups
+        // the single pass never reaches (r3 review, confirmed divergence).
+        // The global cap is merge's job alone; per-task output stays
+        // intrinsically bounded by O(fragment bytes).
+        val uncapped = cfg.copy(maxBlocksPerDoc = Int.MaxValue)
+        val (doc, sizes) = Extractor.extractHtmlGrouped(r.url, r.payload,
+          Charsets.resolve(r.charsetName), r.bom, r.truncated, uncapped, state)
+        ChunkResult(r.rowUid, r.url, r.chunkIdx, r.chunkStart, r.prefixLen, doc.text,
+          doc.spans, doc.charset, doc.truncated, doc.status, sizes)
     }
-  }
 
   /** Merge a document's chunk results (sorted by chunkIdx) seam-exactly,
     * re-applying the GLOBAL block cap group-atomically (the same
     * `capGroupCount` walk the single-pass kernel runs — lockstep through
-    * the cap). */
+    * the cap). PDF pages ship no group sizes, so the cap walk never fires
+    * on them — the single pass never caps a PDF either. */
   def merge(url: String, results: Seq[ChunkResult],
             cfg: ExtractConfig = ExtractConfig()): ExtractedDoc = {
     val sorted = results.sortBy(_.chunkIdx)
@@ -122,7 +151,6 @@ object ChunkedExtract {
     val allSizes: IndexedSeq[Int] = sorted.flatMap(_.groupSizes).toIndexedSeq
     val nGroups = Extractor.capGroupCount(allSizes, cfg.maxBlocksPerDoc)
     val capped = nGroups < allSizes.length
-    val nSpans = if (capped) allSizes.take(nGroups).sum else allSizes.sum
 
     val text =
       if (!capped) sorted.map(_.text).filter(_.nonEmpty).mkString("\n\n")
@@ -144,7 +172,7 @@ object ChunkedExtract {
       }
 
     var idx = 0
-    val spans = sorted.flatMap { r =>
+    val all = sorted.flatMap { r =>
       r.spans.map { s =>
         val rebased = Span(idx, s.tagPath,
           s.start - r.prefixLen + r.chunkStart,
@@ -153,9 +181,10 @@ object ChunkedExtract {
         idx += 1
         rebased
       }
-    }.take(nSpans)
+    }
+    val spans = if (capped) all.take(allSizes.take(nGroups).sum) else all
     ExtractedDoc(url, text, spans.length, spans,
-      sorted.head.charset, sorted.head.truncated)
+      sorted.head.charset, sorted.head.truncated, sorted.head.status)
   }
 
   /** Pure single-JVM path (used by the equivalence spec and small jobs). */
@@ -182,9 +211,15 @@ object ChunkedExtract {
     // loop to maintain, not two copies that can drift)
     val small = Extract.run(
       pages.filter(p => p.html == null || p.html.length < chunkThreshold), cfg)
-    val big = RowIds.keyed(
-        pages.filter(p => p.html != null && p.html.length >= chunkThreshold))
-      .flatMap { case (uid, p) => chunkRows(p, cfg, chunkThreshold, minChunkBytes, uid) }
+    val big = pages.filter(p => p.html != null && p.html.length >= chunkThreshold)
+      .mapPartitions { it =>
+        // row uid: partition id in the high bits, in-partition index in the
+        // low 36 — deterministic given the input partitioning
+        val pid = TaskContext.getPartitionId().toLong
+        it.zipWithIndex.flatMap { case (p, i) =>
+          chunkRows(p, cfg, chunkThreshold, minChunkBytes, pid << 36 | i.toLong)
+        }
+      }
       .repartition(spark.sparkContext.defaultParallelism * 2) // spread mega-doc chunks
       .mapPartitions { it =>
         val state = new ExtractorState()

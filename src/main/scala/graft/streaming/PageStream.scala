@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
-import graft.extract.{ExtractConfig, Extractor, ExtractorState}
+import graft.extract.ExtractConfig
 import graft.model.PageRow
+import graft.pipeline.Extract
 
 /** Streaming EXTRACTION: the same pure per-row kernel runs unchanged over a
   * file stream of page batches — the incremental-crawl-ingest shape
@@ -26,19 +28,14 @@ object PageStream {
     StreamHarness.runDrained(spark, "graft_page_stream", "append") { staging =>
       pages.repartition(4).write.mode("overwrite").parquet(staging)
     } { staging =>
-      spark.readStream
+      val stream = spark.readStream
         .schema(pages.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staging)
         .as[PageRow]
-        .mapPartitions { it =>
-          val state = new ExtractorState()
-          it.map { p =>
-            val d = Extractor.extract(p.url, p.html, cfg, state)
-            (d.url, d.text, d.nSpans, d.charset, d.status)
-          }
-        }
-        .toDF("url", "text", "n_spans", "charset", "status")
+      Extract.run(stream, cfg).toDF()
+        .select(col("url"), col("text"), col("nSpans").as("n_spans"), col("charset"),
+          col("status"))
     }.orderBy("url")
   }
 }
