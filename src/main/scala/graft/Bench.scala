@@ -186,13 +186,18 @@ object Bench {
     // scan (observed: a row-local signature query "took" 0.24s by computing
     // nothing). The noop writer consumes full rows.
     val spark = session(cpus)
+    // each query runs in a job group named after it, so listener metrics
+    // (shuffle, spill, task skew) attach to the query
+    val sc = spark.sparkContext
     val results = SparkEntry.registry.filter(_.benched).sortBy(_.name).map { q =>
+      sc.setJobGroup(q.name, s"bench ${q.name}")
       val t0 = System.nanoTime()
       val ok = try {
         q.run(spark, sfDir).write.mode("overwrite").format("noop").save(); true
       } catch {
-        case e: Throwable => System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false
-      }
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${Verify.failure(e)}"); false
+      } finally sc.clearJobGroup()
       q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }

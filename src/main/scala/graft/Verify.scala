@@ -4,6 +4,11 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A failure line: exception class, message and the frame that threw. */
+  def failure(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}" +
+      e.getStackTrace.headOption.fold("")(f => s" (at $f)")
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [namePrefix] — the optional prefix restricts the
     // dump to matching queries (local iteration; the driver passes two args)
@@ -22,7 +27,7 @@ object Verify {
       val dest = s"$outDir/$name"
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dest)
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${failure(e)}")
         // a failed query must FAIL the compare, not silently pass against a
         // previous run's stale parquet left in a reused out dir
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dest))

@@ -1,14 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.extract.{ExtractConfig, Extractor, ExtractorState}
 import graft.model.{PageRow, Span}
 
-/** One extracted-output row as persisted (per-doc stage nanos ride along so the
-  * per-partition lineage can be re-aggregated from *committed* data, never from
-  * in-flight state — the write IS the checkpoint).
+/** One extracted-output row as persisted. Per-doc stage nanos ride along, so
+  * every lineage column can be recomputed from *committed* data: the lineage
+  * a run appends equals a groupBy(bucket) over the rows it wrote (LineageSpec).
   */
 final case class ExtractedRow(
     bucket: Int,
@@ -52,9 +54,11 @@ final case class PipelineConf(
   *    overwrite → per-bucket idempotent commits (Iceberg-style overwrite-by-
   *    partition without needing the Iceberg runtime in this sandbox);
   *  - lineage rows (status, doc/byte counts, per-stage nanos ≡ the reference's
-  *    time_dict, tools/infer/predict_system.py:77) are aggregated from the
-  *    *written* files and appended to a lineage table — a bucket is "ok" iff
-  *    its data is committed;
+  *    time_dict, tools/infer/predict_system.py:77) are folded inside the write
+  *    pass: each write task counts the rows it writes per bucket, and the
+  *    driver merges the partials of the committed attempts once the write job
+  *    returns, then appends them to a lineage table — a bucket is "ok" iff its
+  *    data is committed, and the output is never read back;
   *  - resume = re-run with `resume = true`: buckets already "ok" in lineage are
   *    filtered out of the input before the shuffle, everything else reruns;
   *    dynamic overwrite makes reruns of half-written buckets safe.
@@ -127,10 +131,12 @@ object ExtractPipeline {
     }
 
     val totalParts = conf.numBuckets + conf.megaBuckets
-    // set-of-buckets actually processed in THIS run (task retries may re-add —
-    // harmless for a set); lineage must not re-mark stale buckets left in the
-    // output dir by earlier runs with different inputs/configs
-    val seenBuckets = spark.sparkContext.collectionAccumulator[Int]("bucketsWritten")
+    // lineage partials of THIS run, one (partition id, bucket -> counts) set
+    // per write task; stale buckets left in the output dir by earlier runs
+    // never appear. Spark merges a result task's update once, and only from
+    // the attempt that succeeded (failed or killed attempts' updates drop).
+    val partials = spark.sparkContext
+      .collectionAccumulator[(Int, Map[Int, Array[Long]])]("lineagePartials")
     val extracted = remaining
       .repartition(totalParts, col("bucket"))
       // size-ordered processing within each partition (SURVEY.md §4.3, the
@@ -141,17 +147,23 @@ object ExtractPipeline {
       .as[(Int, PageRow)]
       .mapPartitions { it =>
         val state = new ExtractorState()
-        val localSeen = new java.util.HashSet[Int]()
-        it.map { case (bucket, p) =>
-          if (localSeen.add(bucket)) seenBuckets.add(bucket)
+        val byBucket = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+        val rows = it.map { case (bucket, p) =>
           val t0 = state.tokenizeNanos; val d0 = state.domNanos
           val c0 = state.classifyNanos; val a0 = state.assembleNanos
           val doc = Extractor.extract(p.url, p.html, conf.extract, state)
-          ExtractedRow(bucket, doc.url, doc.text, doc.nSpans, doc.spans,
+          val row = ExtractedRow(bucket, doc.url, doc.text, doc.nSpans, doc.spans,
             doc.charset, doc.truncated, doc.status,
             if (p.html == null) 0L else p.html.length.toLong,
             state.tokenizeNanos - t0, state.domNanos - d0,
             state.classifyNanos - c0, state.assembleNanos - a0)
+          fold(byBucket.getOrElseUpdate(bucket, new Array[Long](countCols.length)), row)
+          row
+        }
+        // `++` evaluates its argument once the writer has drained `rows`
+        rows ++ {
+          if (byBucket.nonEmpty) partials.add((TaskContext.getPartitionId(), byBucket.toMap))
+          Iterator.empty
         }
       }
 
@@ -160,31 +172,41 @@ object ExtractPipeline {
       .mode(SaveMode.Overwrite)
       .parquet(dataDir(outDir))
 
-    // Lineage from committed data only: re-read exactly the buckets this run
-    // wrote (never stale buckets left in the dir by earlier runs).
+    // The write job has committed. Keep one partial set per partition id (a
+    // re-run attempt replaces its earlier set, never adds to it) and merge
+    // the sets by bucket.
     import scala.jdk.CollectionConverters._
-    val written = seenBuckets.value.asScala.toSet
-    if (written.isEmpty) return 0L
-    val touched = spark.read.parquet(dataDir(outDir))
-      .filter(col("bucket").isin(written.toSeq: _*))
-    val lineage = touched.groupBy(col("bucket")).agg(
-      lit("ok").as("status"),
-      lit(attempt).as("attempt"),
-      count(lit(1)).as("docs"),
-      sum(col("htmlBytes")).as("bytes"),
-      sum(when(length(col("text")) === 0, 1L).otherwise(0L)).as("emptyDocs"),
-      sum(when(col("truncated"), 1L).otherwise(0L)).as("truncatedDocs"),
-      sum(when(col("docStatus") =!= "ok", 1L).otherwise(0L)).as("unparsedDocs"),
-      sum(col("tokenizeNanos")).as("tokenizeNanos"),
-      sum(col("domNanos")).as("domNanos"),
-      sum(col("classifyNanos")).as("classifyNanos"),
-      sum(col("assembleNanos")).as("assembleNanos")
-    )
-    // no pre-count: written.nonEmpty already guarantees rows (each written
-    // bucket committed ≥1 row), and a count() here re-ran the whole lineage
-    // aggregation as a second job before the write
-    lineage.write.mode(SaveMode.Append).parquet(lineageDir(outDir))
-    written.size.toLong
+    val counts = partials.value.asScala.toMap.values.flatten
+      .groupMapReduce(_._1)(_._2)((a, b) => Array.tabulate(a.length)(i => a(i) + b(i)))
+    if (counts.isEmpty) return 0L
+    val rows = counts.toSeq.sortBy(_._1).map { case (bucket, c) =>
+      Row.fromSeq(Seq(bucket, "ok", attempt) ++ c)
+    }
+    spark.createDataFrame(rows.asJava, lineageSchema).coalesce(1)
+      .write.mode(SaveMode.Append).parquet(lineageDir(outDir))
+    counts.size.toLong
+  }
+
+  /** Lineage count columns, in table order, after bucket, status and attempt. */
+  private val countCols = Seq("docs", "bytes", "emptyDocs", "truncatedDocs",
+    "unparsedDocs", "tokenizeNanos", "domNanos", "classifyNanos", "assembleNanos")
+
+  private val lineageSchema = StructType(
+    Seq(StructField("bucket", IntegerType), StructField("status", StringType),
+      StructField("attempt", IntegerType)) ++
+    countCols.map(StructField(_, LongType)))
+
+  /** Adds one written row to its bucket's counts (`countCols` order). */
+  private def fold(c: Array[Long], r: ExtractedRow): Unit = {
+    c(0) += 1
+    c(1) += r.htmlBytes
+    if (r.text != null && r.text.isEmpty) c(2) += 1
+    if (r.truncated) c(3) += 1
+    if (r.docStatus != null && r.docStatus != "ok") c(4) += 1
+    c(5) += r.tokenizeNanos
+    c(6) += r.domNanos
+    c(7) += r.classifyNanos
+    c(8) += r.assembleNanos
   }
 
   /** The final extracted table (all committed buckets). */

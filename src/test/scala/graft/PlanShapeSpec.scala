@@ -70,6 +70,54 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("(bucket"), plan)
   }
 
+  test("ExtractPipeline.run executes no query that scans its own output data") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.{ExtractPipeline, PipelineConf}
+    val out = java.nio.file.Files.createTempDirectory("graft-noreread").toFile.getAbsolutePath
+    def canonical(p: String) = new java.io.File(p).getCanonicalPath
+    val marker = "plan_guard_marker"
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var markerSeen = false
+    def record(qe: QueryExecution): Unit = {
+      val plan = qe.analyzed
+      if (plan.output.exists(_.name == marker)) markerSeen = true
+      plan.foreach {
+        case r: LogicalRelation => r.relation match {
+          case h: HadoopFsRelation =>
+            h.location.rootPaths.foreach(p => scanned.add(canonical(p.toUri.getPath)))
+          case _ =>
+        }
+        case _ =>
+      }
+    }
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    val conf = PipelineConf(numBuckets = 8, megaBuckets = 1)
+    val pages = CorpusSource.pages(spark, 56)
+    spark.listenerManager.register(listener)
+    try {
+      ExtractPipeline.run(spark, pages, out, conf, onlyBuckets = Some((0 until 4).toSet))
+      ExtractPipeline.run(spark, pages, out, conf, resume = true, attempt = 1)
+      // listener events arrive in order: once the marker query is seen, every
+      // query the two runs executed has been recorded
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(markerSeen, "the query listener never saw the marker query")
+    import scala.jdk.CollectionConverters._
+    val paths = scanned.asScala.toSeq
+    // the resume run reads the lineage table, so the listener does see the
+    // pipeline's own queries
+    assert(paths.contains(canonical(ExtractPipeline.lineageDir(out))), paths)
+    val data = canonical(ExtractPipeline.dataDir(out))
+    assert(!paths.exists(p => p == data || p.startsWith(data + "/")), paths)
+  }
+
   test("x16: warc_ts date partitions prune on dt (PartitionFilters, not post-scan)") {
     import org.apache.spark.sql.functions.{col, lit, to_date}
     val out = java.nio.file.Files.createTempDirectory("graft-dtprune").toFile.getAbsolutePath

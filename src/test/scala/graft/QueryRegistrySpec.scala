@@ -25,4 +25,11 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(names.toSet))
     assert(SparkEntry.registry.filterNot(_.benched).map(_.name) == Seq("s01_stream_window"))
   }
+
+  test("a failed query reports its exception class and the frame that threw") {
+    val e = try { Option.empty[Int].get; null } catch { case t: Throwable => t }
+    val line = Verify.failure(e)
+    assert(line.startsWith("java.util.NoSuchElementException: None.get (at "), line)
+    assert(line.contains("scala.None$.get("), line)
+  }
 }
