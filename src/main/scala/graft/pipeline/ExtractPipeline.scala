@@ -30,7 +30,9 @@ final case class ExtractedRow(
 
 /** Pipeline config (bucket counts sized for the sandbox; at cluster scale
   * `numBuckets` would be O(10^5) for a 10^12-row table — the mechanism is
-  * identical because buckets, not Spark partitions, are the checkpoint unit).
+  * identical because buckets, not Spark partitions or tasks, are the
+  * checkpoint unit: a write task may hold several normal buckets, but every
+  * bucket is written by exactly one task, see `taskOf`).
   */
 final case class PipelineConf(
     numBuckets: Int = 64,
@@ -48,8 +50,11 @@ final case class PipelineConf(
   *  - every page gets a deterministic bucket = f(url, |html|): murmur3(url) mod
   *    numBuckets for normal pages, a dedicated mega-bucket range for outliers
   *    (size-balanced salting: the explicit skew handling of SURVEY.md §4.4);
-  *  - extraction runs as one narrow mapPartitions after a single repartition
-  *    on bucket (the only shuffle in the job);
+  *  - extraction runs as one narrow mapPartitions after a single
+  *    `repartitionById` on the bucket's write task (the only shuffle in the
+  *    job): each mega bucket has a task of its own, scheduled first, and the
+  *    normal buckets share as many tasks as the input's bytes need
+  *    (`taskCount`, `taskOf`) — tasks are sized by cost, not by key count;
   *  - output is written parquet partitioned BY bucket with dynamic partition
   *    overwrite → per-bucket idempotent commits (Iceberg-style overwrite-by-
   *    partition without needing the Iceberg runtime in this sandbox);
@@ -71,6 +76,26 @@ object ExtractPipeline {
       conf.numBuckets + Math.floorMod(h, conf.megaBuckets)
     else Math.floorMod(h, conf.numBuckets)
   }
+
+  /** Write tasks of a run over `pages`: one per mega bucket, plus P shared by
+    * the normal buckets, P = max(defaultParallelism, ⌈plan size estimate ÷
+    * spark.sql.files.maxPartitionBytes⌉) clamped to [1, numBuckets]. A large
+    * input, or one of unknown size (Spark's default estimate is huge), gets
+    * P = numBuckets: one bucket per task. */
+  def taskCount(spark: SparkSession, pages: Dataset[_], conf: PipelineConf): Int = {
+    val estimate = pages.queryExecution.optimizedPlan.stats.sizeInBytes
+    val maxBytes = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    val bySize = (estimate + maxBytes - 1) / maxBytes
+    conf.megaBuckets +
+      bySize.max(spark.sparkContext.defaultParallelism).min(conf.numBuckets).max(1).toInt
+  }
+
+  /** The write task of `bucket` among `nTasks` (`taskCount`): mega bucket
+    * numBuckets + m goes to task m, normal bucket b to task
+    * megaBuckets + b mod (nTasks - megaBuckets). */
+  def taskOf(bucket: Int, conf: PipelineConf, nTasks: Int): Int =
+    if (bucket >= conf.numBuckets) bucket - conf.numBuckets
+    else conf.megaBuckets + bucket % (nTasks - conf.megaBuckets)
 
   def lineageDir(outDir: String): String = s"$outDir/_lineage"
   def dataDir(outDir: String): String = s"$outDir/data"
@@ -117,10 +142,12 @@ object ExtractPipeline {
 
     val done: Set[Int] = if (resume) completedBuckets(spark, outDir) else Set.empty
 
+    val nTasks = taskCount(spark, pages, conf)
     val bucketed = pages.map { p =>
       val len = if (p.html == null) 0 else p.html.length
-      (bucketOf(p.url, len, conf), p)
-    }.toDF("bucket", "page")
+      val bucket = bucketOf(p.url, len, conf)
+      (bucket, taskOf(bucket, conf, nTasks), p)
+    }.toDF("bucket", "task", "page")
 
     val remaining0 =
       if (done.isEmpty) bucketed
@@ -130,7 +157,6 @@ object ExtractPipeline {
       case None     => remaining0
     }
 
-    val totalParts = conf.numBuckets + conf.megaBuckets
     // lineage partials of THIS run, one (partition id, bucket -> counts) set
     // per write task; stale buckets left in the output dir by earlier runs
     // never appear. Spark merges a result task's update once, and only from
@@ -138,7 +164,8 @@ object ExtractPipeline {
     val partials = spark.sparkContext
       .collectionAccumulator[(Int, Map[Int, Array[Long]])]("lineagePartials")
     val extracted = remaining
-      .repartition(totalParts, col("bucket"))
+      .repartitionById(nTasks, col("task"))
+      .drop("task")
       // size-ordered processing within each partition (SURVEY.md §4.3, the
       // reference's sort-crops-by-aspect-ratio idea): arena buffers grow
       // monotonically instead of oscillating, and the large stragglers of a

@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import org.apache.spark.TaskKilled
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -93,7 +92,6 @@ class LineageSpec extends AnyFunSuite {
 
   test("a killed write-task attempt reruns, and lineage counts each committed row once") {
     val conf = PipelineConf(numBuckets = 8, megaBuckets = 1)
-    val totalParts = conf.numBuckets + conf.megaBuckets
     // three mega documents share the single mega bucket, so one write task
     // spends long enough extracting them for the kill to land mid-task
     val paragraphs = (0 until 18000)
@@ -106,20 +104,24 @@ class LineageSpec extends AnyFunSuite {
     }
     assert(mega.forall(_.html.length >= conf.megaBytes))
     val megaBucket = conf.numBuckets
-    // the bucket shuffle's own partitioning expression: the task that owns it
-    val megaTask = Pmod(new Murmur3Hash(Seq(Literal(megaBucket))), Literal(totalParts))
-      .eval().asInstanceOf[Int]
     import spark.implicits._
     val pages = CorpusSource.pages(spark, 56, partitions = 2).union(mega.toDS())
+    // the pipeline's own layout: the write stage's task count and the task
+    // that owns the mega bucket
+    val nTasks = ExtractPipeline.taskCount(spark, pages, conf)
+    val megaTask = ExtractPipeline.taskOf(megaBucket, conf, nTasks)
 
     val killed = new AtomicInteger()
     val sent = new AtomicBoolean(false)
     val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
+      // the write stage reads the shuffle, so it has a parent; the map stage
+      // over the input may have as many tasks but has none
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+        if (e.stageInfo.parentIds.nonEmpty)
+          stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
       override def onTaskStart(e: SparkListenerTaskStart): Unit =
-        if (stageTasks.get(e.stageId) == totalParts && e.taskInfo.index == megaTask &&
+        if (stageTasks.get(e.stageId) == nTasks && e.taskInfo.index == megaTask &&
             e.taskInfo.attemptNumber == 0 && sent.compareAndSet(false, true))
           spark.sparkContext.killTaskAttempt(e.taskInfo.taskId, interruptThread = false,
             "LineageSpec: kill the first attempt of a write task")
