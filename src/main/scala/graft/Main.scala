@@ -15,7 +15,7 @@ import graft.pipeline.{ExtractPipeline, PipelineConf}
   *   --in /data/pages_parquet --out /data/extracted \
   *   [--resume] [--buckets 4096] [--mega-buckets 64] [--mega-bytes 1048576] \
   *   [--max-html-bytes 8388608] [--max-blocks 10000] [--min-content-chars 10] \
-  *   [--drop-score 0.05] [--max-pdf-pages 10000] [--attempt 0]
+  *   [--drop-score 0.05] [--max-pdf-pages 10000]
   * }}}
   *
   * Input: parquet/Iceberg-layout table with the BASELINE.json `input_hint`
@@ -62,9 +62,7 @@ object Main {
 
     import spark.implicits._
     val pages = spark.read.parquet(in).as[PageRow]
-    val n = ExtractPipeline.run(spark, pages, out, conf,
-      resume = a.contains("resume"),
-      attempt = a.get("attempt").map(_.toInt).getOrElse(0))
+    val n = ExtractPipeline.run(spark, pages, out, conf, resume = a.contains("resume"))
     val docs = ExtractPipeline.output(spark, out).count()
     println(s"""{"buckets_processed":$n,"total_docs":$docs,"out":${JsonOut.jstr(out)}}""")
     (n, docs)

@@ -68,16 +68,6 @@ object SparkEntry {
     }.toDF("sitemap_url", "loc", "lastmod", "is_index", "allowed", "host")
   }
 
-  /** Flagship: full extraction pipeline over the synthesized golden corpus
-    * (tokenize → arena DOM → block features → rule cascade → ordered spans →
-    * assembled text). Driver smoke-checks rows > 0.
-    */
-  def entry(spark: SparkSession): DataFrame = {
-    Extract.run(CorpusSource.pages(spark, 280))
-      .toDF()
-      .select(col("url"), col("text"), col("nSpans"), col("charset"), col("truncated"))
-  }
-
   /** One named query: its Spark side, its DuckDB oracle (the SQL whose
     * result the Spark output must equal) when it has one, and whether
     * [[Bench]] times it. The name's first letter is its family (see the

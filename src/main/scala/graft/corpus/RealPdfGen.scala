@@ -50,27 +50,55 @@ object RealPdfGen {
   private def hex(s: String): String =
     s.getBytes(StandardCharsets.ISO_8859_1).map(b => f"${b & 0xff}%02X").mkString
 
-  /** Content stream for one page: one BT/ET per block, lines via Td steps.
-    * Baseline of a line at top-down y is (pageH - y - fontSize) in PDF
-    * bottom-up coordinates — the inverse of the extractor's flip, so the
-    * extractor's PBlock (x, y) reproduces (x, yTop) exactly. Even lines show
-    * as escaped literals, odd lines as hex strings inside TJ arrays — both
-    * writer forms stay golden-covered. */
-  private def contentFor(p: PageSpec): Array[Byte] = {
+  private def latin1(s: String): Array[Byte] = s.getBytes(StandardCharsets.ISO_8859_1)
+
+  /** MediaBox width and height of `p` stored with `/Rotate rot`: the axes
+    * swap for 90/270. */
+  private def stored(p: PageSpec, rot: Int): (Int, Int) =
+    if (rot == 90 || rot == 270) (p.h, p.w) else (p.w, p.h)
+
+  /** Content stream for one UPRIGHT page stored with `/Rotate rot` (0 = no
+    * rotation): one BT/ET per block, lines via Td steps. Even lines show as
+    * escaped literals, odd lines as hex strings inside TJ arrays — both
+    * writer forms stay golden-covered. The upright baseline of a line at
+    * top-down y is (pageH - y - fontSize) in PDF bottom-up coordinates — the
+    * inverse of the extractor's flip, so the extractor's PBlock (x, y)
+    * reproduces (x, yTop) exactly. Each baseline is emitted at the raw
+    * user-space position whose image under the viewer's clockwise rotation is
+    * that upright position, and per-line steps follow the rotated downward
+    * direction — so a conforming viewer (and the extractor's rotation
+    * normalization) sees the identical upright page. Inverse maps (stored
+    * page Ws×Hs, upright X,Y bottom-up): 90 → (Ws−Y, X); 180 → (Ws−X, Hs−Y);
+    * 270 → (Y, Hs−X). */
+  private def contentFor(p: PageSpec, rot: Int = 0): Array[Byte] = {
+    val (ws, hs) = stored(p, rot)
     val sb = new java.lang.StringBuilder()
     for (b <- p.blocks) {
       val leading = b.fontSize + 2
-      val y0 = p.h - b.yTop - b.fontSize
+      val yUp = p.h - b.yTop - b.fontSize // upright first-line baseline
+      val (x0, y0) = rot match {
+        case 90  => (ws - yUp, b.x)
+        case 180 => (ws - b.x, hs - yUp)
+        case 270 => (yUp, hs - b.x)
+        case _   => (b.x, yUp)
+      }
+      // upright downward step (0, -leading) in stored user space
+      val (dx, dy) = rot match {
+        case 90  => (leading, 0)
+        case 180 => (0, leading)
+        case 270 => (-leading, 0)
+        case _   => (0, -leading)
+      }
       sb.append("BT\n/F1 ").append(b.fontSize).append(" Tf\n")
-        .append(b.x).append(' ').append(y0).append(" Td\n")
+        .append(x0).append(' ').append(y0).append(" Td\n")
       for ((line, idx) <- b.lines.zipWithIndex) {
-        if (idx > 0) sb.append("0 -").append(leading).append(" Td\n")
+        if (idx > 0) sb.append(dx).append(' ').append(dy).append(" Td\n")
         if (idx % 2 == 0) sb.append('(').append(esc(line)).append(") Tj\n")
         else sb.append("[<").append(hex(line)).append(">] TJ\n")
       }
       sb.append("ET\n")
     }
-    sb.toString.getBytes(StandardCharsets.ISO_8859_1)
+    latin1(sb.toString)
   }
 
   /** PDF LZWDecode-compatible encoder (ISO 32000 §7.4.4 / TIFF LZW):
@@ -177,10 +205,103 @@ object RealPdfGen {
     out.toByteArray
   }
 
+  private def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+
+  private def be32(v: Long): Array[Byte] = Array(((v >> 24) & 0xff).toByte,
+    ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+
+  // ---- the object writer ---------------------------------------------------
+
+  /** One PDF file being written: `obj` and `stream` record each object's byte
+    * offset under its number, `content` writes a page's content stream, and
+    * `finish` closes the file with a classic xref table and trailer. */
+  private final class PdfWriter(version: String) {
+    private val out = new ByteArrayOutputStream(4096)
+    val offsets = scala.collection.mutable.HashMap.empty[Int, Int] // objnum → byte offset
+    put(s"%PDF-$version\n")
+
+    private def put(s: String): Unit = out.write(latin1(s))
+    def size: Int = out.size()
+
+    def obj(num: Int, body: String): Unit = {
+      offsets(num) = out.size()
+      put(s"$num 0 obj\n$body\nendobj\n")
+    }
+
+    /** Stream object `num` with dictionary `dict` (which carries /Length). */
+    def stream(num: Int, dict: String, data: Array[Byte]): Unit = {
+      offsets(num) = out.size()
+      put(s"$num 0 obj\n$dict\nstream\n")
+      out.write(data)
+      put("\nendstream\nendobj\n")
+    }
+
+    /** Page content stream `num`: raw, or compressed (Flate, LZW if `lzw`)
+      * when the page says `compress`. */
+    def content(num: Int, p: PageSpec, raw: Array[Byte], lzw: Boolean = false): Unit = {
+      val (data, filter) =
+        if (!p.compress) (raw, "")
+        else if (lzw) (lzwEncode(raw), " /Filter /LZWDecode")
+        else (deflate(raw), " /Filter /FlateDecode")
+      stream(num, s"<< /Length ${data.length}$filter >>", data)
+    }
+
+    def startxref(xrefOff: Int): Array[Byte] = {
+      put(s"startxref\n$xrefOff\n%%EOF\n")
+      out.toByteArray
+    }
+
+    /** Classic xref table over objects 1..n, which must all be written. */
+    def finish(): Array[Byte] = {
+      val xrefOff = out.size()
+      val total = offsets.size + 1
+      put(s"xref\n0 $total\n0000000000 65535 f \n")
+      for (num <- 1 until total) // Locale.ROOT: %d digits localize under e.g. ar locales
+        put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n",
+          Integer.valueOf(offsets(num))))
+      put(s"trailer\n<< /Size $total /Root 1 0 R >>\n")
+      startxref(xrefOff)
+    }
+  }
+
+  private val catalog = "<< /Type /Catalog /Pages 2 0 R >>"
+
+  private def pagesNode(kids: Seq[Int], extra: String = ""): String =
+    s"<< /Type /Pages /Kids [${kids.map(k => s"$k 0 R").mkString(" ")}] " +
+      s"/Count ${kids.length}$extra >>"
+
+  /** Page dict; `rotate` is empty or a `/Rotate … ` entry. */
+  private def pageDict(w: Int, h: Int, contNum: Int, resources: String,
+                       rotate: String = ""): String =
+    s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 $w $h] $rotate" +
+      s"/Contents $contNum 0 R /Resources << $resources >> >>"
+
+  private val helvetica = "/F1 << /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+  /** The classic layout: 1 = catalog, 2 = pages (with `pagesExtra`), 3+2i =
+    * page i with `resources`, 4+2i = its content stream `content(page)`;
+    * `tail` writes the objects from 3+2n. `rot` stores every page rotated
+    * (MediaBox axes swapped for 90/270) and `rotate` is its page dict entry. */
+  private def classic(pages: Seq[PageSpec], resources: String,
+                      content: PageSpec => Array[Byte] = contentFor(_), lzw: Boolean = false,
+                      rot: Int = 0, rotate: String = "", pagesExtra: String = "")
+                     (tail: PdfWriter => Unit = _ => ()): Array[Byte] = {
+    val w = new PdfWriter("1.4")
+    w.obj(1, catalog)
+    w.obj(2, pagesNode(pages.indices.map(3 + 2 * _), pagesExtra))
+    for ((p, i) <- pages.zipWithIndex) {
+      val (ws, hs) = stored(p, rot)
+      w.obj(3 + 2 * i, pageDict(ws, hs, 4 + 2 * i, resources, rotate))
+      w.content(4 + 2 * i, p, content(p), lzw)
+    }
+    tail(w)
+    w.finish()
+  }
+
   /** PDF 1.5 layout: catalog, pages-tree, and page dicts live inside a
     * compressed `/Type /ObjStm` object stream (ISO 32000 §7.5.7), content
     * streams stay top-level, and the cross-reference is an xref STREAM
-    * (`/Type /XRef`, `/W [1 2 2]`) — the modern writer shape whose page
+    * (`/Type /XRef`, `/W [1 4 2]`) — the modern writer shape whose page
     * dicts a plain `N G obj` scan cannot see. Object layout: 3+2i = page i,
     * 4+2i = content i (top level), S = the ObjStm (holding 1, 2, pages),
     * S+1 = the xref stream. */
@@ -202,8 +323,6 @@ object RealPdfGen {
 
   private def buildObjStm(pages: Seq[PageSpec], predict: Boolean,
                           rotate: Int = 0): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
     val n = pages.length
     val stmNum = 3 + 2 * n
     val xrefNum = stmNum + 1
@@ -211,52 +330,34 @@ object RealPdfGen {
     // bodies of the compressed objects (1 = catalog, 2 = pages, 3+2i = pages,
     // optionally stmNum+2 = the bare rotate integer)
     val rotNum = stmNum + 2
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
     val rotEntry = if (rotate != 0) s"/Rotate $rotNum 0 R " else ""
     val contained: Seq[(Int, String)] =
-      ((1, "<< /Type /Catalog /Pages 2 0 R >>") +:
-      (2, s"<< /Type /Pages /Kids [$kids] /Count $n >>") +:
+      ((1, catalog) +: (2, pagesNode(pages.indices.map(3 + 2 * _))) +:
       pages.zipWithIndex.map { case (p, i) =>
-        (3 + 2 * i,
-          s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-          rotEntry +
-          s"/Contents ${4 + 2 * i} 0 R /Resources << /Font << /F1 << /Type /Font " +
-          "/Subtype /Type1 /BaseFont /Helvetica >> >> >> >>")
+        (3 + 2 * i, pageDict(p.w, p.h, 4 + 2 * i, s"/Font << $helvetica >>", rotEntry))
       }) ++ (if (rotate != 0) Seq((rotNum, s"$rotate")) else Seq.empty)
     val bodies = contained.map(_._2 + "\n")
     val offs = bodies.scanLeft(0)(_ + _.length).init
     val header = contained.zip(offs).map { case ((num, _), o) => s"$num $o" }
       .mkString(" ") + "\n"
-    val stmPlain = (header + bodies.mkString).getBytes(StandardCharsets.ISO_8859_1)
+    val stmPlain = latin1(header + bodies.mkString)
     val stmData =
       if (predict) deflate(pngUpPredict(stmPlain, 24)) else deflate(stmPlain)
     val parms = if (predict) " /DecodeParms << /Predictor 12 /Columns 24 >>" else ""
 
-    val offsets = scala.collection.mutable.HashMap.empty[Int, Int] // objnum → byte offset
-    put("%PDF-1.5\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val contNum = 4 + 2 * i
-      offsets(contNum) = out.size()
-      val raw = contentFor(p)
-      val (data, filter) =
-        if (p.compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      put(s"$contNum 0 obj\n<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
-    }
-    offsets(stmNum) = out.size()
-    put(s"$stmNum 0 obj\n<< /Type /ObjStm /N ${contained.length} " +
-      s"/First ${header.length} /Length ${stmData.length} /Filter /FlateDecode$parms >>\nstream\n")
-    out.write(stmData)
-    put("\nendstream\nendobj\n")
+    val w = new PdfWriter("1.5")
+    for ((p, i) <- pages.zipWithIndex) w.content(4 + 2 * i, p, contentFor(p))
+    w.stream(stmNum, s"<< /Type /ObjStm /N ${contained.length} " +
+      s"/First ${header.length} /Length ${stmData.length} /Filter /FlateDecode$parms >>",
+      stmData)
 
     // xref stream: W [1 4 2]; type 0 = free, 1 = at offset, 2 = in ObjStm.
     // The offset field is 4 bytes: a 2-byte field silently stores
     // offset mod 65536 for any object past byte 65535 — invisible to the
     // repo's own linear-scan parser but wrong for the conforming viewer
     // this fixture is meant to model
-    val xrefOff = out.size()
-    offsets(xrefNum) = xrefOff
+    val xrefOff = w.size
+    w.offsets(xrefNum) = xrefOff
     // /Size must cover EVERY object, including the ObjStm-contained bare
     // rotate integer (rotNum = xrefNum+1 when rotate != 0) — an object
     // outside the xref's /Size resolves to null in a conforming viewer,
@@ -264,10 +365,7 @@ object RealPdfGen {
     val maxNum = math.max(xrefNum, contained.map(_._1).max)
     val entries = new ByteArrayOutputStream()
     def entry(t: Int, f2: Int, f3: Int): Unit = {
-      entries.write(t)
-      entries.write((f2 >> 24) & 0xff); entries.write((f2 >> 16) & 0xff)
-      entries.write((f2 >> 8) & 0xff); entries.write(f2 & 0xff)
-      entries.write((f3 >> 8) & 0xff); entries.write(f3 & 0xff)
+      entries.write(t); entries.write(be32(f2)); entries.write(be16(f3))
     }
     val inStmIdx = contained.map(_._1).zipWithIndex.toMap
     for (num <- 0 to maxNum) {
@@ -277,17 +375,18 @@ object RealPdfGen {
       if (num == 0) entry(0, 0, 0xffff)
       else inStmIdx.get(num) match {
         case Some(idx) => entry(2, stmNum, idx)
-        case None => entry(1, offsets.getOrElse(num, 0), 0)
+        case None => entry(1, w.offsets.getOrElse(num, 0), 0)
       }
     }
     val xd = entries.toByteArray
-    put(s"$xrefNum 0 obj\n<< /Type /XRef /Size ${maxNum + 1} /W [1 4 2] " +
-      s"/Root 1 0 R /Length ${xd.length} >>\nstream\n")
-    out.write(xd)
-    put("\nendstream\nendobj\n")
-    put(s"startxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
+    w.stream(xrefNum, s"<< /Type /XRef /Size ${maxNum + 1} /W [1 4 2] " +
+      s"/Root 1 0 R /Length ${xd.length} >>", xd)
+    w.startxref(xrefOff)
   }
+
+  /** `p` with every shown line re-encoded by `f`. */
+  private def encodeLines(p: PageSpec, f: String => String): PageSpec =
+    p.copy(blocks = p.blocks.map(b => b.copy(lines = b.lines.map(f))))
 
   // ---- custom-encoded font + /ToUnicode CMap ------------------------------
 
@@ -337,51 +436,15 @@ object RealPdfGen {
     * text (ISO 32000 §9.10.3). Object layout: 1 = catalog, 2 = pages,
     * 3+2i = page i, 4+2i = content i, F = font, F+1 = CMap stream. */
   def buildToUnicode(pages: Seq[PageSpec]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-    val n = pages.length
-    val fontNum = 3 + 2 * n
+    val fontNum = 3 + 2 * pages.length
     val cmapNum = fontNum + 1
-
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count $n >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 $fontNum 0 R >> >> >>\nendobj\n")
-      val encoded = p.copy(blocks = p.blocks.map(b =>
-        b.copy(lines = b.lines.map(encodeCustom))))
-      val raw = contentFor(encoded)
-      val (data, filter) =
-        if (p.compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+    classic(pages, s"/Font << /F1 $fontNum 0 R >>",
+      p => contentFor(encodeLines(p, encodeCustom))) { w =>
+      w.obj(fontNum, s"<< /Type /Font /Subtype /TrueType /BaseFont /GRAFT+Custom " +
+        s"/ToUnicode $cmapNum 0 R >>")
+      val cm = deflate(latin1(toUnicodeCMap))
+      w.stream(cmapNum, s"<< /Length ${cm.length} /Filter /FlateDecode >>", cm)
     }
-    beginObj(fontNum)
-    put(s"<< /Type /Font /Subtype /TrueType /BaseFont /GRAFT+Custom " +
-      s"/ToUnicode $cmapNum 0 R >>\nendobj\n")
-    val cm = deflate(toUnicodeCMap.getBytes(StandardCharsets.ISO_8859_1))
-    beginObj(cmapNum)
-    put(s"<< /Length ${cm.length} /Filter /FlateDecode >>\nstream\n")
-    out.write(cm)
-    put("\nendstream\nendobj\n")
-    val xrefOff = out.size()
-    val total = offsets.length + 1
-    put(s"xref\n0 $total\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
   }
 
   // ---- simple-font /Encoding + /Differences fixture -----------------------
@@ -420,56 +483,16 @@ object RealPdfGen {
     * Differences table. Object layout: 1 = catalog, 2 = pages, 3+2i = page,
     * 4+2i = content, F = the encoded font. */
   def buildEncodedDiff(pages: Seq[PageSpec]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-    val n = pages.length
-    val fontNum = 3 + 2 * n
-
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count $n >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 $fontNum 0 R >> >> >>\nendobj\n")
-      val encoded = p.copy(blocks = p.blocks.map(b =>
-        b.copy(lines = b.lines.map(encodeDiff))))
-      val raw = contentFor(encoded)
-      val (data, filter) =
-        if (p.compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+    val fontNum = 3 + 2 * pages.length
+    classic(pages, s"/Font << /F1 $fontNum 0 R >>",
+      p => contentFor(encodeLines(p, encodeDiff))) { w =>
+      w.obj(fontNum, s"<< /Type /Font /Subtype /Type1 /BaseFont /GRAFT+Diff " +
+        s"$diffEncodingDict >>")
     }
-    beginObj(fontNum)
-    put(s"<< /Type /Font /Subtype /Type1 /BaseFont /GRAFT+Diff " +
-      s"$diffEncodingDict >>\nendobj\n")
-    val xrefOff = out.size()
-    val total = offsets.length + 1
-    put(s"xref\n0 $total\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
   }
 
   // ---- Identity-H CID font WITHOUT /ToUnicode (spec fixture) --------------
 
-  /** Classic layout with TWO fonts: /F1 Helvetica carries the real blocks;
-    * /C2 is a composite Type0 `/Encoding /Identity-H` font with NO
-    * /ToUnicode whose show (2-byte glyph ids) is appended to every page.
-    * The extractor must DROP the C2 show (glyph ids carry no recoverable
-    * text) and flag the document pdf_partial — never emit the ids as
-    * mojibake. Used by RealPdfSpec, deliberately NOT in the golden corpus
-    * (golden docs assert status "ok"). */
   /** Minimal sfnt font program carrying only a `cmap` table (public TrueType
     * layout), mapping each (char, gid) pair via format 4 (one single-char
     * segment per pair + the mandatory 0xFFFF terminator) or format 12 (one
@@ -477,9 +500,6 @@ object RealPdfGen {
     * authored from the mapping, never from running the parser under test. */
   def buildTtfCmap(charToGid: Seq[(Int, Int)], format: Int = 4): Array[Byte] = {
     val pairs = charToGid.sortBy(_._1)
-    def be16(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     val sub = new ByteArrayOutputStream()
     def w16(v: Int): Unit = sub.write(be16(v), 0, 2)
     def w32(v: Long): Unit = sub.write(be32(v), 0, 4)
@@ -514,7 +534,7 @@ object RealPdfGen {
   def buildTtfCmapFinalRange(start: Int, gid0: Int): Array[Byte] = {
     require(start >= 0 && start < 0xffff)
     val sub = new ByteArrayOutputStream()
-    def w16(v: Int): Unit = sub.write(be16s(v), 0, 2)
+    def w16(v: Int): Unit = sub.write(be16(v), 0, 2)
     val segCount = 1
     w16(4); w16(16 + 8 * segCount); w16(0) // format, length, language
     w16(segCount * 2); w16(2); w16(0); w16(0) // searchRange fields for 1 seg
@@ -526,14 +546,9 @@ object RealPdfGen {
     wrapSfnt(sub.toByteArray)
   }
 
-  private def be16s(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
   /** sfnt container (version 1.0, ONE `cmap` table with a single (3,1)
     * encoding record) around a raw cmap subtable. */
   private def wrapSfnt(subBytes: Array[Byte]): Array[Byte] = {
-    def be16(v: Int) = be16s(v)
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     val out = new ByteArrayOutputStream()
     out.write(be32(0x00010000L), 0, 4)
     out.write(be16(1), 0, 2) // numTables
@@ -554,6 +569,11 @@ object RealPdfGen {
   def cidAssignment(text: String): Seq[(Int, Int)] =
     text.distinct.sorted.zipWithIndex.map { case (c, i) => (c.toInt, 0x40 + i) }
 
+  /** Page content plus one /C2 show of the 2-byte glyph ids `showHex` near
+    * the bottom margin. */
+  private def withCidShow(p: PageSpec, showHex: String): Array[Byte] =
+    contentFor(p) ++ latin1(s"BT\n/C2 12 Tf\n50 10 Td\n<$showHex> Tj\nET\n")
+
   /** Like [[buildIdentityCid]] (Identity-H composite font, NO /ToUnicode)
     * but the descendant font embeds a real font program (/FontFile2, Flate)
     * whose cmap covers `cidText` — the extractor can recover the show by
@@ -564,108 +584,39 @@ object RealPdfGen {
     val assign = cidAssignment(cidText).toMap
     val showHex = cidText.map(c => f"${assign(c.toInt)}%04X").mkString
     val ttf = buildTtfCmap(cidAssignment(cidText), cmapFormat)
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-    val n = pages.length
-    val cidNum = 3 + 2 * n
+    val cidNum = 3 + 2 * pages.length
     val descNum = cidNum + 1
     val fdNum = cidNum + 2
     val ffNum = cidNum + 3
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count $n >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 << /Type /Font " +
-        s"/Subtype /Type1 /BaseFont /Helvetica >> /C2 $cidNum 0 R >> >> >>\nendobj\n")
-      val raw = contentFor(p) ++
-        s"BT\n/C2 12 Tf\n50 10 Td\n<$showHex> Tj\nET\n"
-          .getBytes(StandardCharsets.ISO_8859_1)
-      val (data, filter) =
-        if (p.compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+    classic(pages, s"/Font << $helvetica /C2 $cidNum 0 R >>",
+      withCidShow(_, showHex)) { w =>
+      w.obj(cidNum, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+CID " +
+        s"/Encoding /Identity-H /DescendantFonts [$descNum 0 R] >>")
+      w.obj(descNum, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /GRAFT+CID " +
+        s"/CIDToGIDMap /Identity /FontDescriptor $fdNum 0 R >>")
+      w.obj(fdNum, s"<< /Type /FontDescriptor /FontName /GRAFT+CID /FontFile2 $ffNum 0 R >>")
+      val ffData = deflate(ttf)
+      w.stream(ffNum, s"<< /Length ${ffData.length} /Length1 ${ttf.length} " +
+        "/Filter /FlateDecode >>", ffData)
     }
-    beginObj(cidNum)
-    put("<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+CID " +
-      s"/Encoding /Identity-H /DescendantFonts [$descNum 0 R] >>\nendobj\n")
-    beginObj(descNum)
-    put("<< /Type /Font /Subtype /CIDFontType2 /BaseFont /GRAFT+CID " +
-      s"/CIDToGIDMap /Identity /FontDescriptor $fdNum 0 R >>\nendobj\n")
-    beginObj(fdNum)
-    put(s"<< /Type /FontDescriptor /FontName /GRAFT+CID /FontFile2 $ffNum 0 R >>\nendobj\n")
-    val ffData = deflate(ttf)
-    beginObj(ffNum)
-    put(s"<< /Length ${ffData.length} /Length1 ${ttf.length} /Filter /FlateDecode >>\nstream\n")
-    out.write(ffData)
-    put("\nendstream\nendobj\n")
-    val xrefOff = out.size()
-    val total = offsets.length + 1
-    put(s"xref\n0 $total\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
   }
 
+  /** Classic layout with TWO fonts: /F1 Helvetica carries the real blocks;
+    * /C2 is a composite Type0 `/Encoding /Identity-H` font with NO
+    * /ToUnicode whose show (2-byte glyph ids) is appended to every page.
+    * The extractor must DROP the C2 show (glyph ids carry no recoverable
+    * text) and flag the document pdf_partial — never emit the ids as
+    * mojibake. Used by RealPdfSpec, deliberately NOT in the golden corpus
+    * (golden docs assert status "ok"). */
   def buildIdentityCid(pages: Seq[PageSpec]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-    val n = pages.length
-    val cidNum = 3 + 2 * n
-
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count $n >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 << /Type /Font " +
-        s"/Subtype /Type1 /BaseFont /Helvetica >> /C2 $cidNum 0 R >> >> >>\nendobj\n")
-      // normal blocks + one Identity-H show of 2-byte glyph ids near the
-      // bottom margin
-      val raw = contentFor(p) ++
-        s"BT\n/C2 12 Tf\n50 10 Td\n<0048006500470042> Tj\nET\n"
-          .getBytes(StandardCharsets.ISO_8859_1)
-      val (data, filter) =
-        if (p.compress) (deflate(raw), " /Filter /FlateDecode") else (raw, "")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$filter >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+    val cidNum = 3 + 2 * pages.length
+    classic(pages, s"/Font << $helvetica /C2 $cidNum 0 R >>",
+      withCidShow(_, "0048006500470042")) { w =>
+      w.obj(cidNum, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+CID " +
+        "/Encoding /Identity-H >>")
     }
-    beginObj(cidNum)
-    put("<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+CID " +
-      "/Encoding /Identity-H >>\nendobj\n")
-    val xrefOff = out.size()
-    val total = offsets.length + 1
-    put(s"xref\n0 $total\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
   }
 
-  /** Build the PDF bytes. Object layout: 1 = catalog, 2 = pages,
-    * 3+2i = page i, 4+2i = its content stream. `filter` selects the
-    * compressed-stream codec: "flate" (default) or "lzw". */
   /** One image drawn on a page: placement rect in top-down coordinates (like
     * Placed), authored pixel dims (w, h), and the payload. `dct` = embed the
     * bytes as-is under /Filter /DCTDecode (the bytes must BE a JPEG file —
@@ -677,36 +628,18 @@ object RealPdfGen {
   /** Image-bearing page: text blocks + image XObjects named /Im0, /Im1, …
     * drawn with `q  drawW 0 0 drawH x y cm  /ImN Do  Q` — the standard writer
     * form. Expected placements/captions are authored from construction, never
-    * from running the extractor. */
+    * from running the extractor. Content streams are always Flate. */
   def buildWithImages(pages: Seq[(PageSpec, Seq[PlacedImage])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-
     // numbering: 1 catalog, 2 pages; per page: page, content, then its images
-    val firstNum = new Array[Int](pages.length)
-    var next = 3
-    for (((_, imgs), i) <- pages.zipWithIndex) {
-      firstNum(i) = next
-      next += 2 + imgs.length
-    }
-
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${firstNum(i)} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count ${pages.length} >>\nendobj\n")
-    for (((p, imgs), i) <- pages.zipWithIndex) {
-      val pageNum = firstNum(i)
+    val firstNum = pages.scanLeft(3)((num, page) => num + 2 + page._2.length).init
+    val w = new PdfWriter("1.4")
+    w.obj(1, catalog)
+    w.obj(2, pagesNode(firstNum))
+    for (((p, imgs), pageNum) <- pages.zip(firstNum)) {
       val contNum = pageNum + 1
       val xo = imgs.indices.map(k => s"/Im$k ${contNum + 1 + k} 0 R").mkString(" ")
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 << /Type /Font " +
-        "/Subtype /Type1 /BaseFont /Helvetica >> >> " +
-        s"/XObject << $xo >> >> >>\nendobj\n")
+      w.obj(pageNum, pageDict(p.w, p.h, contNum,
+        s"/Font << $helvetica >> /XObject << $xo >>"))
       val sb = new java.lang.StringBuilder()
       sb.append(new String(contentFor(p), StandardCharsets.ISO_8859_1))
       for ((im, k) <- imgs.zipWithIndex) {
@@ -715,171 +648,53 @@ object RealPdfGen {
           .append(' ').append(im.x).append(' ').append(y0).append(" cm\n")
           .append("/Im").append(k).append(" Do\nQ\n")
       }
-      val data = deflate(sb.toString.getBytes(StandardCharsets.ISO_8859_1))
-      beginObj(contNum)
-      put(s"<< /Length ${data.length} /Filter /FlateDecode >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+      val data = deflate(latin1(sb.toString))
+      w.stream(contNum, s"<< /Length ${data.length} /Filter /FlateDecode >>", data)
       for ((im, k) <- imgs.zipWithIndex) {
         val (data, fdecl, cs) =
           if (im.dct) (im.data, "/DCTDecode", "/DeviceRGB")
           else (deflate(im.data), "/FlateDecode", "/DeviceGray")
-        beginObj(contNum + 1 + k)
-        put(s"<< /Type /XObject /Subtype /Image /Width ${im.w} /Height ${im.h} " +
+        w.stream(contNum + 1 + k,
+          s"<< /Type /XObject /Subtype /Image /Width ${im.w} /Height ${im.h} " +
           s"/ColorSpace $cs /BitsPerComponent 8 /Filter $fdecl " +
-          s"/Length ${data.length} >>\nstream\n")
-        out.write(data)
-        put("\nendstream\nendobj\n")
+          s"/Length ${data.length} >>", data)
       }
     }
-    val xrefOff = out.size()
-    val n = offsets.length + 1
-    put(s"xref\n0 $n\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $n /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
-  }
-
-  /** Content stream for one UPRIGHT PageSpec stored on a page that carries
-    * `/Rotate rot`: every baseline is emitted at the raw user-space position
-    * whose image under the viewer's clockwise rotation is the authored
-    * upright position, and per-line steps follow the rotated downward
-    * direction — so a conforming viewer (and the extractor's rotation
-    * normalization) sees the identical upright page. Inverse maps (stored
-    * page Ws×Hs, upright X,Y bottom-up): 90 → (Ws−Y, X); 180 → (Ws−X, Hs−Y);
-    * 270 → (Y, Hs−X). */
-  private def contentForRotated(p: PageSpec, rot: Int): Array[Byte] = {
-    val (ws, hs) = if (rot == 90 || rot == 270) (p.h, p.w) else (p.w, p.h)
-    val sb = new java.lang.StringBuilder()
-    for (b <- p.blocks) {
-      val leading = b.fontSize + 2
-      val yUp = p.h - b.yTop - b.fontSize // upright first-line baseline
-      val (x0, y0) = rot match {
-        case 90  => (ws - yUp, b.x)
-        case 180 => (ws - b.x, hs - yUp)
-        case 270 => (yUp, hs - b.x)
-        case _   => (b.x, yUp)
-      }
-      // upright downward step (0, -leading) in stored user space
-      val (dx, dy) = rot match {
-        case 90  => (leading, 0)
-        case 180 => (0, leading)
-        case 270 => (-leading, 0)
-        case _   => (0, -leading)
-      }
-      sb.append("BT\n/F1 ").append(b.fontSize).append(" Tf\n")
-        .append(x0).append(' ').append(y0).append(" Td\n")
-      for ((line, idx) <- b.lines.zipWithIndex) {
-        if (idx > 0) sb.append(dx).append(' ').append(dy).append(" Td\n")
-        if (idx % 2 == 0) sb.append('(').append(esc(line)).append(") Tj\n")
-        else sb.append("[<").append(hex(line)).append(">] TJ\n")
-      }
-      sb.append("ET\n")
-    }
-    sb.toString.getBytes(StandardCharsets.ISO_8859_1)
+    w.finish()
   }
 
   /** As [[build]] but every page is STORED rotated: the MediaBox axes swap
     * for 90/270, the page dict carries `/Rotate rot`, and the content stream
     * places text in raw (pre-rotation) user space — the upright twin of
     * `build(pages)` under a conforming viewer. Exists so RealPdfSpec can
-    * assert byte-identical extraction between a page and its rotated twin. */
+    * assert byte-identical extraction between a page and its rotated twin.
+    * `inheritRotate` puts /Rotate on the pages node instead (ISO 32000
+    * §7.7.3.4 inheritable attribute, reaching each page via /Parent);
+    * `indirectRotate` makes it `/Rotate N 0 R`, N a bare integer object
+    * (ISO 32000 §7.3.10 — any dict value may be an indirect reference). */
   def buildRotated(pages: Seq[PageSpec], rot: Int,
                    inheritRotate: Boolean = false,
                    indirectRotate: Boolean = false): Array[Byte] = {
     require(Seq(90, 180, 270).contains(rot), s"rot $rot")
     require(!(inheritRotate && indirectRotate), "pick one /Rotate placement")
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-    // indirectRotate: `/Rotate N 0 R` points at a bare integer object
-    // (ISO 32000 §7.3.10 — any dict value may be an indirect reference)
     val rotObj = 3 + 2 * pages.length
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    // inheritRotate: /Rotate lives on the Pages NODE (ISO 32000 §7.7.3.4
-    // inheritable attribute) and reaches each page via /Parent
-    put(s"<< /Type /Pages /Kids [$kids] /Count ${pages.length}" +
-      (if (inheritRotate) s" /Rotate $rot" else "") + " >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      val (ws, hs) = if (rot == 90 || rot == 270) (p.h, p.w) else (p.w, p.h)
-      val rotEntry =
-        if (inheritRotate) ""
-        else if (indirectRotate) s"/Rotate $rotObj 0 R "
-        else s"/Rotate $rot "
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 $ws $hs] " +
-        rotEntry +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 " +
-        "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >> >> >> >>\nendobj\n")
-      val raw = contentForRotated(p, rot)
-      val (data, fdecl) =
-        if (!p.compress) (raw, "")
-        else (deflate(raw), " /Filter /FlateDecode")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$fdecl >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
+    val rotEntry =
+      if (inheritRotate) ""
+      else if (indirectRotate) s"/Rotate $rotObj 0 R "
+      else s"/Rotate $rot "
+    classic(pages, s"/Font << $helvetica >>", contentFor(_, rot), rot = rot,
+      rotate = rotEntry, pagesExtra = if (inheritRotate) s" /Rotate $rot" else "") { w =>
+      if (indirectRotate) w.obj(rotObj, s"$rot")
     }
-    if (indirectRotate) {
-      beginObj(rotObj)
-      put(s"$rot\nendobj\n")
-    }
-    val xrefOff = out.size()
-    val n = offsets.length + 1
-    put(s"xref\n0 $n\n0000000000 65535 f \n")
-    for (o <- offsets)
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $n /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
   }
 
+  /** Build the PDF bytes. Object layout: 1 = catalog, 2 = pages,
+    * 3+2i = page i, 4+2i = its content stream. `filter` selects the
+    * compressed-stream codec: "flate" (default) or "lzw". */
   def build(pages: Seq[PageSpec]): Array[Byte] = build(pages, "flate")
 
   def buildLzw(pages: Seq[PageSpec]): Array[Byte] = build(pages, "lzw")
 
-  def build(pages: Seq[PageSpec], filter: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream(4096)
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def put(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def beginObj(num: Int): Unit = { offsets += out.size(); put(s"$num 0 obj\n") }
-
-    put("%PDF-1.4\n")
-    beginObj(1)
-    put("<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    val kids = pages.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    beginObj(2)
-    put(s"<< /Type /Pages /Kids [$kids] /Count ${pages.length} >>\nendobj\n")
-    for ((p, i) <- pages.zipWithIndex) {
-      val pageNum = 3 + 2 * i
-      val contNum = 4 + 2 * i
-      beginObj(pageNum)
-      put(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 ${p.w} ${p.h}] " +
-        s"/Contents $contNum 0 R /Resources << /Font << /F1 << /Type /Font " +
-        "/Subtype /Type1 /BaseFont /Helvetica >> >> >> >>\nendobj\n")
-      val raw = contentFor(p)
-      val (data, fdecl) =
-        if (!p.compress) (raw, "")
-        else if (filter == "lzw") (lzwEncode(raw), " /Filter /LZWDecode")
-        else (deflate(raw), " /Filter /FlateDecode")
-      beginObj(contNum)
-      put(s"<< /Length ${data.length}$fdecl >>\nstream\n")
-      out.write(data)
-      put("\nendstream\nendobj\n")
-    }
-    val xrefOff = out.size()
-    val n = offsets.length + 1
-    put(s"xref\n0 $n\n0000000000 65535 f \n")
-    for (o <- offsets) // Locale.ROOT: %d digits localize under e.g. ar locales
-      put(String.format(java.util.Locale.ROOT, "%010d 00000 n \n", Integer.valueOf(o)))
-    put(s"trailer\n<< /Size $n /Root 1 0 R >>\nstartxref\n$xrefOff\n%%EOF\n")
-    out.toByteArray
-  }
+  def build(pages: Seq[PageSpec], filter: String): Array[Byte] =
+    classic(pages, s"/Font << $helvetica >>", lzw = filter == "lzw")()
 }

@@ -1,9 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.sql.{Column, SparkSession}
@@ -22,12 +22,10 @@ import graft.extract.{ExtractConfig, Extractor, ExtractorState}
   * graft_extract_text(html) ...")` works for ad-hoc relational use.
   */
 case class ExtractTextExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def prettyName: String = "graft_extract_text"
 
   @transient private lazy val state = new ThreadLocal[ExtractorState] {
@@ -50,12 +48,10 @@ case class ExtractTextExpr(child: Expression)
   * counterpart of the reference's word segmentation counting
   * (ppocr/postprocess/rec_postprocess.py:72-136).
   */
-case class TokenCountExpr(child: Expression) extends UnaryExpression {
+case class TokenCountExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_token_count"
 
   override def nullSafeEval(input: Any): Any = {
@@ -241,12 +237,10 @@ object LangIdKernel {
 
 /** `graft_lang_best(s STRING) -> BIGINT`: packed (votes << 4 | langIndex)
   * from [[LangIdKernel]]. Codegen'd static call, like graft_simhash64. */
-case class LangBestExpr(child: Expression) extends UnaryExpression {
+case class LangBestExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_lang_best"
 
   override def nullSafeEval(input: Any): Any =
@@ -263,12 +257,11 @@ case class LangBestExpr(child: Expression) extends UnaryExpression {
   * ONE row-local expression — replaces the explode-every-token → groupBy
   * formulation whose shuffle re-keyed the entire corpus (at 10^12 rows, the
   * scale-killer). Codegen stays alive via a static kernel call. */
-case class SimHash64Expr(child: Expression, seed: Long = 42L) extends UnaryExpression {
+case class SimHash64Expr(child: Expression, seed: Long = 42L)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_simhash64"
 
   override def nullSafeEval(input: Any): Any =
@@ -351,14 +344,10 @@ object SrpKernel {
   * hash table from [[SrpKernel]]. Codegen'd static call; the (nTables,
   * nPlanes, dim) knobs are plan-side constants, not per-row data. */
 case class SrpBucketsExpr(child: Expression, nTables: Int, nPlanes: Int, dim: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def prettyName: String = "graft_srp_buckets"
 
   override def nullSafeEval(input: Any): Any =
@@ -444,17 +433,13 @@ object IvfKernel {
   * production 10^5-centroid table would move to an explicit Spark broadcast
   * variable consumed in the same kernel. */
 case class IvfNearestExpr(child: Expression, centroids: Seq[Seq[Double]], nProbe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   @transient private lazy val matrix: Array[Array[Double]] =
     centroids.map(_.toArray).toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def prettyName: String = "graft_ivf_nearest"
 
   override def nullSafeEval(input: Any): Any =
@@ -599,17 +584,13 @@ object PqKernel {
   * Coarse matrix rides the plan as one reference object (IvfNearestExpr's
   * rationale). */
 case class PqResidualExpr(child: Expression, coarse: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   @transient private lazy val matrix: Array[Array[Double]] =
     coarse.map(_.toArray).toArray
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def prettyName: String = "graft_pq_residual"
 
   override def nullSafeEval(input: Any): Any =
@@ -629,7 +610,7 @@ case class PqResidualExpr(child: Expression, coarse: Seq[Seq[Double]])
   * the plan as reference objects. */
 case class PqEncodeExpr(child: Expression, coarse: Seq[Seq[Double]],
                         codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   @transient private lazy val matrix: Array[Array[Double]] =
     coarse.map(_.toArray).toArray
@@ -637,11 +618,7 @@ case class PqEncodeExpr(child: Expression, coarse: Seq[Seq[Double]],
     codebooks.map(_.map(_.toArray).toArray).toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def prettyName: String = "graft_pq_encode"
 
   override def nullSafeEval(input: Any): Any =
@@ -662,7 +639,7 @@ case class PqEncodeExpr(child: Expression, coarse: Seq[Seq[Double]],
   * dot(q, c_list) + Σ_m dot(q_m, codeword_m). */
 case class PqScoreExpr(left: Expression, right: Expression,
                        coarse: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]])
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   @transient private lazy val matrix: Array[Array[Double]] =
     coarse.map(_.toArray).toArray
@@ -670,12 +647,7 @@ case class PqScoreExpr(left: Expression, right: Expression,
     codebooks.map(_.map(_.toArray).toArray).toArray
 
   override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(DoubleType, _), ArrayType(LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<DOUBLE>, ARRAY<BIGINT>), got $other")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), ArrayType(LongType))
   override def prettyName: String = "graft_pq_score"
 
   override def nullSafeEval(q: Any, enc: Any): Any =
@@ -1036,11 +1008,9 @@ object NfcKernel {
 }
 
 /** `graft_nfc(s STRING) -> STRING`: codegen'd scalar NFC normalization. */
-case class NfcExpr(child: Expression) extends UnaryExpression {
+case class NfcExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_nfc"
 
   override def nullSafeEval(input: Any): Any =
@@ -1057,11 +1027,9 @@ case class NfcExpr(child: Expression) extends UnaryExpression {
   * codegen'd scalar expression — stays inside the WholeStageCodegen span of
   * the ingest scan, zero shuffle; URL-level dedup is then an ordinary
   * groupBy on the canonical key. */
-case class UrlCanonExpr(child: Expression) extends UnaryExpression {
+case class UrlCanonExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_url_canon"
 
   override def nullSafeEval(input: Any): Any =
@@ -1079,11 +1047,9 @@ case class UrlCanonExpr(child: Expression) extends UnaryExpression {
 /** `graft_url_path(url STRING) -> STRING`: [[UrlKernel.path]] — the
   * path+query component robots rules and sitemap diffs key on. Codegen'd,
   * zero shuffle. */
-case class UrlPathExpr(child: Expression) extends UnaryExpression {
+case class UrlPathExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_url_path"
 
   override def nullSafeEval(input: Any): Any =
@@ -1100,13 +1066,9 @@ case class UrlPathExpr(child: Expression) extends UnaryExpression {
   * reference resolution ([[UrlKernel.resolve]]) as a codegen'd scalar —
   * href → absolute frontier URL inside the scan stage, zero shuffle. */
 case class UrlResolveExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (STRING, STRING), got (${left.dataType}, ${right.dataType})")
+  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def prettyName: String = "graft_url_resolve"
 
   override def nullSafeEval(base: Any, ref: Any): Any =
@@ -1120,11 +1082,9 @@ case class UrlResolveExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-case class UrlHostExpr(child: Expression) extends UnaryExpression {
+case class UrlHostExpr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_url_host"
 
   override def nullSafeEval(input: Any): Any =
@@ -1147,12 +1107,10 @@ case class UrlHostExpr(child: Expression) extends UnaryExpression {
   * kernel body into generated Java would blow the 64KB method limit for
   * zero measurable gain). */
 case class ExtractLinksExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def prettyName: String = "graft_extract_links"
 
   @transient private lazy val arena =
@@ -1175,16 +1133,14 @@ case class ExtractLinksExpr(child: Expression)
   * anchor text) pairs — the anchor-text corpus pass (WAT Links+text shape).
   * Same tokenizer/arena discipline as ExtractLinksExpr. */
 case class AnchorTextsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("href", StringType, nullable = false),
       org.apache.spark.sql.types.StructField("text", StringType, nullable = false))),
     containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def prettyName: String = "graft_anchor_texts"
 
   @transient private lazy val arena =
@@ -1209,14 +1165,10 @@ case class AnchorTextsExpr(child: Expression)
   * page's effective base (`<base href>` honored). The frontier-feed form of
   * graft_extract_links. */
 case class ResolvedLinksExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (BINARY, STRING), got (${left.dataType}, ${right.dataType})")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
   override def prettyName: String = "graft_resolved_links"
 
   @transient private lazy val arena =
@@ -1243,16 +1195,14 @@ case class ResolvedLinksExpr(left: Expression, right: Expression)
   * entity-decoded; script/style bodies cannot fake metadata (they tokenize
   * as Text). Same tokenizer/arena discipline as ExtractLinksExpr. */
 case class HeadMetaExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   private val fields = Seq("title", "description", "canonical", "robots",
     "og_title", "og_description", "lang")
   override def dataType: DataType = org.apache.spark.sql.types.StructType(
     fields.map(f =>
       org.apache.spark.sql.types.StructField(f, StringType, nullable = true)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def prettyName: String = "graft_head_meta"
 
   @transient private lazy val arena =
@@ -1293,7 +1243,7 @@ case class HeadMetaExpr(child: Expression)
   * an array of structs — object-heavy work Janino codegen cannot improve.
   */
 case class GopherRepExpr(child: Expression, ns: Seq[Int])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -1305,9 +1255,7 @@ case class GopherRepExpr(child: Expression, ns: Seq[Int])
     StructField("top_chars", LongType, nullable = false),
     StructField("dup_chars", LongType, nullable = false))),
     containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires STRING, got ${child.dataType}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "graft_gopher_rep"
 
   /** Unsigned UTF-8 byte comparison — Spark's string ordering. */

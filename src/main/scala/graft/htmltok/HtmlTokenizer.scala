@@ -483,19 +483,6 @@ object HtmlTokenizer {
     flushText(n)
   }
 
-  /** Parse a start tag beginning at `i` (input(i)=='<'). Adds the token to the
-    * arena and returns the index just past '>'; returns -1 if malformed (no '>'
-    * found — caller treats '<' as text). Extracts href presence and class/id hints.
-    */
-  /** Href values of `<a>` start tags, in document order — the link-extraction
-    * pass of a crawl link-graph build (the WAT-records shape of Common Crawl,
-    * public format). Runs the SAME tokenizer as text extraction (comments,
-    * rawtext and script bodies correctly skipped, so no phantom links), then
-    * re-scans each href-flagged `<a>` tag's byte span with the same attribute
-    * state machine — purely additive, the hot extraction path is untouched.
-    * Values are entity-decoded (`&amp;` in query strings) and stripped of
-    * leading/trailing ASCII whitespace per the URL spec. Assumes an
-    * ASCII-compatible byte encoding (true post-transcode in the pipeline). */
   /** Charset-normalized payload for the flat link/meta walks below: the
     * SAME sniff extraction performs, then UTF-8 bytes out — a UTF-8 page
     * passes through (BOM sliced), anything else (windows-1252, Shift_JIS,
@@ -518,6 +505,15 @@ object HtmlTokenizer {
     }
   }
 
+  /** Href values of `<a>` start tags, in document order — the link-extraction
+    * pass of a crawl link-graph build (the WAT-records shape of Common Crawl,
+    * public format). Runs the SAME tokenizer as text extraction (comments,
+    * rawtext and script bodies correctly skipped, so no phantom links), then
+    * re-scans each href-flagged `<a>` tag's byte span with the same attribute
+    * state machine — purely additive, the hot extraction path is untouched.
+    * Values are entity-decoded (`&amp;` in query strings) and stripped of
+    * leading/trailing ASCII whitespace per the URL spec. Assumes an
+    * ASCII-compatible byte encoding (true post-transcode in the pipeline). */
   def anchorHrefs(raw: Array[Byte], arena: TokenArena): Vector[String] = {
     val input = normalizeHtml(raw)
     tokenize(input, arena)
@@ -757,6 +753,10 @@ object HtmlTokenizer {
     null
   }
 
+  /** Parse a start tag beginning at `i0` (input(i0)=='<'). Adds the token to the
+    * arena and returns the index just past '>'; returns -1 if malformed (no '>'
+    * found — caller treats '<' as text). Extracts href presence and class/id hints.
+    */
   private def parseStartTag(input: Array[Byte], i0: Int, n: Int, arena: TokenArena): Int = {
     var j = i0 + 1
     val nameSb = new java.lang.StringBuilder(8)

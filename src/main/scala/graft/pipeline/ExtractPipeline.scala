@@ -100,47 +100,36 @@ object ExtractPipeline {
   def lineageDir(outDir: String): String = s"$outDir/_lineage"
   def dataDir(outDir: String): String = s"$outDir/data"
 
-  /** Buckets marked ok in the lineage table (empty if no lineage yet).
-    * Existence is probed through Hadoop's FileSystem so --resume works on
-    * HDFS/S3 paths too, not just local disk (a java.io.File probe is always
-    * false off local disk and would silently reprocess every bucket). */
-  def completedBuckets(spark: SparkSession, outDir: String): Set[Int] = {
+  /** What earlier runs left in the lineage table: the buckets marked ok and
+    * the attempt number of the next run (one past the largest recorded, 0
+    * when there is no lineage yet). Existence is probed through Hadoop's
+    * FileSystem so --resume works on HDFS/S3 paths too, not just local disk
+    * (a java.io.File probe is always false off local disk and would silently
+    * reprocess every bucket). */
+  private def priorRuns(spark: SparkSession, outDir: String): (Set[Int], Int) = {
     val path = new org.apache.hadoop.fs.Path(lineageDir(outDir))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Set.empty
-    import spark.implicits._
-    spark.read.parquet(lineageDir(outDir))
-      .filter(col("status") === "ok")
-      .select(col("bucket")).as[Int].collect().toSet
+    if (!fs.exists(path)) return (Set.empty, 0)
+    val r = spark.read.parquet(lineageDir(outDir))
+      .agg(collect_set(when(col("status") === "ok", col("bucket"))), max(col("attempt")))
+      .head()
+    (r.getSeq[Int](0).toSet, if (r.isNullAt(1)) 0 else r.getInt(1) + 1)
   }
+
+  /** Buckets marked ok in the lineage table (empty if no lineage yet). */
+  def completedBuckets(spark: SparkSession, outDir: String): Set[Int] =
+    priorRuns(spark, outDir)._1
 
   /** Run (or resume) the pipeline. Returns the number of buckets processed in
-    * THIS run. `onlyBuckets` restricts processing (used by tests to simulate a
-    * run that died before finishing every bucket).
+    * THIS run, whose lineage rows record attempt = 1 + the largest attempt
+    * already in the lineage table (0 on the first run).
     */
   def run(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
-          conf: PipelineConf = PipelineConf(), resume: Boolean = false,
-          onlyBuckets: Option[Set[Int]] = None, attempt: Int = 0): Long = {
-    import spark.implicits._
-    // save/restore (the StreamHarness discipline): leaving `dynamic` set on
-    // the shared session would silently change every LATER partitioned
-    // overwrite in it from replace-table to replace-touched-partitions
-    val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevOverwrite = spark.conf.getOption(overwriteKey)
-    spark.conf.set(overwriteKey, "dynamic")
-    try runGuarded(spark, pages, outDir, conf, resume, onlyBuckets, attempt)
-    finally prevOverwrite match {
-      case Some(v) => spark.conf.set(overwriteKey, v)
-      case None    => spark.conf.unset(overwriteKey)
-    }
-  }
-
-  private def runGuarded(spark: SparkSession, pages: Dataset[PageRow],
-                         outDir: String, conf: PipelineConf, resume: Boolean,
-                         onlyBuckets: Option[Set[Int]], attempt: Int): Long = {
+          conf: PipelineConf = PipelineConf(), resume: Boolean = false): Long = {
     import spark.implicits._
 
-    val done: Set[Int] = if (resume) completedBuckets(spark, outDir) else Set.empty
+    val (ok, attempt) = priorRuns(spark, outDir)
+    val done: Set[Int] = if (resume) ok else Set.empty
 
     val nTasks = taskCount(spark, pages, conf)
     val bucketed = pages.map { p =>
@@ -149,13 +138,9 @@ object ExtractPipeline {
       (bucket, taskOf(bucket, conf, nTasks), p)
     }.toDF("bucket", "task", "page")
 
-    val remaining0 =
+    val remaining =
       if (done.isEmpty) bucketed
       else bucketed.filter(!col("bucket").isin(done.toSeq: _*))
-    val remaining = onlyBuckets match {
-      case Some(bs) => remaining0.filter(col("bucket").isin(bs.toSeq: _*))
-      case None     => remaining0
-    }
 
     // lineage partials of THIS run, one (partition id, bucket -> counts) set
     // per write task; stale buckets left in the output dir by earlier runs
@@ -194,9 +179,12 @@ object ExtractPipeline {
         }
       }
 
+    // dynamic overwrite as a write option, ahead of the session conf: only
+    // the buckets this run writes are replaced, and the session is untouched
     extracted.write
       .partitionBy("bucket")
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(dataDir(outDir))
 
     // The write job has committed. Keep one partial set per partition id (a

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -234,6 +234,32 @@ class ExpressionSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), s"no codegen span in:\n$plan")
     assert(plan.contains("graft_pq_encode") && plan.contains("graft_pq_score"), plan)
+  }
+
+  test("each input signature is checked at analysis: a wrong type is an AnalysisException") {
+    import spark.implicits._
+    val df = Seq(("s", Array[Byte](1), Seq(1.0), Seq(1L))).toDF("s", "b", "d", "l")
+    val coarse = Seq(Seq(0.0))
+    val cbs = Seq(Seq(Seq(0.0)))
+    // signature -> (a call it accepts, a call it rejects)
+    val cases = Seq(
+      "BINARY" -> (GraftExpressions.extract_text(col("b")),
+        GraftExpressions.extract_text(col("s"))),
+      "STRING" -> (GraftExpressions.token_count(col("s")),
+        GraftExpressions.token_count(col("b"))),
+      "ARRAY<DOUBLE>" -> (GraftExpressions.ivfNearest(col("d"), coarse, 1),
+        GraftExpressions.ivfNearest(col("l"), coarse, 1)),
+      "(STRING, STRING)" -> (GraftExpressions.urlResolve(col("s"), col("s")),
+        GraftExpressions.urlResolve(col("s"), col("b"))),
+      "(BINARY, STRING)" -> (GraftExpressions.resolvedLinks(col("b"), col("s")),
+        GraftExpressions.resolvedLinks(col("s"), col("s"))),
+      "(ARRAY<DOUBLE>, ARRAY<BIGINT>)" ->
+        (GraftExpressions.pqScore(col("d"), col("l"), coarse, cbs),
+          GraftExpressions.pqScore(col("d"), col("d"), coarse, cbs)))
+    for ((sig, (accepted, rejected)) <- cases) withClue(s"$sig: ") {
+      df.select(accepted)
+      intercept[AnalysisException](df.select(rejected))
+    }
   }
 
   test("url kernels (path/resolve) run inside WholeStageCodegen") {

@@ -68,12 +68,12 @@ class LineageSpec extends AnyFunSuite {
     assertLineageMatchesData(clean, lit(0))
 
     val crashed = tmp()
-    ExtractPipeline.run(spark, pages, crashed, conf, onlyBuckets = Some((0 until 5).toSet))
+    ExtractPipeline.run(spark, PartialRun.pages(pages, conf, (0 until 5).toSet), crashed, conf)
     assertLineageMatchesData(crashed, lit(0))
     val first = ExtractPipeline.completedBuckets(spark, crashed)
     assert(first.nonEmpty && first.subsetOf((0 until 5).toSet))
 
-    ExtractPipeline.run(spark, pages, crashed, conf, resume = true, attempt = 1)
+    ExtractPipeline.run(spark, pages, crashed, conf, resume = true)
     assertLineageMatchesData(crashed,
       when(col("bucket").isin(first.toSeq: _*), lit(0)).otherwise(lit(1)))
     assert(ExtractPipeline.completedBuckets(spark, crashed).size >

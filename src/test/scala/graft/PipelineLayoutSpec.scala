@@ -132,16 +132,16 @@ class PipelineLayoutSpec extends AnyFunSuite {
     assert(lineageCounts(packed) == lineageCounts(single))
   }
 
-  test("a partial onlyBuckets run and its resume equal a clean run") {
+  test("a partial run and its resume equal a clean run") {
     val ds = pages()
     val clean = tmp()
     ExtractPipeline.run(spark, ds, clean, conf)
 
     val crashed = tmp()
     val first = Set(0, 3, 5, conf.numBuckets)
-    ExtractPipeline.run(spark, ds, crashed, conf, onlyBuckets = Some(first))
+    ExtractPipeline.run(spark, PartialRun.pages(ds, conf, first), crashed, conf)
     assert(ExtractPipeline.completedBuckets(spark, crashed) == first)
-    ExtractPipeline.run(spark, ds, crashed, conf, resume = true, attempt = 1)
+    ExtractPipeline.run(spark, ds, crashed, conf, resume = true)
 
     assert(writerOf(crashed).keySet == writerOf(clean).keySet)
     assert(rows(crashed) == rows(clean))

@@ -38,15 +38,13 @@ class PipelineResumeSpec extends AnyFunSuite {
     // crashed run: only half the buckets commit
     val crashDir = tmp()
     val firstHalf = (0 until 5).toSet
-    val n1 = ExtractPipeline.run(spark, pages, crashDir, conf,
-      onlyBuckets = Some(firstHalf))
+    val n1 = ExtractPipeline.run(spark, PartialRun.pages(pages, conf, firstHalf), crashDir, conf)
     assert(n1 > 0 && n1 <= firstHalf.size)
     val doneAfterCrash = ExtractPipeline.completedBuckets(spark, crashDir)
     assert(doneAfterCrash.subsetOf(firstHalf))
 
     // resume: must process only the rest
-    val n2 = ExtractPipeline.run(spark, pages, crashDir, conf,
-      resume = true, attempt = 1)
+    val n2 = ExtractPipeline.run(spark, pages, crashDir, conf, resume = true)
     val resumed = ExtractPipeline.output(spark, crashDir)
       .select("url", "text").collect().map(r => (r.getString(0), r.getString(1))).sorted
     assert(resumed.toSeq == clean.toSeq, "resumed table differs from clean run")
@@ -67,8 +65,45 @@ class PipelineResumeSpec extends AnyFunSuite {
     val dir = tmp()
     val pages = CorpusSource.pages(spark, 28)
     ExtractPipeline.run(spark, pages, dir, conf)
-    val again = ExtractPipeline.run(spark, pages, dir, conf, resume = true, attempt = 1)
+    val again = ExtractPipeline.run(spark, pages, dir, conf, resume = true)
     assert(again == 0, s"no-op resume processed $again buckets")
+  }
+
+  test("a resume records attempt 1 for the buckets it commits, without being told") {
+    val conf = PipelineConf(numBuckets = 4, megaBuckets = 1)
+    val pages = CorpusSource.pages(spark, 28)
+    val dir = tmp()
+    ExtractPipeline.run(spark, PartialRun.pages(pages, conf, Set(0, 1)), dir, conf)
+    val first = ExtractPipeline.completedBuckets(spark, dir)
+    assert(first.nonEmpty && first.subsetOf(Set(0, 1)))
+    assert(ExtractPipeline.run(spark, pages, dir, conf, resume = true) > 0)
+    val attempts = ExtractPipeline.lineage(spark, dir).select("bucket", "attempt")
+      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(attempts.size > first.size, "resume added no bucket")
+    attempts.foreach { case (b, a) =>
+      assert(a == (if (first.contains(b)) 0 else 1), s"bucket $b attempt $a")
+    }
+  }
+
+  test("a run leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def setting: Option[String] = spark.sessionState.conf.getAllConfs.get(key)
+    val conf = PipelineConf(numBuckets = 4, megaBuckets = 1)
+    val pages = CorpusSource.pages(spark, 28)
+    val before = setting
+    val dir = tmp()
+    try {
+      ExtractPipeline.run(spark, PartialRun.pages(pages, conf, Set(0)), dir, conf)
+      assert(setting == before)
+      spark.conf.set(key, "static")
+      ExtractPipeline.run(spark, pages, dir, conf, resume = true)
+      assert(setting.contains("static"))
+      // the run's own overwrite stayed dynamic: the resume kept bucket 0
+      assert(ExtractPipeline.output(spark, dir).count() == 28)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("output is invariant to input partitioning (1 vs 32 partitions)") {

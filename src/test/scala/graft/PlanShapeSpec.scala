@@ -100,8 +100,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val pages = CorpusSource.pages(spark, 56)
     spark.listenerManager.register(listener)
     try {
-      ExtractPipeline.run(spark, pages, out, conf, onlyBuckets = Some((0 until 4).toSet))
-      ExtractPipeline.run(spark, pages, out, conf, resume = true, attempt = 1)
+      ExtractPipeline.run(spark, PartialRun.pages(pages, conf, (0 until 4).toSet), out, conf)
+      ExtractPipeline.run(spark, pages, out, conf, resume = true)
       // listener events arrive in order: once the marker query is seen, every
       // query the two runs executed has been recorded
       spark.range(1).toDF(marker).collect()
