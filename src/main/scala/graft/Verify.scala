@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.pipeline.LocalFs
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,7 +26,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
       val dest = s"$outDir/$name"
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dest)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .options(LocalFs.writeOptions).parquet(dest)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${failure(e)}")
         // a failed query must FAIL the compare, not silently pass against a

@@ -690,11 +690,14 @@ object RealPdfGen {
 
   /** Build the PDF bytes. Object layout: 1 = catalog, 2 = pages,
     * 3+2i = page i, 4+2i = its content stream. `filter` selects the
-    * compressed-stream codec: "flate" (default) or "lzw". */
+    * compressed-stream codec: "flate" (default) or "lzw"; any other name
+    * is rejected. */
   def build(pages: Seq[PageSpec]): Array[Byte] = build(pages, "flate")
 
   def buildLzw(pages: Seq[PageSpec]): Array[Byte] = build(pages, "lzw")
 
-  def build(pages: Seq[PageSpec], filter: String): Array[Byte] =
+  def build(pages: Seq[PageSpec], filter: String): Array[Byte] = {
+    require(filter == "flate" || filter == "lzw", s"unknown codec '$filter': flate or lzw")
     classic(pages, s"/Font << $helvetica >>", lzw = filter == "lzw")()
+  }
 }

@@ -180,10 +180,13 @@ object ExtractPipeline {
       }
 
     // dynamic overwrite as a write option, ahead of the session conf: only
-    // the buckets this run writes are replaced, and the session is untouched
+    // the buckets this run writes are replaced, and the session is untouched.
+    // LocalFs.writeOptions: local-disk files get their permissions without
+    // a chmod process each (three per bucket: directory, file, .crc)
     extracted.write
       .partitionBy("bucket")
       .mode(SaveMode.Overwrite)
+      .options(LocalFs.writeOptions)
       .option("partitionOverwriteMode", "dynamic")
       .parquet(dataDir(outDir))
 
@@ -198,7 +201,7 @@ object ExtractPipeline {
       Row.fromSeq(Seq(bucket, "ok", attempt) ++ c)
     }
     spark.createDataFrame(rows.asJava, lineageSchema).coalesce(1)
-      .write.mode(SaveMode.Append).parquet(lineageDir(outDir))
+      .write.mode(SaveMode.Append).options(LocalFs.writeOptions).parquet(lineageDir(outDir))
     counts.size.toLong
   }
 

@@ -139,4 +139,9 @@ class RealPdfGenBytesSpec extends AnyFunSuite {
       ("buildToUnicode large", RealPdfGen.buildToUnicode(large),
         "15e1a147dabb834c0f1cf6fb543c4bf8bba02e1cea5476017cf7d0d20999e9ae"))
   }
+
+  test("build rejects a codec name other than flate or lzw") {
+    for (bad <- Seq("LZW", "lzw ", "Flate", "x", ""))
+      assertThrows[IllegalArgumentException](RealPdfGen.build(mixed, bad))
+  }
 }
