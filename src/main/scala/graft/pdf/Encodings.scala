@@ -1,6 +1,6 @@
 package graft.pdf
 
-import java.nio.charset.Charset
+import java.nio.charset.{Charset, StandardCharsets}
 
 /** Simple-font encoding tables — public ISO 32000-1 Appendix D data plus the
   * (public) Adobe Glyph List subset those tables and real-world /Differences
@@ -248,29 +248,24 @@ object Encodings {
     case _                  => None
   }
 
-  private val diffTokPat =
-    java.util.regex.Pattern.compile("""(\d+)|/([^\s/\[\]()<>{}%]+)""")
-
   /** Apply a /Differences array body (the text between '[' and ']') over a
     * COPY of `base`: an integer sets the code cursor, each following name
     * assigns sequentially (ISO 32000-1 §9.6.6.1). Unresolvable glyph names
     * clear the slot to null (undefined → caller fallback — never a wrong
     * char). */
-  def withDifferences(base: Array[String], diffsBody: String): Array[String] = {
+  def withDifferences(base: Array[String], diffsBody: String): Array[String] =
+    withDifferences(base, PdfValue.parseAll(diffsBody.getBytes(StandardCharsets.ISO_8859_1)))
+
+  private[pdf] def withDifferences(base: Array[String], items: Seq[PVal]): Array[String] = {
     val t = base.clone()
-    val m = diffTokPat.matcher(diffsBody)
     var code = -1
-    while (m.find()) {
-      if (m.group(1) != null) {
-        // toIntOption (the scanObjects idiom): an overlong integer in a
-        // hostile /Differences array must invalidate the CURSOR only (-1 =
-        // following names are ignored), not throw out of parse() and void
-        // the whole document to pdf_unparsed
-        code = m.group(1).toIntOption.getOrElse(-1)
-      } else if (code >= 0 && code < 256) {
-        t(code) = glyph(m.group(2)).orNull
-        code += 1
-      }
+    items.foreach {
+      // an overlong or signed integer in a hostile /Differences array
+      // invalidates the CURSOR only (-1 = following names are ignored), never
+      // the document
+      case PInt(v) => code = if (v >= 0 && v <= Int.MaxValue) v.toInt else -1
+      case PName(n) if code >= 0 && code < 256 => t(code) = glyph(n).orNull; code += 1
+      case _ =>
     }
     t
   }

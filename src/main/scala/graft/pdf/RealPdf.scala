@@ -9,9 +9,9 @@ import graft.pdf.PdfBranch.PBlock
 /** Minimal real-PDF text extraction — a from-scratch subset of the public PDF
   * spec (ISO 32000), no native libs:
   *
-  *  - linear object scan (`N G obj … endobj`) instead of xref parsing, which
-  *    also survives mildly damaged files; xref TABLES and xref STREAMS are
-  *    both unnecessary under this design (objects are found, not looked up);
+  *  - one byte lexer for every syntax layer ([[PdfLexer]]); a linear object
+  *    scan (`N G obj … endobj`) instead of xref parsing, which also survives
+  *    mildly damaged files (objects are found, not looked up);
   *  - PDF 1.5+ `/ObjStm` object streams expanded (§7.5.7), so page dicts
   *    compressed into object streams — the modern writer default — parse;
   *  - page tree walk: `/Type /Catalog` → `/Pages` → `/Kids` recursion, page
@@ -52,12 +52,11 @@ object RealPdf {
 
   final case class Page(pageW: Int, pageH: Int, blocks: Vector[PBlock])
 
-  /** Parse result: pages in document order + whether any content stream
-    * failed to decode (drives the pdf_unparsed lineage status) +
-    * `unmappedShows` = text-show operators through a composite (CID) font
-    * with no /ToUnicode CMap — their 2-byte codes are glyph ids with no
-    * byte→text mapping available, so the text is DROPPED (never emitted as
-    * mojibake) and the document is flagged pdf_partial. */
+  /** Parse result: pages in document order + how many streams failed to
+    * decode (drives the pdf_partial/pdf_unparsed lineage status) +
+    * `unmappedShows` = shows through a composite (CID) font with no
+    * /ToUnicode CMap — glyph ids with no byte→text mapping, so the text is
+    * DROPPED (never emitted as mojibake) and the document is pdf_partial. */
   final case class Parsed(pages: Vector[Page], decodeFailures: Int,
                           unmappedShows: Int, pagesTruncated: Boolean,
                           images: Vector[PdfImage] = Vector.empty,
@@ -91,114 +90,81 @@ object RealPdf {
 
   // ---------------------------------------------------------------- objects
 
-  private final case class PdfObj(num: Int, dict: String, streamRaw: Array[Byte],
-                                  offset: Int)
-
-  /** Latin-1 is a 1:1 byte↔char map, so string offsets == byte offsets. */
-  private def byteView(payload: Array[Byte]): String =
-    new String(payload, StandardCharsets.ISO_8859_1)
-
-  private val objStartPat = java.util.regex.Pattern.compile("""(\d+)\s+\d+\s+obj\b""")
-
-  /** Balanced `<< … >>` scan starting at `from` (must point at '<' of "<<").
-    * Returns index just past the closing ">>", or -1. Skips strings. */
-  private def dictEnd(s: String, from: Int): Int = {
-    var depth = 0
-    var i = from
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '<' && i + 1 < n && s.charAt(i + 1) == '<') { depth += 1; i += 2 }
-      else if (c == '>' && i + 1 < n && s.charAt(i + 1) == '>') {
-        depth -= 1; i += 2
-        if (depth == 0) return i
-      } else if (c == '(') { // literal string — skip with escape awareness
-        var d = 1; i += 1
-        while (i < n && d > 0) {
-          val sc = s.charAt(i)
-          if (sc == '\\') i += 1
-          else if (sc == '(') d += 1
-          else if (sc == ')') d -= 1
-          i += 1
-        }
-      } else if (c == '<') {
-        // hex string `<AABB>` (single '<' — the '<<' case matched above):
-        // skip to its '>', else `<AABB>>>` pairs the hex close with the
-        // first dict '>' and ends the dict one char early — the trailing
-        // '>' then shadows a following `stream` keyword and the object's
-        // stream is silently lost
-        val e = s.indexOf('>', i + 1)
-        i = if (e < 0) n else e + 1
-      } else i += 1
-    }
-    -1
+  /** One indirect object: its dictionary (or a bare object's bounded body
+    * value), its raw stream bytes and the byte offset of its header. */
+  private final case class PdfObj(num: Int, value: PVal, streamRaw: Array[Byte], offset: Int) {
+    def dict: PDict = PDict.of(value)
   }
 
-  /** Scan all indirect objects SEQUENTIALLY, jumping over each object's
-    * stream body before searching for the next `N G obj` — compressed stream
-    * bytes can contain anything, including phantom "12 0 obj" sequences, and
-    * a flat regex pass over the whole payload would pick those up. Stream
-    * data is located via a direct /Length when present, else by searching for
-    * "endstream". First definition of an object number wins. */
-  private def scanObjects(payload: Array[Byte], s: String): (Map[Int, PdfObj], Int) = {
+  /** A bare (non-dictionary) body is read only when it spans at most 64
+    * bytes (a scalar an indirect `/Rotate 9 0 R` resolves) or, for an array
+    * (an indirect `/Contents` target, §7.7.3.3), at most 4096. */
+  private def bareValue(b: Array[Byte], from: Int, until: Int): PVal =
+    if (until - from <= 64 || (b(from) == '[' && until - from <= 4096))
+      PdfValue.parse(b, from, until)
+    else null
+
+  /** Scan all indirect objects SEQUENTIALLY with the lexer, jumping over each
+    * object's stream body before looking for the next `N G obj` — compressed
+    * stream bytes can contain anything, including phantom "12 0 obj"
+    * sequences. Stream data is located via a direct /Length when present,
+    * else by searching for "endstream". First definition of an object number
+    * wins; a dictionary left open resumes the scan right after its `obj`. */
+  private def scanObjects(payload: Array[Byte]): (Map[Int, PdfObj], Int) = {
+    import PdfLexer._
     val out = scala.collection.mutable.LinkedHashMap.empty[Int, PdfObj]
-    val n = s.length
-    val m = objStartPat.matcher(s)
-    var pos = 0
-    while (pos < n && m.find(pos)) {
-      // toIntOption (the ObjStm-header idiom): an 11-digit pseudo object
-      // number must skip ITS definition only — `.toInt` would throw and the
-      // top-level NonFatal catch would void the whole document
-      val num = m.group(1).toIntOption.getOrElse(-1)
-      var i = m.end
-      var next = m.end // resume position for the next object search
-      while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
-      var dict = ""
-      var streamRaw: Array[Byte] = null
-      if (i + 1 < n && s.charAt(i) == '<' && s.charAt(i + 1) == '<') {
-        val de = dictEnd(s, i)
-        if (de > 0) {
-          dict = s.substring(i, de)
-          var j = de
-          next = de
-          while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-          if (s.startsWith("stream", j)) {
-            var ds = j + 6
-            if (ds < n && s.charAt(ds) == '\r') ds += 1
-            if (ds < n && s.charAt(ds) == '\n') ds += 1
-            val lenDirect = directInt(dict, "Length")
-            val end = lenDirect match {
-              case Some(len) if len <= n - ds && // subtraction form: no wrap
-                s.indexOf("endstream", ds + len) >= 0 => ds + len
-              case _ =>
-                val e = s.indexOf("endstream", ds)
-                if (e < 0) n
-                else { // trim the EOL that precedes "endstream"
-                  var t = e
-                  if (t > ds && s.charAt(t - 1) == '\n') t -= 1
-                  if (t > ds && s.charAt(t - 1) == '\r') t -= 1
-                  t
-                }
+    val n = payload.length
+    val lex = new PdfLexer(payload)
+    lex.betweenObjects = true
+    while (lex.next() != Eof) if (lex.kind == Num && lex.isNat) {
+      val num = lex.natInt
+      val offset = lex.start
+      if (lex.followedBy("obj")) {
+        val objEnd = lex.end
+        var value: PVal = null
+        var streamRaw: Array[Byte] = null
+        lex.betweenObjects = false
+        lex.skipWs()
+        val body = lex.pos
+        if (matchAt(payload, body, "<<")) {
+          lex.next()
+          value = PdfValue.read(lex)
+          if (value == null) lex.pos = objEnd
+          else {
+            lex.skipWs()
+            val j = lex.pos
+            if (matchAt(payload, j, "stream")) {
+              var ds = j + 6
+              if (ds < n && payload(ds) == '\r') ds += 1
+              if (ds < n && payload(ds) == '\n') ds += 1
+              val end = PDict.of(value).nat("Length") match {
+                case Some(len) if len <= n - ds && // subtraction form: no wrap
+                  indexOf(payload, "endstream", ds + len, n) >= 0 => ds + len
+                case _ =>
+                  val e = indexOf(payload, "endstream", ds, n)
+                  if (e < 0) n
+                  else { // trim the EOL that precedes "endstream"
+                    var t = e
+                    if (t > ds && payload(t - 1) == '\n') t -= 1
+                    if (t > ds && payload(t - 1) == '\r') t -= 1
+                    t
+                  }
+              }
+              streamRaw = java.util.Arrays.copyOfRange(payload, ds, end)
+              val es = indexOf(payload, "endstream", end, n)
+              lex.pos = if (es < 0) n else es + 9
             }
-            streamRaw = java.util.Arrays.copyOfRange(payload, ds, math.min(end, n))
-            val es = s.indexOf("endstream", math.min(end, n))
-            next = if (es < 0) n else es + 9
           }
+        } else { // a bare object `9 0 obj 90 endobj`: its body up to "endobj"
+          val eo = indexOf(payload, "endobj", body, n)
+          if (eo > body) value = bareValue(payload, body, eo)
+          lex.pos = objEnd
         }
-      } else if (i < n) {
-        // bare (non-dict) object — `9 0 obj 90 endobj` — capture the short
-        // body so indirect scalar values (e.g. /Rotate 9 0 R) can resolve;
-        // capped: a bare body longer than 64 chars is nothing we dereference
-        // — EXCEPT bare arrays (an indirect `/Contents 4 0 R` targets
-        // `[5 0 R 6 0 R …]`, legal per §7.7.3.3), which get a larger but
-        // still bounded budget
-        val eo = s.indexOf("endobj", i)
-        if (eo > i && (eo - i <= 64 || (s.charAt(i) == '[' && eo - i <= 4096)))
-          dict = s.substring(i, eo).trim
+        lex.betweenObjects = true
+        // an 11-digit pseudo object number (-1) skips ITS definition only
+        if (num >= 0 && !out.contains(num))
+          out += num -> PdfObj(num, if (value == null) PDict.empty else value, streamRaw, offset)
       }
-      if (num >= 0 && !out.contains(num))
-        out += num -> PdfObj(num, dict, streamRaw, m.start)
-      pos = math.max(next, m.end)
     }
     val objStmFailures = expandObjectStreams(out)
     (out.toMap, objStmFailures)
@@ -207,57 +173,36 @@ object RealPdf {
   /** PDF 1.5+ object streams (ISO 32000 §7.5.7): a `/Type /ObjStm` stream
     * holds N compressed non-stream objects, prefixed by N (objnum, offset)
     * integer pairs; offsets are relative to /First. Page dicts routinely live
-    * here, so without this pass a PDF 1.5 file parses as "no pages". The
-    * linear object scan makes xref streams unnecessary — ObjStm containers
-    * are FOUND by the scan itself and only their contents need expanding.
-    * Direct definitions win over ObjStm-contained ones (first-wins, matching
-    * the scan's own rule). */
+    * here. The scan finds the containers itself, so xref streams are never
+    * needed; direct definitions win over contained ones (first wins). */
   private def expandObjectStreams(
       out: scala.collection.mutable.LinkedHashMap[Int, PdfObj]): Int = {
     var failures = 0
-    val stms = out.values.filter(o => hasName(o.dict, "Type", "ObjStm")).toVector
-    for (stm <- stms) {
-      val dec = decodeStream(stm)
+    for (stm <- out.values.filter(_.dict.name("Type").contains("ObjStm")).toVector) {
+      val dec = decodeStream(stm, out.get)
       if (dec.failed) failures += 1 // a lost container loses its objects — flag it
-      if (!dec.failed && dec.data.nonEmpty) {
-        val s = byteView(dec.data)
-        val nObjs = directInt(stm.dict, "N").getOrElse(0)
-        val first = directInt(stm.dict, "First").getOrElse(0)
-        // header: N pairs of integers "objnum offset"
-        val pm = pat(raw"\d+").matcher(s.substring(0, math.min(first, s.length)))
+      val d = dec.data
+      if (!dec.failed && d.nonEmpty) {
+        val first = stm.dict.nat("First").getOrElse(0)
+        // header: N pairs "objnum offset"; an overflowed number (-1) skips
+        // ITS pair only, never a phantom object or a mis-aligned offset
+        val hl = new PdfLexer(d, 0, math.min(first, d.length))
         val header = Vector.newBuilder[Int]
-        while (pm.find()) header += pm.group.toIntOption.getOrElse(-1)
-        // an overflowed header integer (-1 sentinel) skips ITS pair only — it
-        // must not become a phantom object number or a mis-aligned offset
-        val pairs = header.result().grouped(2).collect {
-          case Vector(a, b) if a >= 0 && b >= 0 => (a, b)
-        }.take(nObjs).toVector
-        for ((num, off) <- pairs if !out.contains(num)) {
-          // parse from first+off against the FULL decoded body: ISO 32000 does
-          // not require in-stream offsets to be ascending, so bounding by the
-          // next header pair's offset would truncate a legal out-of-order
-          // ObjStm mid-dict. dictEnd is balanced, so over-scanning is safe.
+        while (hl.next() != PdfLexer.Eof) if (hl.kind == PdfLexer.Num) header += hl.natInt
+        val pairs = header.result().grouped(2).collect { case Vector(a, b) if a >= 0 && b >= 0 => (a, b) }
+        for ((num, off) <- pairs.take(stm.dict.nat("N").getOrElse(0)) if !out.contains(num)) {
+          // read against the FULL body (offsets need not ascend): a
+          // dictionary balanced, any other value under the bare-body bounds
           val start = first + off
-          if (start >= 0 && start < s.length) {
-            // contained objects are dicts/arrays/primitives — never streams.
-            // Only a dict WHOSE OWN first token is "<<" belongs to this object;
-            // a free search would run into the NEXT object's dict when this
-            // one is a primitive.
-            var t = start
-            while (t < s.length && Character.isWhitespace(s.charAt(t))) t += 1
-            val dict =
-              if (t + 1 < s.length && s.charAt(t) == '<' && s.charAt(t + 1) == '<') {
-                val de = dictEnd(s, t); if (de > 0) s.substring(t, de) else ""
-              } else {
-                // primitive body: capture the first token (bounded) so
-                // indirect scalars (/Rotate N 0 R etc.) resolve — the same
-                // bare-body rule as the top-level scan
-                var e = t
-                while (e < s.length && e - t < 64 &&
-                  !Character.isWhitespace(s.charAt(e))) e += 1
-                s.substring(t, e)
-              }
-            out += num -> PdfObj(num, dict, null, stm.offset)
+          if (start >= 0 && start < d.length) {
+            val lex = new PdfLexer(d, start, d.length)
+            lex.skipWs()
+            val t = lex.pos
+            val value =
+              if (PdfLexer.matchAt(d, t, "<<")) PdfValue.parse(d, t, d.length)
+              else if (t < d.length) bareValue(d, t, math.min(d.length, t + (if (d(t) == '[') 4096 else 64)))
+              else null
+            out += num -> PdfObj(num, if (value == null) PDict.empty else value, null, stm.offset)
           }
         }
       }
@@ -265,104 +210,54 @@ object RealPdf {
     failures
   }
 
-  // ------------------------------------------------------------ dict access
-
-  // dict keys come from a tiny fixed set, but the patterns embed the key —
-  // cache compiled patterns per key (compiling per call was 30% of PDF parse)
-  private val patCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
-  private def pat(p: String): java.util.regex.Pattern =
-    patCache.computeIfAbsent(p, java.util.regex.Pattern.compile(_))
-
-  private def firstGroup(p: String, dict: String): Option[String] = {
-    val m = pat(p).matcher(dict)
-    if (m.find()) Some(m.group(1)) else None
-  }
-
-  private def directInt(dict: String, key: String): Option[Int] =
-    // (?!\d) stops backtracking from shrinking the match: without it,
-    // `/Length 900 0 R` fails the indirect-ref lookahead at "900", then
-    // re-matches "90" (next char '0' is not whitespace, so the lookahead
-    // passes) and misreads the object number's prefix as a literal value
-    firstGroup(raw"/$key\s+(\d+)(?!\d)(?!\s+\d+\s+R)", dict).flatMap(_.toIntOption)
-
-  private def ref(dict: String, key: String): Option[Int] =
-    firstGroup(raw"/$key\s+(\d+)\s+\d+\s+R", dict).flatMap(_.toIntOption)
-
-  /** `/Key [a 0 R b 0 R …]` or the single-ref form. */
-  private def refArray(dict: String, key: String): Vector[Int] =
-    firstGroup(raw"/$key\s*\[([^\]]*)\]", dict) match {
-      case Some(body) =>
-        val m = pat(raw"(\d+)\s+\d+\s+R").matcher(body)
-        val out = Vector.newBuilder[Int]
-        while (m.find()) m.group(1).toIntOption.foreach(out += _)
-        out.result()
-      case None => ref(dict, key).toVector
-    }
-
-  private def hasName(dict: String, key: String, value: String): Boolean =
-    pat(raw"/$key\s*/$value\b").matcher(dict).find()
-
-  /** MediaBox [x0 y0 x1 y1] — numbers may be reals. */
-  private def mediaBox(dict: String): Option[(Double, Double)] = {
-    val m = pat(raw"/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)\s*\]")
-      .matcher(dict)
-    if (!m.find()) None
-    else
-      try Some((m.group(3).toDouble - m.group(1).toDouble,
-        m.group(4).toDouble - m.group(2).toDouble))
-      catch { case _: NumberFormatException => None }
-  }
-
   // ------------------------------------------------------------- page tree
+
+  private def isType(o: PdfObj, t: String): Boolean = o.dict.name("Type").contains(t)
+
+  /** `v`, or the value of the object it references (null when dangling). */
+  private def deref(v: PVal, resolve: Int => Option[PdfObj]): PVal = v match {
+    case PRef(n) => resolve(n).map(_.value).orNull
+    case other => other
+  }
 
   /** Pages in document order: catalog→Pages→Kids walk; fallback to /Type /Page
     * objects in object-number order when no catalog resolves. */
   private def pageObjects(objs: Map[Int, PdfObj]): Vector[PdfObj] = {
-    val viaTree: Vector[PdfObj] = {
-      val catalog = objs.values.find(o => hasName(o.dict, "Type", "Catalog"))
-      catalog.flatMap(c => ref(c.dict, "Pages")).map { rootNum =>
-        val out = Vector.newBuilder[PdfObj]
-        val seen = scala.collection.mutable.Set.empty[Int] // cycle guard
-        // explicit-stack DFS (preorder, kids pushed reversed = document
-        // order): a crafted 50k-deep /Kids chain in a KB-sized file would
-        // StackOverflowError a recursive walk — an Error no NonFatal catch
-        // contains, killing the task instead of degrading to pdf_unparsed
-        val stack = scala.collection.mutable.ArrayDeque(rootNum)
-        while (stack.nonEmpty) {
-          val num = stack.removeHead()
-          if (seen.add(num)) objs.get(num).foreach { o =>
-            if (hasName(o.dict, "Type", "Pages"))
-              refArray(o.dict, "Kids").reverseIterator.foreach(stack.prepend)
-            else if (hasName(o.dict, "Type", "Page")) out += o
-          }
+    val viaTree = objs.values.find(isType(_, "Catalog")).flatMap(_.dict.ref("Pages")).map { root =>
+      val out = Vector.newBuilder[PdfObj]
+      val seen = scala.collection.mutable.Set.empty[Int] // cycle guard
+      // explicit-stack DFS (preorder, kids pushed reversed = document
+      // order): a crafted 50k-deep /Kids chain would StackOverflowError a
+      // recursive walk, an Error no NonFatal catch contains
+      val stack = scala.collection.mutable.ArrayDeque(root)
+      while (stack.nonEmpty) {
+        val num = stack.removeHead()
+        if (seen.add(num)) objs.get(num).foreach { o =>
+          if (isType(o, "Pages")) o.dict.refs("Kids").reverseIterator.foreach(stack.prepend)
+          else if (isType(o, "Page")) out += o
         }
-        out.result()
-      }.getOrElse(Vector.empty)
-    }
+      }
+      out.result()
+    }.getOrElse(Vector.empty)
     if (viaTree.nonEmpty) viaTree
-    else objs.values.filter(o => hasName(o.dict, "Type", "Page")).toVector.sortBy(_.num)
+    else objs.values.filter(isType(_, "Page")).toVector.sortBy(_.num)
   }
 
   /** First defined value along the page→/Parent chain, ≤32 hops (cycle
     * cap) — the §7.7.3.4 inheritable-attribute walk shared by MediaBox /
     * Rotate / Resources (one loop, not three copies to keep in sync). */
   private def inherited[A](page: PdfObj, objs: Map[Int, PdfObj])
-                          (read: String => Option[A]): Option[A] = {
-    var cur: Option[PdfObj] = Some(page)
-    var hops = 0
-    while (cur.isDefined && hops < 32) {
-      read(cur.get.dict) match {
-        case some @ Some(_) => return some
-        case None => cur = ref(cur.get.dict, "Parent").flatMap(objs.get); hops += 1
-      }
-    }
-    None
-  }
+                          (read: PDict => Option[A]): Option[A] =
+    Iterator.iterate(Option(page))(_.flatMap(_.dict.ref("Parent").flatMap(objs.get)))
+      .take(32).takeWhile(_.isDefined).flatMap(o => read(o.get.dict)).nextOption()
 
-  /** MediaBox with /Parent inheritance (default US-Letter 612×792). */
+  /** MediaBox [x0 y0 x1 y1] (numbers may be reals) with /Parent inheritance
+    * (default US-Letter 612×792). */
   private def pageBox(page: PdfObj, objs: Map[Int, PdfObj]): (Double, Double) =
-    inherited(page, objs)(mediaBox).getOrElse((612.0, 792.0))
+    inherited(page, objs)(_.get("MediaBox") match {
+      case PArr(Vector(x0: PNum, y0: PNum, x1: PNum, y1: PNum)) => Some((x1.d - x0.d, y1.d - y0.d))
+      case _ => None
+    }).getOrElse((612.0, 792.0))
 
   /** /Rotate with /Parent inheritance (ISO 32000 §7.7.3.3) — the viewer's
     * clockwise display rotation in degrees, normalized to {0, 90, 180, 270};
@@ -371,23 +266,16 @@ object RealPdf {
     * (ppstructure/predict_system.py:112-125); here the analog is rotating
     * extracted geometry into upright coordinates before the XY-cut. */
   private def pageRotate(page: PdfObj, objs: Map[Int, PdfObj]): Int = {
-    def norm(v: String): Int =
-      v.toIntOption.map(r => ((r % 360) + 360) % 360).filter(_ % 90 == 0).getOrElse(0)
-    // the (?!…R) lookahead keeps an indirect `/Rotate n 0 R` from being
-    // misread as a literal n-degree rotation, and (?!\d) keeps regex
-    // backtracking from matching a prefix of the object number (same
-    // guards as directInt); the indirect form resolves through the
-    // target object's body, which must BE a bare integer — a dangling ref
-    // or object-number reuse pointing at a dict (`<< /Kids [90 0 R] >>`)
-    // must not surrender its first embedded integer as a rotation (a
-    // conforming viewer treats such a page as unrotated, spec default 0)
-    inherited(page, objs) { dict =>
-      firstGroup(raw"/Rotate\s+(-?\d+)(?!\d)(?!\s+\d+\s+R)", dict).map(norm)
-        .orElse(ref(dict, "Rotate").map(num =>
-          norm(objs.get(num)
-            .flatMap(o => firstGroup(raw"\A\s*(-?\d+)\s*\z", o.dict))
-            .getOrElse("0"))))
-    }.getOrElse(0)
+    def norm(v: PVal): Int = v match {
+      case PInt(r) if r.isValidInt && r % 90 == 0 => ((r.toInt % 360) + 360) % 360
+      case _ => 0
+    }
+    // an indirect `/Rotate n 0 R` target must BE a bare integer: a dict
+    // (`<< /Kids [90 0 R] >>`, object-number reuse) reads as the default 0
+    inherited(page, objs)(_.get("Rotate") match {
+      case v @ (_: PInt | _: PRef) => Some(norm(deref(v, objs.get)))
+      case _ => None
+    }).getOrElse(0)
   }
 
   // ---------------------------------------------------------------- streams
@@ -398,26 +286,32 @@ object RealPdf {
     * surface pdf_partial/pdf_unparsed (decode loss is never silent). */
   private[graft] final case class Decoded(data: Array[Byte], failed: Boolean)
 
-  private def decodeStream(o: PdfObj): Decoded = {
+  /** Undo a stream's /Filter: Flate or LZW, then the PNG/TIFF predictor of
+    * its /DecodeParms (§7.4.4.4, routine on ObjStm/XRef) — a dictionary, an
+    * array parallel to a /Filter array, or an indirect reference to either. */
+  private def decodeStream(o: PdfObj, resolve: Int => Option[PdfObj]): Decoded = {
     val raw = o.streamRaw
     if (raw == null) return Decoded(Array.emptyByteArray, failed = false)
-    val hasFilter = o.dict.contains("/Filter")
-    if (!hasFilter) return Decoded(raw, failed = false)
+    val filters = o.dict.get("Filter") match {
+      case null => return Decoded(raw, failed = false)
+      case PName(f) => Vector(f)
+      case PArr(items) => items.collect { case PName(f) => f }
+      case _ => Vector.empty
+    }
+    val fi = Seq("FlateDecode", "LZWDecode").map(filters.indexOf(_)).find(_ >= 0).getOrElse(-1)
+    if (fi < 0) return Decoded(Array.emptyByteArray, failed = true) // unsupported (DCT, …)
+    val parms = PDict.of(deref(o.dict.get("DecodeParms"), resolve) match {
+      case PArr(items) if fi < items.length => deref(items(fi), resolve)
+      case other => other
+    })
     val base =
-      if (o.dict.contains("/FlateDecode")) inflateStream(raw)
-      else if (o.dict.contains("/LZWDecode"))
-        lzwDecode(raw, directInt(o.dict, "EarlyChange").getOrElse(1))
-      else return Decoded(Array.emptyByteArray, failed = true) // unsupported (DCT, …)
-    // /DecodeParms PNG/TIFF predictors (§7.4.4.4) — routine on ObjStm/XRef
-    directInt(o.dict, "Predictor") match {
+      if (filters(fi) == "FlateDecode") inflateStream(raw)
+      else lzwDecode(raw, parms.nat("EarlyChange").getOrElse(1))
+    parms.nat("Predictor") match {
       case Some(pred) if pred >= 2 && !base.failed =>
-        applyPredictor(base.data, pred,
-          directInt(o.dict, "Columns").getOrElse(1),
-          directInt(o.dict, "Colors").getOrElse(1),
-          directInt(o.dict, "BitsPerComponent").getOrElse(8)) match {
-          case Some(d) => Decoded(d, failed = false)
-          case None => Decoded(Array.emptyByteArray, failed = true)
-        }
+        applyPredictor(base.data, pred, parms.nat("Columns").getOrElse(1),
+          parms.nat("Colors").getOrElse(1), parms.nat("BitsPerComponent").getOrElse(8))
+          .map(Decoded(_, failed = false)).getOrElse(Decoded(Array.emptyByteArray, failed = true))
       case _ => base
     }
   }
@@ -586,36 +480,24 @@ object RealPdf {
   private[graft] final case class ToUnicode(codeBytes: Int, map: Map[Int, String])
 
   /** Per-font byte→text decoder, resolved once per font object:
-    *  - [[CMapDec]]: the font has a /ToUnicode CMap (§9.10.3) — authoritative.
-    *  - [[TableDec]]: a simple font with `/Encoding /WinAnsiEncoding` (or
-    *    MacRoman/Standard, or an /Encoding dict with /Differences) — codes
-    *    route through the 256-entry table (ISO 32000-1 Appendix D, see
-    *    [[Encodings]]); null slots keep the Latin-ish fallback char.
-    *  - [[CidCmapDec]]: a composite (Type0, Identity-H) font WITHOUT
-    *    /ToUnicode whose embedded font program (/FontFile2) carries a
-    *    parsable Unicode cmap — glyph ids reverse through it to text
-    *    ([[TrueTypeCmap]]); gids absent from the cmap are dropped + counted.
-    *  - [[CidNoMapDec]]: a composite (Type0) font with NEITHER /ToUnicode
-    *    nor a usable embedded cmap — show bytes are 2-byte glyph ids with no
-    *    recoverable text; shows are dropped and counted (→ pdf_partial),
-    *    never emitted as mojibake.
-    * A font with none of the above gets no entry (Latin-ish fallback, the
-    * pre-existing behavior). */
+    *  - [[CMapDec]]: the font's /ToUnicode CMap (§9.10.3) — authoritative.
+    *  - [[TableDec]]: a simple font's 256-entry /Encoding table (WinAnsi,
+    *    MacRoman, Standard, /Differences; [[Encodings]]); null slots keep the
+    *    Latin-ish fallback char.
+    *  - [[CidCmapDec]]: a Type0 (Identity-H) font without /ToUnicode whose
+    *    /FontFile2 carries a Unicode cmap ([[TrueTypeCmap]]); gids absent
+    *    from it are dropped + counted.
+    *  - [[CidNoMapDec]]: a Type0 font with neither — glyph ids with no
+    *    recoverable text, dropped and counted (→ pdf_partial), never mojibake.
+    * Any other font gets no entry (the Latin-ish fallback). */
   private[graft] sealed trait FontDec
   private[graft] final case class CMapDec(tu: ToUnicode) extends FontDec
   private[graft] final case class TableDec(table: Array[String]) extends FontDec
   private[graft] final case class CidCmapDec(rev: Map[Int, String]) extends FontDec
   private[graft] case object CidNoMapDec extends FontDec
 
-  // (?s): CMap sections span lines
-  private val bfCharPat = pat("(?s)beginbfchar(.*?)endbfchar")
-  private val bfRangePat = pat("(?s)beginbfrange(.*?)endbfrange")
-  private val codeSpacePat = pat(raw"begincodespacerange\s*<([0-9A-Fa-f]+)>")
-
-  /** Bounded hex→int for CMap code keys: −1 for anything longer than 6
-    * digits (codespaces are at most 2 bytes here; an absurd key like
-    * <FFFFFFFFFFFFFFFF> must skip the ENTRY, not throw out of parse() and
-    * downgrade the whole document to pdf_unparsed). */
+  /** Bounded hex→int for CMap code keys: −1 past 6 digits, so an absurd key
+    * like <FFFFFFFFFFFFFFFF> skips its ENTRY, never the document. */
   private def hexToInt(h: String): Int =
     if (h.isEmpty || h.length > 6) -1 else java.lang.Long.parseLong(h, 16).toInt
 
@@ -624,82 +506,70 @@ object RealPdf {
     * <41> meaning U+0041 — right-padding would turn it into U+4100. */
   private def hexToUtf16(h: String): String = {
     val padded = if (h.length % 4 == 0) h else "0" * (4 - h.length % 4) + h
-    val bytes = new Array[Byte](padded.length / 2)
-    var i = 0
-    while (i < bytes.length) {
-      bytes(i) = ((Character.digit(padded.charAt(2 * i), 16) << 4) |
-        Character.digit(padded.charAt(2 * i + 1), 16)).toByte
-      i += 1
-    }
-    new String(bytes, StandardCharsets.UTF_16BE)
+    new String(PdfLexer.hexBytes(padded), StandardCharsets.UTF_16BE)
+  }
+
+  /** A CMap hex operand: its digits when the string holds nothing else. */
+  private def cmapHex(v: PVal): String = v match {
+    case PHex(h) if h.nonEmpty && h.forall(Character.digit(_, 16) >= 0) => h
+    case _ => null
   }
 
   /** Parse one /ToUnicode CMap stream (text form): codespace width,
     * bfchar pairs, bfrange runs (increment and array destination forms).
-    * Range materialization is capped at 64k codes (the single-codespace
-    * maximum) so a corrupt range cannot balloon memory. */
+    * bfchar entries apply before bfrange entries, so a code in both takes
+    * its range mapping. Range materialization is capped at 64k codes (the
+    * single-codespace maximum) so a corrupt range cannot balloon memory. */
   private[graft] def parseToUnicode(data: Array[Byte]): Option[ToUnicode] = {
     if (data == null || data.isEmpty) return None
-    val s = byteView(data)
     val m = scala.collection.mutable.HashMap.empty[Int, String]
     var keyHexLen = 0
-
-    val cm = bfCharPat.matcher(s)
-    while (cm.find()) {
-      val body = cm.group(1)
-      val tm = pat(raw"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>").matcher(body)
-      while (tm.find()) {
-        val key = hexToInt(tm.group(1))
-        if (key >= 0) {
-          keyHexLen = math.max(keyHexLen, tm.group(1).length)
-          m += key -> hexToUtf16(tm.group(2))
-        }
+    def key(h: String): Int = { // −1 = absurd key: skip the entry
+      val k = hexToInt(h)
+      if (k >= 0) keyHexLen = math.max(keyHexLen, h.length)
+      k
+    }
+    val ranges = Vector.newBuilder[(String, String, PVal)]
+    var codeSpace: String = null
+    var section = ""
+    val ops = scala.collection.mutable.ArrayBuffer.empty[PVal] // pending operands
+    val lex = new PdfLexer(data)
+    while (lex.next() != PdfLexer.Eof) {
+      if (lex.kind == PdfLexer.Kw) { section = lex.text; ops.clear() }
+      else if (section == "begincodespacerange") {
+        if (codeSpace == null) codeSpace = cmapHex(PdfValue.read(lex))
+        section = ""
+      } else if (section == "beginbfchar" || section == "beginbfrange") {
+        val v = PdfValue.read(lex)
+        if (cmapHex(v) == null && !(v.isInstanceOf[PArr] && ops.length == 2)) ops.clear()
+        else ops += v
+        if (section == "beginbfchar" && ops.length == 2) {
+          val k = key(cmapHex(ops(0)))
+          if (k >= 0) m += k -> hexToUtf16(cmapHex(ops(1)))
+          ops.clear()
+        } else if (ops.length == 3) { ranges += ((cmapHex(ops(0)), cmapHex(ops(1)), ops(2))); ops.clear() }
       }
     }
-    val rm = bfRangePat.matcher(s)
-    while (rm.find()) {
-      val body = rm.group(1)
-      // <lo> <hi> then either <dstStart> or [<dst1> <dst2> …]
-      val tm = pat(raw"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*(<[0-9A-Fa-f]+>|\[(?:\s*<[0-9A-Fa-f]+>)+\s*\])")
-        .matcher(body)
-      while (tm.find()) {
-        val lo = hexToInt(tm.group(1))
-        val hi0 = hexToInt(tm.group(2)) // −1 = absurd key: skip the range
+    for ((l, h, dst) <- ranges.result()) {
+      val hi0 = hexToInt(h)
+      val arr = dst match {
+        case PArr(items) => items.map(cmapHex)
+        case _ => null
+      }
+      if (hexToInt(l) >= 0 && hi0 >= 0 && (arr == null || (arr.nonEmpty && !arr.contains(null)))) {
+        val lo = key(l)
         val hi = math.min(hi0, lo + 0xFFFF)
-        val dst = tm.group(3)
-        if (lo >= 0 && hi0 >= 0) {
-          keyHexLen = math.max(keyHexLen, tm.group(1).length)
-          if (dst.startsWith("[")) {
-            val dm = pat(raw"<([0-9A-Fa-f]+)>").matcher(dst)
-            var code = lo
-            while (dm.find() && code <= hi) {
-              m += code -> hexToUtf16(dm.group(1))
-              code += 1
-            }
-          } else {
-            val d0 = dst.substring(1, dst.length - 1)
-            // increment form: the LAST UTF-16 unit increments per code (§9.10.3)
-            val base = hexToUtf16(d0)
-            var code = lo
-            while (code <= hi) {
-              val delta = code - lo
-              val repl =
-                if (base.isEmpty) ""
-                else base.substring(0, base.length - 1) +
-                  (base.charAt(base.length - 1) + delta).toChar
-              m += code -> repl
-              code += 1
-            }
-          }
+        if (arr != null) for ((d, code) <- arr.zip(lo to hi)) m += code -> hexToUtf16(d)
+        else { // increment form: the LAST UTF-16 unit increments per code (§9.10.3)
+          val base = hexToUtf16(cmapHex(dst))
+          for (code <- lo to hi) m += code -> (if (base.isEmpty) "" else
+            base.substring(0, base.length - 1) + (base.charAt(base.length - 1) + (code - lo)).toChar)
         }
       }
     }
     if (m.isEmpty) return None
-    val csm = codeSpacePat.matcher(s)
-    val codeBytes =
-      if (csm.find()) math.max(1, csm.group(1).length / 2)
-      else math.max(1, (keyHexLen + 1) / 2)
-    Some(ToUnicode(codeBytes, m.toMap))
+    Some(ToUnicode(math.max(1, if (codeSpace != null) codeSpace.length / 2 else (keyHexLen + 1) / 2),
+      m.toMap))
   }
 
   /** Map a byte-char show string (Latin-1 view: char code == byte) through a
@@ -709,23 +579,16 @@ object RealPdf {
     * it keeps the fallback char directly. */
   private def applyToUnicode(raw: String, tu: ToUnicode): String = {
     val sb = new java.lang.StringBuilder(raw.length)
+    val two = tu.codeBytes == 2
     var i = 0
-    val n = raw.length
-    while (i < n) {
-      if (tu.codeBytes == 2 && i + 1 >= n) { // truncated final code: fallback only
-        sb.append(raw.charAt(i))
-        i += 1
-      } else {
-        val code =
-          if (tu.codeBytes == 2) (raw.charAt(i) << 8) | raw.charAt(i + 1)
-          else raw.charAt(i).toInt
-        val step = if (tu.codeBytes == 2) 2 else 1
-        tu.map.get(code) match {
-          case Some(repl) => sb.append(repl)
-          case None => if (step == 2) sb.append(raw, i, i + 2) else sb.append(raw.charAt(i))
-        }
-        i += step
+    while (i < raw.length) {
+      val step = if (two && i + 1 < raw.length) 2 else 1
+      val code = if (step == 2) (raw.charAt(i) << 8) | raw.charAt(i + 1) else raw.charAt(i).toInt
+      tu.map.get(code) match {
+        case Some(repl) if step == 2 || !two => sb.append(repl)
+        case _ => sb.append(raw, i, i + step) // unmapped or a lone trailing byte
       }
+      i += step
     }
     sb.toString
   }
@@ -734,79 +597,6 @@ object RealPdf {
 
   private[graft] final case class Chunk(x: Double, y: Double, size: Double, text: String)
 
-  /** Parse a literal string starting at `i0` (s(i0) == '('): returns the
-    * decoded text and the index just past the closing ')'. Handles nesting,
-    * the standard escapes, octal escapes, and line continuations. */
-  private def parseLiteral(s: String, i0: Int): (String, Int) = {
-    val n = s.length
-    val sb = new java.lang.StringBuilder()
-    var depth = 1
-    var i = i0 + 1
-    while (i < n && depth > 0) {
-      val sc = s.charAt(i)
-      if (sc == '\\' && i + 1 < n) {
-        val e = s.charAt(i + 1)
-        e match {
-          case 'n' => sb.append('\n'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'b' => sb.append('\b'); i += 2
-          case 'f' => sb.append('\f'); i += 2
-          case '(' => sb.append('('); i += 2
-          case ')' => sb.append(')'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case '\r' => i += 2; if (i < n && s.charAt(i) == '\n') i += 1 // line continuation
-          case '\n' => i += 2
-          case d if d >= '0' && d <= '7' => // octal, up to 3 digits
-            var v = 0; var k = 0; i += 1
-            while (k < 3 && i < n && s.charAt(i) >= '0' && s.charAt(i) <= '7') {
-              v = v * 8 + (s.charAt(i) - '0'); i += 1; k += 1
-            }
-            sb.append((v & 0xff).toChar)
-          case other => sb.append(other); i += 2
-        }
-      } else {
-        if (sc == '(') depth += 1
-        else if (sc == ')') { depth -= 1; if (depth == 0) { i += 1 } }
-        if (depth > 0) { sb.append(sc); i += 1 }
-      }
-    }
-    (sb.toString, i)
-  }
-
-  /** Parse a hex string starting at `i0` (s(i0) == '<', not "<<"): returns
-    * (decoded text or null if malformed, index past the closing '>', and
-    * whether the bytes were BOM'd UTF-16BE — already Unicode, so the
-    * /ToUnicode map must NOT apply). Non-BOM bytes decode as Latin-ish byte
-    * chars (char code == byte), the representation applyToUnicode expects. */
-  private def parseHex(s: String, i0: Int): (String, Int, Boolean) = {
-    val n = s.length
-    val e = s.indexOf('>', i0 + 1)
-    val body = if (e < 0) s.substring(i0 + 1) else s.substring(i0 + 1, e)
-    val next = if (e < 0) n else e + 1
-    val hex = body.filterNot(Character.isWhitespace)
-    val padded = if (hex.length % 2 == 1) hex + "0" else hex
-    val bytes = new Array[Byte](padded.length / 2)
-    var k = 0
-    while (k < bytes.length) {
-      val hi = Character.digit(padded.charAt(2 * k), 16)
-      val lo = Character.digit(padded.charAt(2 * k + 1), 16)
-      if (hi < 0 || lo < 0) return (null, next, false)
-      bytes(k) = ((hi << 4) | lo).toByte
-      k += 1
-    }
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)
-      (new String(bytes, 2, bytes.length - 2, StandardCharsets.UTF_16BE), next, true)
-    else (new String(bytes, StandardCharsets.ISO_8859_1), next, false)
-  }
-
-  /** Tokenize a content stream and emit one Chunk per text-showing operator,
-    * positioned by the (subset) text state machine. `fonts` carries each
-    * resource font's byte→text decoder ([[FontDec]]); `Tf` switches the
-    * active decoder and show strings route through it (a font without an
-    * entry keeps the Latin-ish fallback — exactly the old behavior). Returns
-    * the chunks plus the count of shows dropped through a CID font with no
-    * /ToUnicode (the pdf_partial signal). */
   /** An XObject drawn by the content stream: `name` (the /Resources /XObject
     * key) + the bbox of the unit square through the CTM at the `Do` operator,
     * in PDF (bottom-up) coordinates. */
@@ -816,10 +606,14 @@ object RealPdf {
   private[graft] final case class ChunkScan(chunks: Vector[Chunk], unmapped: Int,
                                             places: Vector[ImagePlace])
 
+  /** Tokenize a content stream and emit one Chunk per text-showing operator,
+    * positioned by the (subset) text state machine; `Tf` selects the font
+    * decoder ([[FontDec]]) shows route through (none: Latin-ish fallback).
+    * Also counts shows dropped through a CID font with no /ToUnicode (the
+    * pdf_partial signal) and records image placements. */
   private[graft] def extractChunks(data: Array[Byte],
                                    fonts: Map[String, FontDec] = Map.empty): ChunkScan = {
-    val s = byteView(data)
-    val n = s.length
+    import PdfLexer._
     val out = Vector.newBuilder[Chunk]
     // operand stack (only the tail matters per operator)
     val nums = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -837,114 +631,71 @@ object RealPdf {
     val gsStack = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
     val places = Vector.newBuilder[ImagePlace]
 
-    def clear(): Unit = { nums.clear(); strs.clear() }
-    // mapping happens at operand-PUSH time: operands cannot outlive their
-    // operator (every op clears the stack), so the font at push == the font
-    // at show; and TJ kern spaces are inserted into already-mapped text,
-    // which keeps 2-byte code alignment intact
+    // mapping happens at operand-PUSH time: every op clears the stack, so
+    // the font at push is the font at show, and TJ kern spaces go into
+    // already-mapped text (2-byte code alignment stays intact)
     def mapStr(t: String): String = curDec match {
       case null => t
       case CMapDec(tu) => applyToUnicode(t, tu)
       case TableDec(tab) =>
         val sb = new java.lang.StringBuilder(t.length)
-        var k = 0
-        while (k < t.length) {
-          val c = t.charAt(k)
-          val repl = if (c < 256) tab(c) else null
-          if (repl != null) sb.append(repl) else sb.append(c)
-          k += 1
-        }
+        t.foreach { c => val r = if (c < 256) tab(c) else null; if (r != null) sb.append(r) else sb.append(c) }
         sb.toString
       case CidCmapDec(rev) =>
         // 2-byte glyph ids reversed through the embedded font cmap; a gid
         // the cmap doesn't cover drops (+flag), never mojibake
         val sb = new java.lang.StringBuilder(t.length / 2)
-        var dropped = false
-        var k = 0
-        while (k + 1 < t.length) {
-          val code = (t.charAt(k) << 8) | (t.charAt(k + 1) & 0xff)
-          rev.get(code) match {
-            case Some(txt) => sb.append(txt)
-            case None => dropped = true
-          }
-          k += 2
+        var dropped = t.length % 2 == 1 // an odd trailing byte: malformed show
+        for (k <- 0 until t.length - 1 by 2) rev.get((t.charAt(k) << 8) | (t.charAt(k + 1) & 0xff)) match {
+          case Some(txt) => sb.append(txt)
+          case None => dropped = true
         }
-        if (k < t.length) dropped = true // odd trailing byte: malformed show
         if (dropped) unmapped += 1
         sb.toString
       case CidNoMapDec => // glyph ids, no mapping: drop + flag, never mojibake
         if (t.nonEmpty) unmapped += 1
         ""
     }
+    // the current string token through the active font (null: malformed);
+    // BOM'd UTF-16BE hex is already Unicode and skips the font map, other
+    // bytes read as Latin-ish byte chars (char code == byte)
+    def shown(lex: PdfLexer): String =
+      if (lex.kind == Str) mapStr(lex.literal)
+      else PdfLexer.hexBytes(lex.hexRaw) match {
+        case null => null
+        case b if b.length >= 2 && (b(0) & 0xff) == 0xfe && (b(1) & 0xff) == 0xff =>
+          new String(b, 2, b.length - 2, StandardCharsets.UTF_16BE)
+        case b => mapStr(new String(b, StandardCharsets.ISO_8859_1))
+      }
     def show(text: String): Unit =
       if (inText && text.nonEmpty) out += Chunk(lineX, lineY, fontSize, text)
 
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '%') { // comment to EOL
-        while (i < n && s.charAt(i) != '\n' && s.charAt(i) != '\r') i += 1
-      } else if (c == '(') { // literal string
-        val (text, ni) = parseLiteral(s, i)
-        i = ni
-        strs += mapStr(text)
-      } else if (c == '<' && i + 1 < n && s.charAt(i + 1) != '<') { // hex string
-        val (str, ni, wasUnicode) = parseHex(s, i)
-        i = ni
-        if (str != null) strs += (if (wasUnicode) str else mapStr(str))
-      } else if (c == '<' && i + 1 < n && s.charAt(i + 1) == '<') { // inline dict (e.g. BDC)
-        val de = dictEnd(s, i); i = if (de < 0) n else de
-      } else if (c == '[') { // array of strings/kerns → TJ operand (kern < -100 ⇒ space)
+    val lex = new PdfLexer(data)
+    while (lex.next() != Eof) lex.kind match {
+      case Str | Hex => val t = shown(lex); if (t != null) strs += t
+      case DictOpen => PdfValue.read(lex) // inline dict (e.g. BDC properties)
+      case ArrOpen =>
+        // a TJ operand: strings and kerns up to the first ']' (kern < -100 ⇒
+        // space), one flat array whatever its nesting; bounded per array
         val sb = new java.lang.StringBuilder()
-        i += 1
         var pendingKernSpace = false
-        var depthGuard = 0
-        while (i < n && s.charAt(i) != ']' && depthGuard < 1000000) {
-          depthGuard += 1
-          val ac = s.charAt(i)
-          if (ac == '(') {
-            val (text, ni) = parseLiteral(s, i)
-            i = ni
-            if (pendingKernSpace && sb.length() > 0) sb.append(' ')
-            pendingKernSpace = false
-            sb.append(mapStr(text))
-          } else if (ac == '<') {
-            // hex strings inside TJ arrays — the standard form most PDF
-            // writers emit ([<0041> -250 <0042>] TJ)
-            val (text, ni, wasUnicode) = parseHex(s, i)
-            i = ni
-            if (text != null) {
+        var guard = 0
+        while (lex.next() != Eof && lex.kind != ArrClose && guard < 1000000) {
+          guard += 1
+          if (lex.kind == Str || lex.kind == Hex) {
+            val t = shown(lex)
+            if (t != null) {
               if (pendingKernSpace && sb.length() > 0) sb.append(' ')
               pendingKernSpace = false
-              sb.append(if (wasUnicode) text else mapStr(text))
+              sb.append(t)
             }
-          } else if (ac == '-' || ac == '+' || ac == '.' || (ac >= '0' && ac <= '9')) {
-            val ns = i
-            i += 1
-            while (i < n && { val d = s.charAt(i); d == '.' || (d >= '0' && d <= '9') }) i += 1
-            try { if (s.substring(ns, i).toDouble < -100.0) pendingKernSpace = true }
-            catch { case _: NumberFormatException => () }
-          } else i += 1
+          } else if (lex.kind == Num && lex.num < -100.0) pendingKernSpace = true
         }
-        if (i < n) i += 1 // ']'
         strs += sb.toString
-      } else if (c == '/') { // name — remember it (Tf's font operand)
-        val ns = i + 1
-        i += 1
-        while (i < n && !isDelim(s.charAt(i))) i += 1
-        lastName = s.substring(ns, i)
-      } else if (c == '-' || c == '+' || c == '.' || (c >= '0' && c <= '9')) {
-        val ns = i
-        i += 1
-        while (i < n && { val d = s.charAt(i); d == '.' || (d >= '0' && d <= '9') }) i += 1
-        try nums += s.substring(ns, i).toDouble
-        catch { case _: NumberFormatException => () }
-      } else if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '\'' || c == '"' || c == '*') {
-        val os = i
-        i += 1
-        while (i < n && !isDelim(s.charAt(i))) i += 1
-        val op = s.substring(os, i)
-        op match {
+      case Name => lastName = lex.text
+      case Num => val v = lex.num; if (!v.isNaN) nums += v
+      case Kw =>
+        lex.text match {
           // §9.4.1: BT resets the text matrices only — TL (leading) is TEXT
           // STATE that persists across BT/ET like fontSize/curDec do; a
           // `12 TL` in one text object governs `'`/`T*` in the next
@@ -960,20 +711,15 @@ object RealPdf {
           }
           case "Tm" => if (nums.length >= 6) { lineX = nums(nums.length - 2); lineY = nums.last }
           case "T*" => lineY -= leading
-          case "Tj" => if (strs.nonEmpty) show(strs.last)
-          case "TJ" => if (strs.nonEmpty) show(strs.last)
-          case "'" => lineY -= leading; if (strs.nonEmpty) show(strs.last)
-          case "\"" => lineY -= leading; if (strs.nonEmpty) show(strs.last)
+          case "Tj" | "TJ" => if (strs.nonEmpty) show(strs.last)
+          case "'" | "\"" => lineY -= leading; if (strs.nonEmpty) show(strs.last)
           case "BI" => // inline image: skip to EI AS A STANDALONE TOKEN —
-            // the raw pixel bytes after ID can contain the pair 'EI', and
-            // resuming mid-image tokenizes binary garbage (phantom '('
-            // opens a string, stray letters form operators → mojibake)
-            var e = s.indexOf("EI", i)
-            while (e > 0 && !(Character.isWhitespace(s.charAt(e - 1)) &&
-                (e + 2 >= n || isDelim(s.charAt(e + 2)) ||
-                  Character.isWhitespace(s.charAt(e + 2)))))
-              e = s.indexOf("EI", e + 1)
-            i = if (e < 0) n else e + 2
+            // the pixel bytes after ID can hold the pair 'EI' (mojibake)
+            var e = indexOf(data, "EI", lex.pos, data.length)
+            while (e > 0 && !(isWs(data(e - 1) & 0xff) &&
+                (e + 2 >= data.length || isDelimOrWs(data(e + 2) & 0xff))))
+              e = indexOf(data, "EI", e + 1, data.length)
+            lex.pos = if (e < 0) data.length else e + 2
           case "q" => gsStack += ctm.clone()
           case "Q" => if (gsStack.nonEmpty) ctm = gsStack.remove(gsStack.length - 1)
           case "cm" => if (nums.length >= 6) {
@@ -1005,15 +751,11 @@ object RealPdf {
           }
           case _ => ()
         }
-        clear()
-      } else i += 1
+        nums.clear(); strs.clear()
+      case _ => () // a stray ')', '>', ']', '{' or '}'
     }
     ChunkScan(out.result(), unmapped, places.result())
   }
-
-  @inline private def isDelim(c: Char): Boolean =
-    Character.isWhitespace(c) || c == '(' || c == ')' || c == '<' || c == '>' ||
-      c == '[' || c == ']' || c == '{' || c == '}' || c == '/' || c == '%'
 
   // --------------------------------------------- chunks → lines → blocks
 
@@ -1088,14 +830,35 @@ object RealPdf {
   // -------------------------------------------------------- font resources
 
   /** A dict-valued entry: inline `<< … >>` or an indirect reference. */
-  private def subDict(dict: String, key: String, objs: Map[Int, PdfObj]): Option[String] = {
-    val m = pat(raw"/" + key + raw"\s*<<").matcher(dict)
-    if (m.find()) {
-      val start = m.end - 2
-      val de = dictEnd(dict, start)
-      if (de > 0) return Some(dict.substring(start, de))
-    }
-    ref(dict, key).flatMap(objs.get).map(_.dict).filter(_.nonEmpty)
+  private def subDict(dict: PDict, key: String, objs: Map[Int, PdfObj]): Option[PDict] =
+    Some(deref(dict.get(key), objs.get)).collect { case d: PDict => d }
+
+  /** The `/Name N 0 R` entries of a resource subdictionary, in dict order. */
+  private def refEntries(dict: PDict, objs: Map[Int, PdfObj]): Vector[(String, PdfObj)] =
+    dict.entries.collect { case (name, PRef(n)) if objs.contains(n) => name -> objs(n) }
+
+  /** Identity-H recovery: /DescendantFonts → /FontDescriptor → /FontFile2
+    * → the embedded TrueType cmap, reversed gid → text ([[TrueTypeCmap]]),
+    * valid only under /CIDToGIDMap /Identity (the default); anything else
+    * falls back to the honest drop-and-flag [[CidNoMapDec]]. */
+  private def cidDec(fontDict: PDict, objs: Map[Int, PdfObj],
+      ttCache: scala.collection.mutable.HashMap[Int, Option[Map[Int, String]]]): FontDec = {
+    val rev = fontDict.refs("DescendantFonts").headOption
+      .flatMap(objs.get).flatMap { d =>
+        val gidIdentity = d.dict.get("CIDToGIDMap") == null ||
+          d.dict.name("CIDToGIDMap").contains("Identity")
+        if (!gidIdentity) None
+        else d.dict.ref("FontDescriptor").flatMap(objs.get).flatMap { fd =>
+          fd.dict.ref("FontFile2").flatMap { ffNum =>
+            // font programs are shared across pages: parse each once per doc
+            ttCache.getOrElseUpdate(ffNum, objs.get(ffNum).flatMap { ff =>
+              val dec = decodeStream(ff, objs.get)
+              if (dec.failed) None else TrueTypeCmap.gidToText(dec.data)
+            })
+          }
+        }
+      }
+    rev.map(CidCmapDec.apply).getOrElse(CidNoMapDec)
   }
 
   /** Resolve one font object's decoder when it has NO /ToUnicode CMap:
@@ -1106,49 +869,20 @@ object RealPdf {
     *    indirect ref) → base table (Standard when unnamed — the spec default
     *    for non-symbolic Type1) overlaid with the Differences;
     *  - anything else → None (Latin-ish fallback, the pre-existing path). */
-  /** Identity-H recovery: /DescendantFonts → /FontDescriptor → /FontFile2
-    * → the embedded TrueType cmap, reversed gid → text ([[TrueTypeCmap]]).
-    * Valid only under /CIDToGIDMap /Identity (the default — then the CID in
-    * the show string IS the gid the cmap indexes); a stream-valued
-    * CIDToGIDMap, a missing/undecodable font file, or an unparsable cmap
-    * falls back to the honest drop-and-flag [[CidNoMapDec]]. */
-  private def cidDec(fontDict: String, objs: Map[Int, PdfObj],
-      ttCache: scala.collection.mutable.HashMap[Int, Option[Map[Int, String]]]): FontDec = {
-    val rev = refArray(fontDict, "DescendantFonts").headOption
-      .flatMap(objs.get).flatMap { d =>
-        val gidIdentity = !d.dict.contains("/CIDToGIDMap") ||
-          hasName(d.dict, "CIDToGIDMap", "Identity")
-        if (!gidIdentity) None
-        else ref(d.dict, "FontDescriptor").flatMap(objs.get).flatMap { fd =>
-          ref(fd.dict, "FontFile2").flatMap { ffNum =>
-            // font programs are shared across pages: parse each once per doc
-            ttCache.getOrElseUpdate(ffNum, objs.get(ffNum).flatMap { ff =>
-              val dec = decodeStream(ff)
-              if (dec.failed) None else TrueTypeCmap.gidToText(dec.data)
-            })
-          }
-        }
-      }
-    rev.map(CidCmapDec.apply).getOrElse(CidNoMapDec)
-  }
-
-  private def encodingDec(fontDict: String, objs: Map[Int, PdfObj],
+  private def encodingDec(fontDict: PDict, objs: Map[Int, PdfObj],
       ttCache: scala.collection.mutable.HashMap[Int, Option[Map[Int, String]]])
       : Option[FontDec] = {
-    if (hasName(fontDict, "Subtype", "Type0"))
+    if (fontDict.name("Subtype").contains("Type0"))
       return Some(cidDec(fontDict, objs, ttCache))
-    // dict form FIRST: an inline `/Encoding << /Type /Encoding … >>` contains
-    // "/Encoding /BaseEncoding" text the name-form regex would false-match
     subDict(fontDict, "Encoding", objs) match {
       case Some(enc) =>
-        val base = firstGroup(raw"/BaseEncoding\s*/([A-Za-z0-9-]+)", enc)
-          .flatMap(Encodings.baseTable).getOrElse(Encodings.standard)
-        Some(firstGroup(raw"/Differences\s*\[([^\]]*)\]", enc) match {
-          case Some(body) => TableDec(Encodings.withDifferences(base, body))
-          case None => TableDec(base)
+        val base = enc.name("BaseEncoding").flatMap(Encodings.baseTable).getOrElse(Encodings.standard)
+        Some(enc.get("Differences") match {
+          case PArr(items) => TableDec(Encodings.withDifferences(base, items))
+          case _ => TableDec(base)
         })
       case None =>
-        firstGroup(raw"/Encoding\s*/([A-Za-z0-9-]+)", fontDict) match {
+        fontDict.name("Encoding") match {
           case Some(name) if name.startsWith("Identity") => Some(CidNoMapDec)
           case Some(name) => Encodings.baseTable(name).map(TableDec.apply)
           case None => None
@@ -1156,61 +890,37 @@ object RealPdf {
     }
   }
 
-  /** Per-page font-name → decoder map: /Resources (with /Parent inheritance)
-    * → /Font → each `/Fn N 0 R` entry → the font's /ToUnicode CMap stream
-    * (authoritative) or its /Encoding tables ([[encodingDec]]). Fonts with
-    * neither simply don't appear (their shows keep the Latin-ish fallback). */
   /** The page's /Resources dict (inline or indirect), inherited through
     * /Parent like MediaBox (ISO 32000 §7.7.3.4). */
-  private def pageResources(page: PdfObj, objs: Map[Int, PdfObj]): Option[String] =
+  private def pageResources(page: PdfObj, objs: Map[Int, PdfObj]): Option[PDict] =
     inherited(page, objs)(subDict(_, "Resources", objs))
 
   /** Per-page image XObjects: /Resources → /XObject → each `/Name N 0 R`
     * entry whose object is `/Subtype /Image`, in dict order. */
   private def pageImageObjs(page: PdfObj, objs: Map[Int, PdfObj]): Vector[(String, PdfObj)] =
-    pageResources(page, objs).flatMap(subDict(_, "XObject", objs)) match {
-      case None => Vector.empty
-      case Some(xd) =>
-        val m = pat(raw"/([^\s/\[\]()<>{}%]+)\s+(\d+)\s+\d+\s+R").matcher(xd)
-        val out = Vector.newBuilder[(String, PdfObj)]
-        while (m.find()) {
-          val name = m.group(1)
-          m.group(2).toIntOption.flatMap(objs.get)
-            .filter(o => hasName(o.dict, "Subtype", "Image"))
-            .foreach(o => out += name -> o)
-        }
-        out.result()
-    }
+    pageResources(page, objs).flatMap(subDict(_, "XObject", objs)).toVector
+      .flatMap(refEntries(_, objs)).filter(_._2.dict.name("Subtype").contains("Image"))
 
+  /** Per-page font-name → decoder map: /Resources (with /Parent inheritance)
+    * → /Font → each `/Fn N 0 R` entry → the font's /ToUnicode CMap stream
+    * (authoritative) or its /Encoding tables ([[encodingDec]]). Fonts with
+    * neither simply don't appear (their shows keep the Latin-ish fallback). */
   private def pageFonts(page: PdfObj, objs: Map[Int, PdfObj],
       tuCache: scala.collection.mutable.HashMap[Int, Option[ToUnicode]],
       ttCache: scala.collection.mutable.HashMap[Int, Option[Map[Int, String]]])
-      : Map[String, FontDec] = {
-    pageResources(page, objs).flatMap(subDict(_, "Font", objs)) match {
-      case None => Map.empty
-      case Some(fd) =>
-        // PDF name chars include '_', '+', '-', '.' (C2_0 / T1_0 are the
-        // standard subset-font names) — match any non-delimiter run
-        val m = pat(raw"/([^\s/\[\]()<>{}%]+)\s+(\d+)\s+\d+\s+R").matcher(fd)
-        val out = Map.newBuilder[String, FontDec]
-        while (m.find()) {
-          val name = m.group(1)
-          m.group(2).toIntOption.flatMap(objs.get).foreach { fo =>
-            val viaCMap: Option[FontDec] = ref(fo.dict, "ToUnicode").flatMap { tuNum =>
-              // CMaps are shared across pages: parse each /ToUnicode object
-              // once per document, not once per page
-              tuCache.getOrElseUpdate(tuNum, objs.get(tuNum).flatMap { tuObj =>
-                val dec = decodeStream(tuObj)
-                if (dec.failed) None else parseToUnicode(dec.data)
-              }).map(CMapDec.apply)
-            }
-            viaCMap.orElse(encodingDec(fo.dict, objs, ttCache))
-              .foreach(d => out += name -> d)
-          }
+      : Map[String, FontDec] =
+    pageResources(page, objs).flatMap(subDict(_, "Font", objs)).toVector
+      .flatMap(refEntries(_, objs)).flatMap { case (name, fo) =>
+        val viaCMap: Option[FontDec] = fo.dict.ref("ToUnicode").flatMap { tuNum =>
+          // CMaps are shared across pages: parse each /ToUnicode object
+          // once per document, not once per page
+          tuCache.getOrElseUpdate(tuNum, objs.get(tuNum).flatMap { tuObj =>
+            val dec = decodeStream(tuObj, objs.get)
+            if (dec.failed) None else parseToUnicode(dec.data)
+          }).map(CMapDec.apply)
         }
-        out.result()
-    }
-  }
+        viaCMap.orElse(encodingDec(fo.dict, objs, ttCache)).map(name -> _)
+      }.toMap
 
   // ------------------------------------------------------------------ parse
 
@@ -1218,8 +928,7 @@ object RealPdf {
     * only on a structural failure (no page objects at all / exception). */
   def parse(payload: Array[Byte], maxPages: Int): Option[Parsed] = {
     try {
-      val s = byteView(payload)
-      val (objs, objStmFailures) = scanObjects(payload, s)
+      val (objs, objStmFailures) = scanObjects(payload)
       val pagesAll = pageObjects(objs)
       if (pagesAll.isEmpty) return None
       val pagesTruncated = pagesAll.length > maxPages
@@ -1247,29 +956,19 @@ object RealPdf {
           case _   => (x, y)
         }
         val fonts = pageFonts(p, objs, tuCache, ttCache)
-        val directRefs = refArray(p.dict, "Contents")
         // §7.7.3.3: /Contents may be an indirect reference TO an array of
-        // stream refs — the target is a bare (non-stream) object whose body
-        // is the array. Without the expansion every stream ref resolves to
-        // nothing and the page loses all text with status "ok" — silent
-        // loss, which this file's contract forbids.
-        val contentRefs = directRefs match {
-          case Vector(one) =>
-            objs.get(one) match {
-              case Some(o) if o.streamRaw == null && o.dict.startsWith("[") =>
-                val m = pat(raw"(\d+)\s+\d+\s+R").matcher(o.dict)
-                val b = Vector.newBuilder[Int]
-                while (m.find()) m.group(1).toIntOption.foreach(b += _)
-                val v = b.result()
-                if (v.nonEmpty) v else directRefs
-              case _ => directRefs
-            }
+        // stream refs (a bare object) — unexpanded, the page would lose all
+        // its text with status "ok"
+        val contentRefs = p.dict.refs("Contents") match {
+          case Vector(one) => objs.get(one) match {
+            case Some(PdfObj(_, a: PArr, null, _)) if a.refs.nonEmpty => a.refs
+            case _ => Vector(one)
+          }
           case v => v
         }
-        // aggregate bomb ceiling: the per-stream cap bounds ONE stream, but
-        // `/Contents [5 0 R 5 0 R …]` re-decodes the same bomb per mention
-        // (legal refs, no cache) — bound the page's TOTAL decoded content
-        // the same way, keep the prefix, FLAG the loss once
+        // aggregate bomb ceiling: `/Contents [5 0 R 5 0 R …]` re-decodes one
+        // bomb per mention — bound the page's TOTAL decoded content too,
+        // keep the prefix, FLAG the loss once
         var contentBudget = MaxDecodedStream.toLong
         var contentCapped = false
         val datas = contentRefs.flatMap { r =>
@@ -1277,21 +976,17 @@ object RealPdf {
             if (!contentCapped) { decodeFailures += 1; contentCapped = true }
             None
           } else objs.get(r).map { o =>
-            val d = decodeStream(o)
+            val d = decodeStream(o, objs.get)
             if (d.failed) decodeFailures += 1
             contentBudget -= d.data.length
             d.data
           }
         }
-        // provenance offsets: the first content object's position, taken from
-        // the sequential scan (a substring re-search could match "4 0 obj"
-        // inside "14 0 obj" or inside compressed stream bytes)
+        // provenance offsets: the first content object's header, as scanned
         val off = contentRefs.headOption.flatMap(objs.get).map(_.offset).getOrElse(0)
-        // ISO 32000 §7.8.2: a page's /Contents array behaves as ONE stream —
-        // graphics/text state (CTM, q/Q depth, current font) legally spans
-        // stream boundaries, so parse the CONCATENATION (writers routinely
-        // split 'cm' and the 'Do' it governs across streams). Tokens cannot
-        // span boundaries, so a whitespace byte joins them safely.
+        // ISO 32000 §7.8.2: a page's /Contents array behaves as ONE stream
+        // (graphics and text state span stream boundaries, tokens do not),
+        // so parse the concatenation, joined by a whitespace byte
         val joined =
           if (datas.length <= 1) datas.headOption.getOrElse(Array.emptyByteArray)
           else {
@@ -1301,20 +996,15 @@ object RealPdf {
           }
         val scan = extractChunks(joined, fonts)
         unmappedShows += scan.unmapped
-        val chunks =
-          if (rot == 0) scan.chunks
-          else scan.chunks.map { c =>
-            val (ux, uy) = upright(c.x, c.y)
-            c.copy(x = ux, y = uy)
-          }
-        val places =
-          if (rot == 0) scan.places
-          else scan.places.map { q =>
-            val (ax, ay) = upright(q.x0, q.y0)
-            val (bx, by) = upright(q.x1, q.y1)
-            q.copy(x0 = math.min(ax, bx), y0 = math.min(ay, by),
-              x1 = math.max(ax, bx), y1 = math.max(ay, by))
-          }
+        val chunks = if (rot == 0) scan.chunks else scan.chunks.map { c =>
+          val (ux, uy) = upright(c.x, c.y)
+          c.copy(x = ux, y = uy)
+        }
+        val places = if (rot == 0) scan.places else scan.places.map { q =>
+          val (ax, ay) = upright(q.x0, q.y0)
+          val (bx, by) = upright(q.x1, q.y1)
+          q.copy(x0 = math.min(ax, bx), y0 = math.min(ay, by), x1 = math.max(ax, bx), y1 = math.max(ay, by))
+        }
         // embedded images: every /Resources /XObject image, with a placement
         // rect per Do occurrence (top-down coords, like PBlock) — an image the
         // content stream never drew still carries its payload (placed=false)
@@ -1323,14 +1013,10 @@ object RealPdf {
           val byName = imgObjs.toMap
           val drawn = scala.collection.mutable.Set.empty[String]
           def mk(name: String, o: PdfObj, pl: Option[ImagePlace]): PdfImage = {
-            val data = if (o.streamRaw == null) Array.emptyByteArray else o.streamRaw
-            PdfImage(pageIdx, o.num, name,
-              directInt(o.dict, "Width").getOrElse(0),
-              directInt(o.dict, "Height").getOrElse(0),
-              directInt(o.dict, "BitsPerComponent").getOrElse(8),
-              firstGroup(raw"/ColorSpace\s*/([A-Za-z0-9]+)", o.dict).getOrElse(""),
-              firstGroup(raw"/Filter\s*/([A-Za-z0-9]+)", o.dict).getOrElse("none"),
-              data,
+            val d = o.dict
+            PdfImage(pageIdx, o.num, name, d.nat("Width").getOrElse(0), d.nat("Height").getOrElse(0),
+              d.nat("BitsPerComponent").getOrElse(8), d.name("ColorSpace").getOrElse(""),
+              d.name("Filter").getOrElse("none"), Option(o.streamRaw).getOrElse(Array.emptyByteArray),
               pl.map(_.x0).getOrElse(0.0), pl.map(q => rh - q.y1).getOrElse(0.0),
               pl.map(q => q.x1 - q.x0).getOrElse(0.0),
               pl.map(q => q.y1 - q.y0).getOrElse(0.0),
