@@ -40,7 +40,11 @@ final case class ExtractConfig(
       * the byte cap cannot explode unbounded rows; the cap is recorded via the
       * `truncated` flag (no silent caps). */
     maxPdfPages: Int = 10000
-)
+) {
+  /** `payload` cut to [[maxHtmlBytes]] (the payload itself when it fits). */
+  def capped(payload: Array[Byte]): Array[Byte] =
+    if (payload.length > maxHtmlBytes) java.util.Arrays.copyOf(payload, maxHtmlBytes) else payload
+}
 
 object TextNormalizer {
   @inline private def isWs(c: Char): Boolean =
@@ -76,6 +80,7 @@ final class ExtractorState {
   var domNanos = 0L
   var classifyNanos = 0L
   var assembleNanos = 0L
+  var pdfNanos = 0L // the whole PDF branch (parse, order, assemble)
 
   // classify non-ASCII path: a reused CharsetDecoder + char buffer in place
   // of the String-per-segment allocation (the last steady-state allocation
@@ -270,17 +275,17 @@ object Extractor {
               state: ExtractorState = new ExtractorState()): ExtractedDoc = {
     if (html == null || html.isEmpty)
       return ExtractedDoc(url, "", 0, Nil, "utf-8", truncated = false)
-    if (graft.pdf.PdfBranch.isPdf(html))
-      return graft.pdf.PdfBranch.extract(url, html, cfg)
+    if (graft.pdf.PdfBranch.isPdf(html)) {
+      val t0 = System.nanoTime()
+      val doc = graft.pdf.PdfBranch.extract(url, html, cfg)
+      state.pdfNanos += System.nanoTime() - t0
+      return doc
+    }
 
     val truncated = html.length > cfg.maxHtmlBytes
-    val input = if (truncated) java.util.Arrays.copyOf(html, cfg.maxHtmlBytes) else html
+    val input = cfg.capped(html)
     val (charset, bom) = Charsets.sniff(input)
-    // CDATA + non-UTF-8 multi-byte charset: ']' can be a trail byte, so the
-    // raw "]]>" scan could mis-close mid-character — transcode instead
-    val rawOk = Charsets.rawByteSafe(charset) &&
-      !(Charsets.rawByteHazardCdata(charset) && Charsets.containsCdata(input))
-    if (rawOk)
+    if (Charsets.rawBytesOk(charset, input))
       extractHtmlGrouped(url, input, charset, bom, truncated, cfg, state)._1
     else {
       // transcode-first path (utf-16/32, iso-2022, …): these encodings can put

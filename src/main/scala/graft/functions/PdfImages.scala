@@ -85,11 +85,7 @@ object PdfImages {
       if (payload == null || !PdfBranch.isPdf(payload) || !RealPdf.isReal(payload))
         Iterator.empty
       else {
-        val input =
-          if (payload.length > cfg.maxHtmlBytes)
-            java.util.Arrays.copyOf(payload, cfg.maxHtmlBytes)
-          else payload
-        RealPdf.parse(input, cfg.maxPdfPages) match {
+        RealPdf.parse(cfg.capped(payload), cfg.maxPdfPages) match {
           case None => Iterator.empty
           case Some(parsed) =>
             parsed.images.iterator.map { im =>

@@ -212,6 +212,13 @@ object Charsets {
   def rawByteHazardCdata(cs: Charset): Boolean =
     multiByteSafe.contains(cs.name()) && cs != Utf8
 
+  /** True when the raw-byte tokenizer may run on `input` in `cs`: the charset
+    * is [[rawByteSafe]], and a CDATA section cannot mis-close mid-character
+    * (']' can be a trail byte of the non-UTF-8 multi-byte charsets, so their
+    * CDATA-bearing payloads take the transcode-first path instead). */
+  def rawBytesOk(cs: Charset, input: Array[Byte]): Boolean =
+    rawByteSafe(cs) && !(rawByteHazardCdata(cs) && containsCdata(input))
+
   /** Does the payload contain a "<![CDATA[" opener (case-insensitive, same
     * match as the tokenizer's)? Only consulted for the rare multi-byte
     * non-UTF-8 charsets — never on the hot path. */

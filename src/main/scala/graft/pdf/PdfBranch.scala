@@ -79,14 +79,12 @@ object PdfBranch {
     }
 
   def extract(url: String, payload: Array[Byte], cfg: ExtractConfig): ExtractedDoc = {
-    val byteTruncated = payload.length > cfg.maxHtmlBytes
-    val input = if (byteTruncated) java.util.Arrays.copyOf(payload, cfg.maxHtmlBytes) else payload
-    val parsed = parsePayload(input, cfg)
+    val parsed = parsePayload(cfg.capped(payload), cfg)
     val pages = parsed.pages.zipWithIndex.map { case ((w, blocks), p) => extractPage(p, w, blocks) }
     val text = pages.map(_._1).filter(_.nonEmpty).mkString("\n\n")
     val spans = pages.flatMap(_._2).zipWithIndex.map { case (s, i) => s.copy(blockIdx = i) }
     ExtractedDoc(url, text, spans.length, spans, "utf-8",
-      byteTruncated || parsed.pagesTruncated, parsed.status)
+      payload.length > cfg.maxHtmlBytes || parsed.pagesTruncated, parsed.status)
   }
 
   /** One page's reading order → (page text, spans with page-local blockIdx).

@@ -83,7 +83,7 @@ object ChunkedExtract {
     val passthrough = Seq(ChunkRow(rowUid, p.url, -1, 0, 0, html, "", 0, truncated = false))
     if (html == null || html.length < chunkThreshold) return passthrough
     val truncated = html.length > cfg.maxHtmlBytes
-    val input = if (truncated) java.util.Arrays.copyOf(html, cfg.maxHtmlBytes) else html
+    val input = cfg.capped(html)
     if (PdfBranch.isPdf(html)) {
       val parsed = PdfBranch.parsePayload(input, cfg)
       if (parsed.pages.length < 2) return passthrough
@@ -93,11 +93,9 @@ object ChunkedExtract {
       }
     }
     val (charset, bom) = Charsets.sniff(input)
-    // utf-16/32 etc: byte-splitting is unsound; ditto CDATA in a non-UTF-8
-    // multi-byte charset (']' trail-byte hazard — same gate as Extractor)
-    if (!Charsets.rawByteSafe(charset) ||
-        (Charsets.rawByteHazardCdata(charset) && Charsets.containsCdata(input)))
-      return passthrough
+    // byte-splitting is sound only where raw-byte tokenizing is (the
+    // Extractor's gate): not utf-16/32, not CDATA under a ']' trail byte
+    if (!Charsets.rawBytesOk(charset, input)) return passthrough
     val chunks = HtmlChunker.plan(input, minChunkBytes)
     if (chunks.length == 1) return passthrough
     chunks.zipWithIndex.map { case (c, idx) =>

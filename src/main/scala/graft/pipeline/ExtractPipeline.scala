@@ -25,7 +25,8 @@ final case class ExtractedRow(
     tokenizeNanos: Long,
     domNanos: Long,
     classifyNanos: Long,
-    assembleNanos: Long
+    assembleNanos: Long,
+    pdfNanos: Long
 )
 
 /** Pipeline config (bucket counts sized for the sandbox; at cluster scale
@@ -162,13 +163,13 @@ object ExtractPipeline {
         val byBucket = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
         val rows = it.map { case (bucket, p) =>
           val t0 = state.tokenizeNanos; val d0 = state.domNanos
-          val c0 = state.classifyNanos; val a0 = state.assembleNanos
+          val c0 = state.classifyNanos; val a0 = state.assembleNanos; val p0 = state.pdfNanos
           val doc = Extractor.extract(p.url, p.html, conf.extract, state)
           val row = ExtractedRow(bucket, doc.url, doc.text, doc.nSpans, doc.spans,
             doc.charset, doc.truncated, doc.status,
             if (p.html == null) 0L else p.html.length.toLong,
             state.tokenizeNanos - t0, state.domNanos - d0,
-            state.classifyNanos - c0, state.assembleNanos - a0)
+            state.classifyNanos - c0, state.assembleNanos - a0, state.pdfNanos - p0)
           fold(byBucket.getOrElseUpdate(bucket, new Array[Long](countCols.length)), row)
           row
         }
@@ -207,7 +208,7 @@ object ExtractPipeline {
 
   /** Lineage count columns, in table order, after bucket, status and attempt. */
   private val countCols = Seq("docs", "bytes", "emptyDocs", "truncatedDocs",
-    "unparsedDocs", "tokenizeNanos", "domNanos", "classifyNanos", "assembleNanos")
+    "unparsedDocs", "tokenizeNanos", "domNanos", "classifyNanos", "assembleNanos", "pdfNanos")
 
   private val lineageSchema = StructType(
     Seq(StructField("bucket", IntegerType), StructField("status", StringType),
@@ -225,6 +226,7 @@ object ExtractPipeline {
     c(6) += r.domNanos
     c(7) += r.classifyNanos
     c(8) += r.assembleNanos
+    c(9) += r.pdfNanos
   }
 
   /** The final extracted table (all committed buckets). */

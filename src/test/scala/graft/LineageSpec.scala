@@ -16,7 +16,7 @@ import graft.pipeline.{CorpusSource, ExtractPipeline, PipelineConf}
 /** The lineage table a run appends is folded inside the write pass; these
   * specs pin it to the committed data: every lineage row equals a
   * groupBy(bucket) over the rows `ExtractPipeline.output` holds for that
-  * bucket, on all twelve columns, the stage nanos included.
+  * bucket, on all thirteen columns, the stage nanos included.
   */
 class LineageSpec extends AnyFunSuite {
 
@@ -32,7 +32,7 @@ class LineageSpec extends AnyFunSuite {
 
   private val columns = Seq("bucket", "status", "attempt", "docs", "bytes",
     "emptyDocs", "truncatedDocs", "unparsedDocs", "tokenizeNanos", "domNanos",
-    "classifyNanos", "assembleNanos")
+    "classifyNanos", "assembleNanos", "pdfNanos")
 
   /** The per-bucket aggregate of the committed rows, in lineage column order. */
   private def fromData(out: String, attempt: Column): DataFrame =
@@ -45,7 +45,8 @@ class LineageSpec extends AnyFunSuite {
       sum(col("tokenizeNanos")).as("tokenizeNanos"),
       sum(col("domNanos")).as("domNanos"),
       sum(col("classifyNanos")).as("classifyNanos"),
-      sum(col("assembleNanos")).as("assembleNanos")
+      sum(col("assembleNanos")).as("assembleNanos"),
+      sum(col("pdfNanos")).as("pdfNanos")
     ).select(col("bucket") +: lit("ok").as("status") +: attempt.as("attempt") +:
       columns.drop(3).map(col): _*)
 

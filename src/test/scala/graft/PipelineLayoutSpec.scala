@@ -79,7 +79,7 @@ class PipelineLayoutSpec extends AnyFunSuite {
   /** Every output column but the stage timings, as sorted strings. */
   private def rows(out: String): Seq[String] =
     ExtractPipeline.output(spark, out)
-      .drop("tokenizeNanos", "domNanos", "classifyNanos", "assembleNanos")
+      .drop("tokenizeNanos", "domNanos", "classifyNanos", "assembleNanos", "pdfNanos")
       .collect().map(_.toString).toSeq.sorted
 
   private def lineageCounts(out: String): Seq[String] =
