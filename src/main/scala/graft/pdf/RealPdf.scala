@@ -91,7 +91,8 @@ object RealPdf {
   // ---------------------------------------------------------------- objects
 
   /** One indirect object: its dictionary (or a bare object's bounded body
-    * value), its raw stream bytes and the byte offset of its header. */
+    * value; null when unreadable), its raw stream bytes and the byte offset
+    * of its header. */
   private final case class PdfObj(num: Int, value: PVal, streamRaw: Array[Byte], offset: Int) {
     def dict: PDict = PDict.of(value)
   }
@@ -163,7 +164,7 @@ object RealPdf {
         lex.betweenObjects = true
         // an 11-digit pseudo object number (-1) skips ITS definition only
         if (num >= 0 && !out.contains(num))
-          out += num -> PdfObj(num, if (value == null) PDict.empty else value, streamRaw, offset)
+          out += num -> PdfObj(num, value, streamRaw, offset)
       }
     }
     val objStmFailures = expandObjectStreams(out)
@@ -202,7 +203,7 @@ object RealPdf {
               if (PdfLexer.matchAt(d, t, "<<")) PdfValue.parse(d, t, d.length)
               else if (t < d.length) bareValue(d, t, math.min(d.length, t + (if (d(t) == '[') 4096 else 64)))
               else null
-            out += num -> PdfObj(num, if (value == null) PDict.empty else value, null, stm.offset)
+            out += num -> PdfObj(num, value, null, stm.offset)
           }
         }
       }
