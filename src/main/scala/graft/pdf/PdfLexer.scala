@@ -79,10 +79,6 @@ private[pdf] final class PdfLexer(val buf: Array[Byte], from: Int, val until: In
     new String(buf, s, end - s, StandardCharsets.ISO_8859_1)
   }
 
-  /** True when the current token is the keyword `kw`. */
-  def is(kw: String): Boolean = kind == Kw && end - start == kw.length &&
-    (0 until kw.length).forall(i => at(start + i) == kw.charAt(i))
-
   /** The current Num token is an unsigned integer (digits only). */
   def isNat: Boolean = (start until end).forall(digit)
 
@@ -95,7 +91,7 @@ private[pdf] final class PdfLexer(val buf: Array[Byte], from: Int, val until: In
     * false, rewound to just after N. */
   def followedBy(kw: String): Boolean = {
     val p = pos; val s = start; val e = end
-    if (next() == Num && isNat && next() == Kw && is(kw)) true
+    if (next() == Num && isNat && next() == Kw && end - start == kw.length && text == kw) true
     else { pos = p; start = s; end = e; kind = Num; false }
   }
 
