@@ -63,6 +63,7 @@ object Bench {
     val accDom = sc.longAccumulator("domNanos")
     val accCls = sc.longAccumulator("classifyNanos")
     val accAsm = sc.longAccumulator("assembleNanos")
+    val accPdf = sc.longAccumulator("pdfNanos")
     import spark.implicits._
     val base = spark.read.parquet(dir).as[PageRow]
     val pages = Seq.fill(repeat)(base).reduce(_ union _)
@@ -75,11 +76,12 @@ object Bench {
       }.toArray.iterator // drain, then flush stage nanos once per partition
       accTok.add(state.tokenizeNanos); accDom.add(state.domNanos)
       accCls.add(state.classifyNanos); accAsm.add(state.assembleNanos)
+      accPdf.add(state.pdfNanos)
       out
     }.reduce(_ + _)
     val wall = (System.nanoTime() - t0) / 1e9
     (wall, checksum, Map("tokenize" -> accTok.value, "dom" -> accDom.value,
-      "classify" -> accCls.value, "assemble" -> accAsm.value))
+      "classify" -> accCls.value, "assemble" -> accAsm.value, "pdf" -> accPdf.value))
   }
 
   import JsonOut.{fmt, jstr}

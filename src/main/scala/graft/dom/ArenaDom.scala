@@ -12,6 +12,12 @@ import graft.htmltok.{HtmlNames, HtmlTokenizer, Tok, TokenArena, TokenFlags}
   *  - an end tag closes everything up to (and incl.) the nearest matching open tag
   *  - <p>/<li>/<td>/<th>/<tr>/<dd>/<dt>/<option> auto-close an open same-name sibling
   *  - any block-level start tag closes an open <p>
+  *  - <body> or any block-level start tag closes an open <head>
+  *  - in tables and <dl>s, a new row, cell, section or dt/dd closes the open
+  *    ones up to its table or list (HTML5 implied end tags)
+  *
+  * HtmlChunker plans its seams on this tree too, so these rules live here
+  * alone.
   */
 final class DomArena(initialCapacity: Int = 512) {
   var nNodes: Int = 0
@@ -19,8 +25,10 @@ final class DomArena(initialCapacity: Int = 512) {
   var tagId: Array[Int] = new Array[Int](initialCapacity) // -1 = text node
   var depth: Array[Int] = new Array[Int](initialCapacity)
   var flags: Array[Int] = new Array[Int](initialCapacity)
-  var tStart: Array[Int] = new Array[Int](initialCapacity) // text nodes: byte range
-  var tEnd: Array[Int] = new Array[Int](initialCapacity)
+  /** Text nodes: start of the text's byte range. Element nodes: byte offset
+    * of the start tag's '<' (HtmlChunker places its seams there). */
+  var tStart: Array[Int] = new Array[Int](initialCapacity)
+  var tEnd: Array[Int] = new Array[Int](initialCapacity) // text nodes: end of the byte range
   // cached per-node ancestry facts, computed during build (O(1) via parent's value)
   var inSkip: Array[Boolean] = new Array[Boolean](initialCapacity)
   var inBoiler: Array[Boolean] = new Array[Boolean](initialCapacity)
@@ -234,11 +242,11 @@ final class DomArena(initialCapacity: Int = 512) {
             if (found >= 0) sp = found
           }
           if (HtmlNames.isBlock(nm) && sp > 0 && name(top) == "p" && nm != "p") sp -= 1
-          val node = addNode(top, tid, toks.flags(i), 0, 0, nm)
+          val node = addNode(top, tid, toks.flags(i), toks.starts(i), 0, nm)
           push(node)
         case Tok.SelfClose =>
           val tid = toks.tagIds(i)
-          addNode(top, tid, toks.flags(i), 0, 0, names(tid))
+          addNode(top, tid, toks.flags(i), toks.starts(i), 0, names(tid))
         case Tok.End =>
           val tid = toks.tagIds(i)
           var k = sp - 1

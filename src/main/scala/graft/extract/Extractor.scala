@@ -294,9 +294,7 @@ object Extractor {
       // UTF-8, and extract that. Span byte offsets then refer to the
       // transcoded buffer (decode-normalized coordinates), the documented
       // contract for this branch.
-      val decoded = new String(input, bom, input.length - bom, charset)
-      val start = if (decoded.nonEmpty && decoded.charAt(0) == '\uFEFF') 1 else 0
-      val utf8all = decoded.substring(start).getBytes(Charsets.Utf8)
+      val utf8all = Charsets.toUtf8(input, charset, bom)
       // re-apply the byte cap: CJK-heavy UTF-16 re-encodes up to 1.5\u00D7 larger
       // in UTF-8, and maxHtmlBytes is the per-doc work/memory bound \u2014 trim to
       // a char boundary so the tail never splits a sequence

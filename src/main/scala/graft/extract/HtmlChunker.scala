@@ -1,24 +1,27 @@
 package graft.extract
 
-import graft.htmltok.{HtmlNames, HtmlTokenizer, Tok, TokenArena}
+import graft.dom.DomArena
+import graft.htmltok.{HtmlNames, HtmlTokenizer, TokenArena}
 
 /** Safe split-point planner for chunked mega-document extraction — the HTML
   * analog of the reference's recursive strip slicing for extreme inputs
   * (tools/infer/predict_det.py:307-408), with the seam-correctness problem
-  * solved structurally instead of by overlap+rollback: a split is allowed only
+  * solved structurally instead of by overlap+rollback. The plan reads its
+  * seams from the document's own tree (`DomArena.build`, the one tree
+  * builder the kernel runs): a split is allowed only
   *
-  *  - immediately BEFORE a block-level start tag (the running text block
-  *    terminates there in the single-pass segmenter too, so no block can span
-  *    a seam), and
-  *  - while the open-element stack contains nothing but plain `<html>`/
-  *    `<body>` (no class/id hints, no boilerplate/link/pre ancestry, no open
-  *    table or list) — so a fragment prefixed with the same plain context
+  *  - immediately BEFORE a block-level element's start tag (the running text
+  *    block terminates there in the single-pass segmenter too, so no block
+  *    can span a seam), and
+  *  - when every DOM ancestor of that element is a plain `<html>`/`<body>`
+  *    (no class/id hints, no boilerplate/link/pre ancestry, no open table or
+  *    list) — so a fragment prefixed with those ancestors as bare tags
   *    reproduces the exact ancestry facts of the original position.
   *
-  * Fragments are re-tokenized independently; the plan pass only walks the
-  * token stream with the same stack transitions as DomArena.build (kept in
-  * lockstep — ChunkedExtractSpec proves byte-identity against the single-pass
-  * kernel over every golden fixture and generated soups).
+  * Whatever the element implicitly closes (a top-level `<p>`, `<li>` or
+  * `<head>`) ends exactly where the fragment before the seam ends, so such
+  * seams are safe too. ChunkedExtractSpec proves byte-identity against the
+  * single-pass kernel over every golden fixture and generated soups.
   */
 object HtmlChunker {
 
@@ -33,89 +36,39 @@ object HtmlChunker {
     if (input.length < 2 * minChunkBytes) return Vector(Chunk(0, input.length, ""))
     val toks = new TokenArena()
     HtmlTokenizer.tokenize(input, toks)
-
-    // open-element stack mirror of DomArena.build (ids + flags)
-    var stackTag = new Array[Int](64)
-    var stackFlags = new Array[Int](64)
-    var sp = 0
-    def push(tid: Int, fl: Int): Unit = {
-      if (sp == stackTag.length) {
-        stackTag = java.util.Arrays.copyOf(stackTag, sp * 2)
-        stackFlags = java.util.Arrays.copyOf(stackFlags, sp * 2)
-      }
-      stackTag(sp) = tid; stackFlags(sp) = fl; sp += 1
-    }
-    def nameAt(k: Int): String = toks.tagName(stackTag(k))
-
-    def splittableHere: Boolean = {
-      var k = 0
-      while (k < sp) {
-        val nm = nameAt(k)
-        if (stackFlags(k) != 0 || (nm != "html" && nm != "body")) return false
-        k += 1
-      }
-      true
-    }
-    def prefixHere: String = {
-      val sb = new java.lang.StringBuilder(16)
-      var k = 0
-      while (k < sp) { sb.append('<').append(nameAt(k)).append('>'); k += 1 }
-      sb.toString
-    }
-
+    val dom = new DomArena().build(toks)
+    // plain(n): n and every ancestor of n are flag-free html/body elements
+    val plain = new Array[Boolean](dom.nNodes)
     val out = Vector.newBuilder[Chunk]
     var nChunks = 0
     var chunkStart = 0
     var pendingPrefix = ""
-    var i = 0
-    while (i < toks.size) {
-      (toks.kinds(i): @annotation.switch) match {
-        case Tok.Start =>
-          val tid = toks.tagIds(i)
-          val nm = toks.tagName(tid)
-          // candidate split BEFORE this token (same stack state the fragment
-          // will rebuild from its prefix)
-          if (HtmlNames.isBlock(nm) && nChunks < maxChunks - 1 &&
-              toks.starts(i) - chunkStart >= minChunkBytes && splittableHere) {
-            out += Chunk(chunkStart, toks.starts(i), pendingPrefix)
-            nChunks += 1
-            chunkStart = toks.starts(i)
-            pendingPrefix = prefixHere
-          }
-          // mirror DomArena.build transitions (MUST stay in lockstep —
-          // including the implicit-</head> close: without it a mega-doc that
-          // omits </head> pins head on this stack so chunking silently never
-          // happens, and a stray </head> later desyncs the two stacks)
-          if (nm == "body" || HtmlNames.isBlock(nm)) {
-            var k = sp - 1
-            while (k >= 0) {
-              if (nameAt(k) == "head") { sp = k; k = 0 }
-              k -= 1
-            }
-          }
-          if (HtmlNames.autoCloses(nm)) {
-            var k = sp - 1
-            var found = -1
-            while (k >= 0 && found < 0) {
-              if (stackTag(k) == tid) found = k
-              else if (HtmlNames.isBlock(nameAt(k)) && nameAt(k) != "p") k = -1
-              k -= 1
-            }
-            if (found >= 0) sp = found
-          }
-          if (HtmlNames.isBlock(nm) && sp > 0 && nameAt(sp - 1) == "p" && nm != "p") sp -= 1
-          push(tid, toks.flags(i))
-        case Tok.End =>
-          val tid = toks.tagIds(i)
-          var k = sp - 1
-          var found = -1
-          while (k >= 0 && found < 0) { if (stackTag(k) == tid) found = k; k -= 1 }
-          if (found >= 0) sp = found
-        case _ => () // text, cdata, self-close, comment, doctype: no stack change
+    var n = 0
+    while (n < dom.nNodes && nChunks < maxChunks - 1) {
+      if (!dom.isText(n)) {
+        val p = dom.parent(n)
+        val underPlain = p < 0 || plain(p)
+        val nm = dom.name(n)
+        plain(n) = underPlain && dom.flags(n) == 0 && (nm == "html" || nm == "body")
+        val at = dom.tStart(n)
+        if (underPlain && HtmlNames.isBlock(nm) && at - chunkStart >= minChunkBytes) {
+          out += Chunk(chunkStart, at, pendingPrefix)
+          nChunks += 1
+          chunkStart = at
+          pendingPrefix = ancestorTags(dom, n)
+        }
       }
-      i += 1
+      n += 1
     }
     out += Chunk(chunkStart, input.length, pendingPrefix)
     out.result()
+  }
+
+  /** `node`'s ancestors, root first, as bare start tags. */
+  private def ancestorTags(dom: DomArena, node: Int): String = {
+    var names = List.empty[String]
+    var a = dom.parent(node)
+    while (a >= 0) { names = dom.name(a) :: names; a = dom.parent(a) }
+    names.map(nm => s"<$nm>").mkString
   }
 }

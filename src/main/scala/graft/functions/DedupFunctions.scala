@@ -562,29 +562,9 @@ object DedupFunctions {
     * (only maxHamming < nBands is collision-guaranteed) for bucket size;
     * recall at bandBits=32 is spec-tested on planted near-dups. */
   def simhashPairs(docs: DataFrame, maxHamming: Int, bandBits: Int = 16,
-                   minTokens: Int = 5): DataFrame = {
-    require(64 % bandBits == 0 && bandBits > 0 && bandBits <= 64,
-      s"bandBits must divide 64, got $bandBits")
-    val nBands = 64 / bandBits
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    // localCheckpoint: the signature table is the SELF-JOIN input — without
-    // materialization each side recomputes the kernel, and the join keys'
-    // pushed isnotnull re-derives it inside the scan filter (4 evaluations
-    // per row total). Production shape: the sig table IS a persisted index.
-    val sig = simhash64Raw(nonTrivial(docs, minTokens)).localCheckpoint()
-    val bands = sig.select(col("doc_id"), col("simhash64"),
-      posexplode(array((0 until nBands).map(b =>
-        shiftrightunsigned(col("simhash64"), b * bandBits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band_idx", "band")))
-    bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash64").bitwiseXOR(col("b.simhash64"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
-  }
+                   minTokens: Int = 5): DataFrame =
+    bandPairs(simhash64Raw(nonTrivial(docs, minTokens)), Seq("simhash64"),
+      bandBits, maxHamming)
 
   /** 128-bit SimHash signature: two independent 64-bit halves (the kernel at
     * two seeds; the LOW half is bit-identical to [[simhash64]]'s signature).
@@ -607,26 +587,37 @@ object DedupFunctions {
     * (< `minTokens` tokens) are excluded — same degenerate-band guard as
     * [[simhashPairs]]. */
   def simhash128Pairs(docs: DataFrame, maxHamming: Int, bandBits: Int = 32,
-                      minTokens: Int = 5): DataFrame = {
+                      minTokens: Int = 5): DataFrame =
+    bandPairs(simhash128Raw(nonTrivial(docs, minTokens)), Seq("simhash_lo", "simhash_hi"),
+      bandBits, maxHamming)
+
+  /** The band-OR self-join behind [[simhashPairs]] and [[simhash128Pairs]].
+    * `signatures` holds `doc_id` plus 64-bit signature columns; each column
+    * of `bandCols`, in that order, splits into 64/bandBits bands. Docs pair
+    * (a.doc_id < b.doc_id) when any band matches, and the exact hamming
+    * distance, summed over the signature columns in table order, filters the
+    * candidates. */
+  private def bandPairs(signatures: DataFrame, bandCols: Seq[String], bandBits: Int,
+                        maxHamming: Int): DataFrame = {
     require(64 % bandBits == 0 && bandBits > 0 && bandBits <= 64,
       s"bandBits must divide 64, got $bandBits")
-    val perHalf = 64 / bandBits
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    // localCheckpoint: same self-join materialization as [[simhashPairs]]
-    val sig = simhash128Raw(nonTrivial(docs, minTokens)).localCheckpoint()
-    val bandCols =
-      (0 until perHalf).map(b =>
-        shiftrightunsigned(col("simhash_lo"), b * bandBits).bitwiseAND(lit(mask))) ++
-      (0 until perHalf).map(b =>
-        shiftrightunsigned(col("simhash_hi"), b * bandBits).bitwiseAND(lit(mask)))
-    val bands = sig.select(col("doc_id"), col("simhash_hi"), col("simhash_lo"),
-      posexplode(array(bandCols: _*)).as(Seq("band_idx", "band")))
+    // localCheckpoint: the signature table is the SELF-JOIN input — without
+    // materialization each side recomputes the kernel, and the join keys'
+    // pushed isnotnull re-derives it inside the scan filter (4 evaluations
+    // per row total). Production shape: the sig table IS a persisted index.
+    val sig = signatures.localCheckpoint()
+    val sigCols = sig.columns.toSeq.filter(_ != "doc_id")
+    val bandExprs = for (c <- bandCols; b <- 0 until 64 / bandBits)
+      yield shiftrightunsigned(col(c), b * bandBits).bitwiseAND(lit(mask))
+    val bands = sig.select(col("doc_id") +: sigCols.map(col) :+
+      posexplode(array(bandExprs: _*)).as(Seq("band_idx", "band")): _*)
     bands.as("a").join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (bit_count(col("a.simhash_hi").bitwiseXOR(col("b.simhash_hi"))) +
-         bit_count(col("a.simhash_lo").bitwiseXOR(col("b.simhash_lo")))).as("hamming"))
+        sigCols.map(c => bit_count(col(s"a.$c").bitwiseXOR(col(s"b.$c")))).reduce(_ + _)
+          .as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
       .orderBy("doc_a", "doc_b")

@@ -69,7 +69,7 @@ object Sitemaps {
           } else {
             val raw = new String(xml, arena.starts(t),
               arena.ends(t) - arena.starts(t), StandardCharsets.UTF_8)
-            if (raw.indexOf('&') >= 0) graft.extract.Entities.decode(raw) else raw
+            graft.extract.Entities.decode(raw)
           }
         if (capture == 1) loc.append(v) else lastmod.append(v)
       }

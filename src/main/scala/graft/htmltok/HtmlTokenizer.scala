@@ -219,6 +219,14 @@ object Charsets {
   def rawBytesOk(cs: Charset, input: Array[Byte]): Boolean =
     rawByteSafe(cs) && !(rawByteHazardCdata(cs) && containsCdata(input))
 
+  /** The transcode-first rule: `input` past its `bom` bytes, decoded in `cs`,
+    * a leading U+FEFF dropped, re-encoded as UTF-8. */
+  def toUtf8(input: Array[Byte], cs: Charset, bom: Int): Array[Byte] = {
+    val decoded = new String(input, bom, input.length - bom, cs)
+    val start = if (decoded.nonEmpty && decoded.charAt(0) == '\uFEFF') 1 else 0
+    decoded.substring(start).getBytes(Utf8)
+  }
+
   /** Does the payload contain a "<![CDATA[" opener (case-insensitive, same
     * match as the tokenizer's)? Only consulted for the rare multi-byte
     * non-UTF-8 charsets — never on the hot path. */
@@ -505,11 +513,7 @@ object HtmlTokenizer {
     val (cs, bom) = Charsets.sniff(input)
     if (cs == Charsets.Utf8) {
       if (bom == 0) input else java.util.Arrays.copyOfRange(input, bom, input.length)
-    } else {
-      val decoded = new String(input, bom, input.length - bom, cs)
-      val start = if (decoded.nonEmpty && decoded.charAt(0) == '\uFEFF') 1 else 0
-      decoded.substring(start).getBytes(Charsets.Utf8)
-    }
+    } else Charsets.toUtf8(input, cs, bom)
   }
 
   /** Href values of `<a>` start tags, in document order — the link-extraction
@@ -591,7 +595,7 @@ object HtmlTokenizer {
             j += 1
           }
           val raw = sb.toString
-          val decoded = if (raw.indexOf('&') >= 0) graft.extract.Entities.decode(raw) else raw
+          val decoded = graft.extract.Entities.decode(raw)
           out += href -> decoded.split("\\s+").filter(_.nonEmpty).mkString(" ")
         }
       }
@@ -676,7 +680,7 @@ object HtmlTokenizer {
                 val raw = new String(input, arena.starts(t + 1),
                   arena.ends(t + 1) - arena.starts(t + 1),
                   java.nio.charset.StandardCharsets.UTF_8)
-                val d = if (raw.indexOf('&') >= 0) graft.extract.Entities.decode(raw) else raw
+                val d = graft.extract.Entities.decode(raw)
                 d.split("\\s+").filter(_.nonEmpty).mkString(" ")
               } else ""
           case "meta" =>
@@ -753,7 +757,7 @@ object HtmlTokenizer {
           while (a < b && (input(a) & 0xff) <= ' ') a += 1
           while (b > a && (input(b - 1) & 0xff) <= ' ') b -= 1
           val raw = new String(input, a, b - a, java.nio.charset.StandardCharsets.UTF_8)
-          return if (raw.indexOf('&') >= 0) graft.extract.Entities.decode(raw) else raw
+          return graft.extract.Entities.decode(raw)
         }
       } else j += 1
     }

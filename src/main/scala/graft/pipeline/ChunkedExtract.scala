@@ -13,9 +13,10 @@ import graft.pdf.PdfBranch
 /** Chunked extraction for mega documents — one explode → extract → merge
   * driver for both payload types, letting one 100 MB page or 10k-page PDF
   * fan out across tasks instead of straggling one:
-  *  - HTML: plan safe split points (HtmlChunker) and extract each fragment
-  *    independently — the reference's slice → offset-rebase → merge path
-  *    (tools/infer/predict_system.py:86-107);
+  *  - HTML: plan safe split points (HtmlChunker, which reads them off the
+  *    tree `DomArena.build` makes of the whole payload) and extract each
+  *    fragment independently — the reference's slice → offset-rebase → merge
+  *    path (tools/infer/predict_system.py:86-107);
   *  - PDF: parse once, explode one row per page carrying its typed blocks,
   *    and lay each page out independently (`PdfBranch.extractPage`, the
   *    single pass's own per-page step) — the reference's PDF page explode →

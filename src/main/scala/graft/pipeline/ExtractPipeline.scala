@@ -152,11 +152,6 @@ object ExtractPipeline {
     val extracted = remaining
       .repartitionById(nTasks, col("task"))
       .drop("task")
-      // size-ordered processing within each partition (SURVEY.md §4.3, the
-      // reference's sort-crops-by-aspect-ratio idea): arena buffers grow
-      // monotonically instead of oscillating, and the large stragglers of a
-      // partition cluster at its tail
-      .sortWithinPartitions(length(col("page.html")))
       .as[(Int, PageRow)]
       .mapPartitions { it =>
         val state = new ExtractorState()

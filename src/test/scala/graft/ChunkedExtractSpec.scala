@@ -44,10 +44,10 @@ class ChunkedExtractSpec extends AnyFunSuite {
   }
 
   test("chunked == single-pass on a math mega-doc (no seam inside <math>)") {
-    // an open <math>/<annotation> on the planner stack forbids a split
-    // (splittableHere requires plain html/body only), so formula ancestry
-    // facts can never straddle a seam — pinned over a mega-doc whose every
-    // paragraph carries MathML, at aggressive chunk sizes
+    // a <math>/<annotation> ancestor forbids a split (the planner splits
+    // only under plain html/body ancestors), so formula ancestry facts can
+    // never straddle a seam — pinned over a mega-doc whose every paragraph
+    // carries MathML, at aggressive chunk sizes
     val body = (0 until 200).map { i =>
       s"""<p>Paragraph $i with an inline term <math><semantics><mrow><mi>x</mi><mo>=</mo><mn>$i</mn></mrow><annotation encoding="application/x-tex">x_{$i} = \\sqrt{$i}</annotation></semantics></math> plus enough prose to pad the fragment past the block boundary comfortably.</p>
          |<p><math display="block"><mi>y</mi><mo>=</mo><mn>${i * 2}</mn></math></p>""".stripMargin
@@ -216,9 +216,9 @@ class ChunkedExtractSpec extends AnyFunSuite {
   }
 
   test("mega doc omitting </head> still chunks and stays byte-identical") {
-    // the implicit-</head> close must exist in BOTH the DOM builder and the
-    // chunk planner's stack mirror: without it the planner pins head open,
-    // never finds a split, and the doc silently straggles one task
+    // the chunk planner must see the DOM builder's implicit </head> close:
+    // without it the planner pins head open, never finds a split, and the
+    // doc silently straggles one task
     val body = (0 until 200).map(i => s"<p>paragraph number $i with enough content words here</p>").mkString
     val noHeadClose = s"<html><head><title>t</title><body>$body</body></html>"
     val plan = HtmlChunker.plan(noHeadClose.getBytes(StandardCharsets.UTF_8), 2048)
@@ -226,10 +226,53 @@ class ChunkedExtractSpec extends AnyFunSuite {
     val row = PageRow("https://x/nohead", new java.sql.Timestamp(0L),
       noHeadClose.getBytes(StandardCharsets.UTF_8), null, "en")
     assert(equivalent(row, 2048).isEmpty)
-    // stray </head> AFTER the implicit close must not desync the two stacks
+    // a stray </head> AFTER the implicit close is ignored, in the tree the
+    // planner reads as in the single pass
     val strayClose = s"<html><head><title>t</title><body>${body.take(4000)}</head>${body.drop(4000)}</body></html>"
     val row2 = PageRow("https://x/stray", new java.sql.Timestamp(0L),
       strayClose.getBytes(StandardCharsets.UTF_8), null, "en")
     for (mc <- Seq(512, 2048)) assert(equivalent(row2, mc).isEmpty, s"minChunk=$mc")
+  }
+
+  // the implied-end-tag shapes of DomArena.build at the top level: a block
+  // closing a <p>, an <li> without a list, a <head> left open around an
+  // inline element, and tables and dls that omit their end tags
+  private val impliedEnds: Seq[(String, String)] = {
+    val n = 120
+    Seq(
+      "p-then-div" -> ("<html><body>" + (0 until n).map(i =>
+        s"<p>paragraph $i left open with words<div>block $i after the open paragraph</div>").mkString +
+        "</body></html>"),
+      "bare-li" -> ("<html><body>" + (0 until n).map(i =>
+        s"<li>item $i with no list around it at all").mkString + "</body></html>"),
+      "head-inline" -> ("<html><head><title>t</title><span>inline words inside head</span>" +
+        (0 until n).map(i => s"<div>block $i after the implicit head close</div>").mkString +
+        "</html>"),
+      "table-dl" -> ("<html><body>" + (0 until n / 4).map(i =>
+        s"<p>lead paragraph $i before the table<table><tr><td>cell a $i<td>cell b $i" +
+          s"<tr><td>cell c $i<td>cell d $i</table><dl><dt>term $i<dd>definition $i" +
+          s"<dt>term two $i<dd>definition two $i</dl>").mkString +
+        "<dl><dt>last term<dd>last definition never closed"))
+  }
+
+  test("chunked == single-pass on implied end tags at the top level") {
+    for ((name, html) <- impliedEnds; minChunk <- Seq(64, 256, 2048)) {
+      val bytes = html.getBytes(StandardCharsets.UTF_8)
+      assert(HtmlChunker.plan(bytes, minChunk).length > 1, s"$name minChunk=$minChunk: no split")
+      val row = PageRow(s"https://x/$name", new java.sql.Timestamp(0L), bytes, null, "en")
+      val d = equivalent(row, minChunk)
+      assert(d.isEmpty, s"$name minChunk=$minChunk: ${d.getOrElse("")}")
+    }
+  }
+
+  test("a block that implicitly closes a top-level <p> is a seam") {
+    val para = "<p>" + "words in an unclosed paragraph " * 20
+    val html = s"<html><body>$para<div>block after the paragraph</div>$para</body></html>"
+    val bytes = html.getBytes(StandardCharsets.UTF_8)
+    val divAt = html.indexOf("<div>")
+    val plan = HtmlChunker.plan(bytes, minChunkBytes = 256)
+    assert(plan.exists(c => c.start == divAt && c.prefix == "<html><body>"), plan)
+    val row = PageRow("https://x/p-div", new java.sql.Timestamp(0L), bytes, null, "en")
+    assert(equivalent(row, 256).isEmpty)
   }
 }

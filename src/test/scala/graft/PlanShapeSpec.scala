@@ -118,6 +118,56 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!paths.exists(p => p == data || p.startsWith(data + "/")), paths)
   }
 
+  test("ExtractPipeline.run's data write sorts once, on bucket") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.{ExtractPipeline, PipelineConf}
+    val out = java.nio.file.Files.createTempDirectory("graft-onesort").toFile.getAbsolutePath
+    val data = new org.apache.hadoop.fs.Path(ExtractPipeline.dataDir(out)).toUri.getPath
+    val marker = "plan_guard_marker"
+    // the sort keys of each Sort in each data write's executed plan
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Seq[String]]]()
+    @volatile var markerSeen = false
+    val helper = new AdaptiveSparkPlanHelper {}
+    def record(qe: QueryExecution): Unit = {
+      if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+      helper.foreach(qe.executedPlan) {
+        case w: DataWritingCommandExec => w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand if i.outputPath.toUri.getPath == data =>
+            writes.add(helper.collect(w.child) { case s: SortExec =>
+              s.sortOrder.map(_.child match {
+                case a: AttributeReference => a.name
+                case e => e.sql
+              })
+            })
+          case _ =>
+        }
+        case _ =>
+      }
+    }
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractPipeline.run(spark, CorpusSource.pages(spark, 56), out,
+        PipelineConf(numBuckets = 8, megaBuckets = 1))
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(markerSeen, "the query listener never saw the marker query")
+    import scala.jdk.CollectionConverters._
+    // one data write, whose plan holds exactly one Sort: the partitioned
+    // writer's own, on bucket
+    assert(writes.asScala.toSeq == Seq(Seq(Seq("bucket"))), writes)
+  }
+
   test("x16: warc_ts date partitions prune on dt (PartitionFilters, not post-scan)") {
     import org.apache.spark.sql.functions.{col, lit, to_date}
     val out = java.nio.file.Files.createTempDirectory("graft-dtprune").toFile.getAbsolutePath
