@@ -106,8 +106,12 @@ object SparkEntry {
     }),
     // checkpoint/resume pipeline: lineage table (north rule)
     Query("x04_pipeline_lineage", (s, _) => {
-      val out = "/tmp/graft_verify_pipeline"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      // a fresh directory per call: two runs on one host must not delete
+      // each other's output (the same recursive exit-time delete as x16)
+      val dir = java.nio.file.Files.createTempDirectory("graft_verify_pipeline").toFile
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit))
+      val out = dir.getAbsolutePath
       ExtractPipeline.run(s, CorpusSource.pages(s, 280), out,
         PipelineConf(numBuckets = 16, megaBuckets = 2))
       ExtractPipeline.lineage(s, out)

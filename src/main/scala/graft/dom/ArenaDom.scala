@@ -23,7 +23,6 @@ final class DomArena(initialCapacity: Int = 512) {
   var nNodes: Int = 0
   var parent: Array[Int] = new Array[Int](initialCapacity)
   var tagId: Array[Int] = new Array[Int](initialCapacity) // -1 = text node
-  var depth: Array[Int] = new Array[Int](initialCapacity)
   var flags: Array[Int] = new Array[Int](initialCapacity)
   /** Text nodes: start of the text's byte range. Element nodes: byte offset
     * of the start tag's '<' (HtmlChunker places its seams there). */
@@ -53,7 +52,6 @@ final class DomArena(initialCapacity: Int = 512) {
     val cap = parent.length * 2
     parent = java.util.Arrays.copyOf(parent, cap)
     tagId = java.util.Arrays.copyOf(tagId, cap)
-    depth = java.util.Arrays.copyOf(depth, cap)
     flags = java.util.Arrays.copyOf(flags, cap)
     tStart = java.util.Arrays.copyOf(tStart, cap)
     tEnd = java.util.Arrays.copyOf(tEnd, cap)
@@ -114,7 +112,6 @@ final class DomArena(initialCapacity: Int = 512) {
     flags(id) = fl
     tStart(id) = ts
     tEnd(id) = te
-    depth(id) = if (p < 0) 0 else depth(p) + 1
     val isElem = tag >= 0
     val nm = if (isElem) tagName else null
     val pSkip = p >= 0 && inSkip(p)

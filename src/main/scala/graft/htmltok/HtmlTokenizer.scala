@@ -29,6 +29,8 @@ final class TokenArena(initialCapacity: Int = 1024) {
   var ends: Array[Int] = new Array[Int](initialCapacity)
   var tagIds: Array[Int] = new Array[Int](initialCapacity) // -1 for non-tags
   var flags: Array[Int] = new Array[Int](initialCapacity)
+  /** the tokenizer's attribute reader, reused for every start tag */
+  private[htmltok] val attrs = new AttrScanner
 
   // per-document tag-name intern table
   private val internMap = new java.util.HashMap[String, Integer](64)
@@ -243,9 +245,30 @@ object Charsets {
     false
   }
 
-  /** Returns (charset, bomLength). A `charset=` declaration is honored only
-    * INSIDE a `<meta ...>` tag (scanning the whole head for the bare substring
-    * would match URL query params or script text). */
+  /** A token arena per thread for the `<meta>` prescan of [[sniff]]: it
+    * holds at most the tokens of one 1,024-byte window. */
+  private val prescanArena = ThreadLocal.withInitial[TokenArena](() => new TokenArena(128))
+
+  /** Returns (charset, bomLength): a UTF-8, UTF-32 or UTF-16 BOM wins;
+    * otherwise the first `<meta>` with a usable label in the first 1,024
+    * bytes, else UTF-8.
+    *
+    * The prescan tokenizes that window with [[HtmlTokenizer.tokenize]], so
+    * it sees exactly the `<meta>` start tags the document's own tokenization
+    * holds there: comments (abrupt `<!-->` ones too), doctype-like `<!…>`
+    * runs, CDATA and attribute values never fake one, and a tag needs its
+    * `>` inside the window. A `<meta>` gives its `charset` attribute when it
+    * has one (an empty one gives nothing), else the `charset=` in its
+    * `content` when its `http-equiv` is content-type; attributes are read by
+    * [[HtmlTokenizer.attrValue]] (first of a name wins, trimmed,
+    * entity-decoded). Unlike the HTML5 prescan, which skips only comments
+    * and tags, the bodies of the rawtext/RCDATA elements (script, style,
+    * title, textarea) are text here, so a `<meta>` written inside one is
+    * not honored.
+    *
+    * A meta-declared utf-16/utf-32 label means UTF-8 (HTML5 §13.2: the
+    * declaration was readable as ASCII bytes, which proves the payload is
+    * not utf-16; real utf-16/32 carries a BOM). */
   def sniff(b: Array[Byte]): (Charset, Int) = {
     if (b.length >= 3 && b(0) == 0xef.toByte && b(1) == 0xbb.toByte && b(2) == 0xbf.toByte)
       return (Utf8, 3)
@@ -261,96 +284,124 @@ object Charsets {
       return (StandardCharsets.UTF_16LE, 2)
     if (b.length >= 2 && b(0) == 0xfe.toByte && b(1) == 0xff.toByte)
       return (StandardCharsets.UTF_16BE, 2)
-    val n = math.min(b.length, 1024)
-    val rawHead = new String(b, 0, n, StandardCharsets.ISO_8859_1)
-      .toLowerCase(java.util.Locale.ROOT)
-    // blank out comment spans before the meta scan (the HTML5 prescan this
-    // mirrors skips <!-- … -->): a charset declaration inside a conditional
-    // comment ('<!--[if lt IE 9]><meta charset=windows-1250><![endif]-->')
-    // must not hijack the document charset from the real one that follows
-    val head = if (rawHead.indexOf("<!--") < 0) rawHead else {
-      val sb = new java.lang.StringBuilder(rawHead)
-      var c = rawHead.indexOf("<!--")
-      while (c >= 0) {
-        val e = rawHead.indexOf("-->", c + 4)
-        val stop = if (e < 0) rawHead.length else e + 3
-        var x = c
-        while (x < stop) { sb.setCharAt(x, ' '); x += 1 }
-        c = rawHead.indexOf("<!--", stop)
+    val arena = prescanArena.get()
+    HtmlTokenizer.tokenize(b, math.min(b.length, 1024), arena)
+    var t = 0
+    while (t < arena.size) {
+      val k = arena.kinds(t)
+      if ((k == Tok.Start || k == Tok.SelfClose) && arena.tagName(arena.tagIds(t)) == "meta") {
+        val label = metaLabel(b, arena.starts(t), arena.ends(t))
+        if (label != null) {
+          val declared = resolve(label)
+          val declaredUp = declared.name().toUpperCase(java.util.Locale.ROOT)
+          return (if (declaredUp.startsWith("UTF-16") || declaredUp.startsWith("UTF-32")) Utf8
+            else declared, 0)
+        }
       }
-      sb.toString
-    }
-    var m = head.indexOf("<meta")
-    while (m >= 0) {
-      val tagEnd = { val e = head.indexOf('>', m); if (e < 0) head.length else e }
-      // attribute-level scan (NOT a raw substring search — "charset=" inside
-      // an unrelated attribute VALUE like content="how to use charset=x"
-      // must not hijack the document charset): collect the charset attr, and
-      // the http-equiv/content pair for the legacy content-type form
-      var charsetVal: String = null
-      var httpEquiv: String = null
-      var contentVal: String = null
-      var j = m + 5
-      while (j < tagEnd) {
-        if (head(j).isLetter) {
-          val ns = j
-          while (j < tagEnd && (head(j).isLetterOrDigit || head(j) == '-' || head(j) == '_')) j += 1
-          val aname = head.substring(ns, j)
-          while (j < tagEnd && head(j).isWhitespace) j += 1
-          var avalue: String = null
-          if (j < tagEnd && head(j) == '=') {
-            j += 1
-            while (j < tagEnd && head(j).isWhitespace) j += 1
-            if (j < tagEnd && (head(j) == '"' || head(j) == '\'')) {
-              val q = head(j); j += 1
-              val vs = j
-              while (j < tagEnd && head(j) != q) j += 1
-              avalue = head.substring(vs, j)
-              if (j < tagEnd) j += 1
-            } else {
-              val vs = j
-              while (j < tagEnd && !head(j).isWhitespace && head(j) != '>') j += 1
-              avalue = head.substring(vs, j)
-            }
-          }
-          if (avalue != null) aname match {
-            case "charset"    => if (charsetVal == null) charsetVal = avalue.trim
-            case "http-equiv" => httpEquiv = avalue.trim
-            case "content"    => contentVal = avalue
-            case _            => ()
-          }
-        } else j += 1
-      }
-      val fromContent =
-        if (charsetVal == null && httpEquiv == "content-type" && contentVal != null) {
-          val ci = contentVal.indexOf("charset=")
-          if (ci >= 0) {
-            var k = ci + 8
-            if (k < contentVal.length && (contentVal(k) == '"' || contentVal(k) == '\'')) k += 1
-            val vs = k
-            while (k < contentVal.length &&
-              (contentVal(k).isLetterOrDigit || contentVal(k) == '-' || contentVal(k) == '_')) k += 1
-            val v = contentVal.substring(vs, k)
-            if (v.nonEmpty) v else null
-          } else null
-        } else null
-      val label = if (charsetVal != null && charsetVal.nonEmpty) charsetVal else fromContent
-      if (label != null) {
-        val declared = resolve(label)
-        // HTML5 §13.2: a meta-declared utf-16 label means utf-8 — the
-        // declaration was readable as ASCII bytes, which proves the payload
-        // is NOT utf-16 (real utf-16/32 is caught by the BOM checks above)
-        val declaredUp = declared.name().toUpperCase(java.util.Locale.ROOT)
-        val cs = if (declaredUp.startsWith("UTF-16") ||
-          declaredUp.startsWith("UTF-32")) Utf8 else declared
-        return (cs, 0)
-      }
-      // resume past THIS tag's end — restarting at m+5 would let a literal
-      // '<meta charset=…>' inside this meta's quoted content value be
-      // parsed as a real tag and hijack the charset
-      m = head.indexOf("<meta", math.max(m + 5, tagEnd))
+      t += 1
     }
     (Utf8, 0)
+  }
+
+  /** The charset label of the `<meta>` tag in bytes [s, e), or null. */
+  private def metaLabel(b: Array[Byte], s: Int, e: Int): String = {
+    val charset = HtmlTokenizer.attrValue(b, s, e, "charset")
+    if (charset != null) return if (charset.nonEmpty) charset else null
+    val equiv = HtmlTokenizer.attrValue(b, s, e, "http-equiv")
+    if (equiv == null || equiv.toLowerCase(java.util.Locale.ROOT) != "content-type") return null
+    val content = HtmlTokenizer.attrValue(b, s, e, "content")
+    if (content == null) return null
+    val c = content.toLowerCase(java.util.Locale.ROOT)
+    val ci = c.indexOf("charset=")
+    if (ci < 0) return null
+    var k = ci + 8
+    if (k < c.length && (c(k) == '"' || c(k) == '\'')) k += 1
+    val vs = k
+    while (k < c.length && (c(k).isLetterOrDigit || c(k) == '-' || c(k) == '_')) k += 1
+    if (k > vs) c.substring(vs, k) else null
+  }
+}
+
+/** The one reader of attribute syntax inside a tag's bytes. Each `next()`
+  * steps to the following attribute and leaves its name span
+  * [nameStart, nameEnd) and value span [valueStart, valueEnd), with
+  * valueStart = -1 for an attribute without `=`. A name is an ASCII letter,
+  * then letters, digits, '-' or '_'; a value is quoted ('…' or "…", a
+  * missing closing quote runs to the end) or runs to whitespace or '>', so
+  * `class=icon/` keeps its slash. The scan ends at the first '>' outside a
+  * quoted value, where `pos` is left, or at the end of the range; a "/>"
+  * there sets `selfClose`. Reused across tags: no allocation per attribute.
+  */
+private[htmltok] final class AttrScanner {
+  private var input: Array[Byte] = Array.emptyByteArray
+  private var end = 0
+  var pos = 0
+  var nameStart = 0
+  var nameEnd = 0
+  var valueStart = -1
+  var valueEnd = -1
+  var selfClose = false
+
+  /** Scan the attributes in bytes [from, until). */
+  def reset(in: Array[Byte], from: Int, until: Int): Unit = {
+    input = in; pos = from; end = until; selfClose = false
+  }
+
+  private def isSpace(b: Byte): Boolean = b == ' ' || b == '\t' || b == '\n' || b == '\r'
+
+  /** Advance to the next attribute; false once the tag's '>' or the end of
+    * the range is reached. (The scan runs on locals, stored back on exit.) */
+  def next(): Boolean = {
+    val in = input
+    val e = end
+    var p = pos
+    while (p < e && in(p) != '>') {
+      val c = in(p) & 0xff
+      if (c == '/' && p + 1 < e && in(p + 1) == '>') { selfClose = true; p += 1 }
+      else if (HtmlTokenizer.isAsciiLetter(c)) {
+        nameStart = p
+        while (p < e && { val cc = in(p) & 0xff
+          HtmlTokenizer.isAsciiLetter(cc) || (cc >= '0' && cc <= '9') || cc == '-' || cc == '_' }) p += 1
+        nameEnd = p
+        while (p < e && isSpace(in(p))) p += 1
+        var vs = -1
+        var ve = -1
+        if (p < e && in(p) == '=') {
+          p += 1
+          while (p < e && isSpace(in(p))) p += 1
+          if (p < e && (in(p) == '"' || in(p) == '\'')) {
+            val quote = in(p); p += 1
+            vs = p
+            while (p < e && in(p) != quote) p += 1
+            ve = p
+            if (p < e) p += 1
+          } else {
+            vs = p
+            while (p < e && !isSpace(in(p)) && in(p) != '>') p += 1
+            ve = p
+          }
+        }
+        valueStart = vs
+        valueEnd = ve
+        pos = p
+        return true
+      } else p += 1
+    }
+    pos = p
+    false
+  }
+
+  /** Does the current attribute's name equal `name` (ASCII lowercase),
+    * ignoring ASCII case? */
+  def nameIs(name: String): Boolean = {
+    val len = nameEnd - nameStart
+    if (len != name.length) return false
+    var k = 0
+    while (k < len) {
+      if (HtmlTokenizer.toLower(input(nameStart + k) & 0xff) != name.charAt(k)) return false
+      k += 1
+    }
+    true
   }
 }
 
@@ -378,15 +429,28 @@ object HtmlTokenizer {
   private val contentHintWords = Array("article", "content", "main", "post", "body-text",
     "story", "entry", "text")
 
-  private def isAsciiLetter(c: Int): Boolean =
+  private[htmltok] def isAsciiLetter(c: Int): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
-  private def toLower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
+  private[htmltok] def toLower(c: Int): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
+
+  /** End of the tag name that starts at `from`: an ASCII letter, then ASCII
+    * letters, digits or '-'; `from` itself when no letter is there. The one
+    * reader of tag names, for start tags, end tags and [[attrValue]]. */
+  private def tagNameEnd(input: Array[Byte], from: Int, n: Int): Int = {
+    if (from >= n || !isAsciiLetter(input(from) & 0xff)) return from
+    var j = from + 1
+    while (j < n && { val c = input(j) & 0xff; isAsciiLetter(c) || (c >= '0' && c <= '9') || c == '-' }) j += 1
+    j
+  }
 
   /** Tokenize `input` into `arena` (which is reset first). */
-  def tokenize(input: Array[Byte], arena: TokenArena): Unit = {
+  def tokenize(input: Array[Byte], arena: TokenArena): Unit = tokenize(input, input.length, arena)
+
+  /** Tokenize the first `n` bytes of `input` into `arena`, exactly as if
+    * they were the whole input. */
+  private[htmltok] def tokenize(input: Array[Byte], n: Int, arena: TokenArena): Unit = {
     arena.reset()
-    val n = input.length
     var i = 0
     var textStart = 0 // start of pending text run
 
@@ -440,25 +504,17 @@ object HtmlTokenizer {
             i = end; textStart = i
           }
         } else if (c1 == '/') {
-          // end tag — name charset must match parseStartTag's (letter first,
-          // then letter/digit/'-'), or hyphenated custom elements never close
-          var j = i + 2
-          val nameSb = new java.lang.StringBuilder(8)
-          while (j < n && {
-            val cc = input(j) & 0xff
-            isAsciiLetter(cc) ||
-              (nameSb.length > 0 && ((cc >= '0' && cc <= '9') || cc == '-'))
-          }) {
-            nameSb.append(toLower(input(j) & 0xff).toChar); j += 1
-          }
-          if (nameSb.length == 0) {
+          // end tag
+          val nameEnd = tagNameEnd(input, i + 2, n)
+          if (nameEnd == i + 2) {
             // stray "</" with no name: treat as text
             i += 1
           } else {
+            var j = nameEnd
             while (j < n && input(j) != '>') j += 1
             val end = if (j < n) j + 1 else n
             flushText(i)
-            arena.add(Tok.End, i, end, arena.intern(nameSb.toString), 0)
+            arena.add(Tok.End, i, end, arena.intern(lowerName(input, i + 2, nameEnd)), 0)
             i = end; textStart = i
           }
         } else if (isAsciiLetter(c1)) {
@@ -531,16 +587,23 @@ object HtmlTokenizer {
     val out = Vector.newBuilder[String]
     var t = 0
     while (t < arena.size) {
-      val k = arena.kinds(t)
-      if ((k == Tok.Start || k == Tok.SelfClose) &&
-          (arena.flags(t) & TokenFlags.HasHref) != 0 &&
-          arena.tagName(arena.tagIds(t)) == "a") {
-        val v = hrefValue(input, arena.starts(t), arena.ends(t))
-        if (v != null && v.nonEmpty) out += v
-      }
+      val v = anchorHref(input, arena, t)
+      if (v != null) out += v
       t += 1
     }
     out.result()
+  }
+
+  /** The non-empty href of token `t` when it is an `<a href>` start tag,
+    * else null — the anchor filter of every link walk. */
+  private def anchorHref(input: Array[Byte], arena: TokenArena, t: Int): String = {
+    val k = arena.kinds(t)
+    if ((k == Tok.Start || k == Tok.SelfClose) &&
+        (arena.flags(t) & TokenFlags.HasHref) != 0 &&
+        arena.tagName(arena.tagIds(t)) == "a") {
+      val v = attrValue(input, arena.starts(t), arena.ends(t), "href")
+      if (v != null && v.nonEmpty) v else null
+    } else null
   }
 
   /** (href, anchor text) pairs of `<a>` tags in document order — the
@@ -556,48 +619,43 @@ object HtmlTokenizer {
     val out = Vector.newBuilder[(String, String)]
     var t = 0
     while (t < arena.size) {
-      val k = arena.kinds(t)
-      if ((k == Tok.Start || k == Tok.SelfClose) &&
-          (arena.flags(t) & TokenFlags.HasHref) != 0 &&
-          arena.tagName(arena.tagIds(t)) == "a") {
-        val href = hrefValue(input, arena.starts(t), arena.ends(t))
-        if (href != null && href.nonEmpty) {
-          val sb = new java.lang.StringBuilder()
-          var j = t + 1
-          var open = k == Tok.Start
-          var skipDepth = 0 // svg/noscript/iframe/object/… subtree depth
-          while (open && j < arena.size) {
-            val kj = arena.kinds(j)
-            val nj = if (arena.tagIds(j) >= 0) arena.tagName(arena.tagIds(j)) else null
-            if (kj == Tok.Text) {
-              // invisible subtrees contribute NO anchor text — the same
-              // HtmlNames.isSkip set the DOM walk excludes, so
-              // '<a><svg><text>42</text></svg>Home</a>' reads "Home", not
-              // "42 Home" (the flat walk previously skipped only rawtext)
-              if (skipDepth == 0)
-                sb.append(new String(input, arena.starts(j),
-                  arena.ends(j) - arena.starts(j), java.nio.charset.StandardCharsets.UTF_8))
-            } else if ((kj == Tok.End || kj == Tok.Start) && nj == "a" && skipDepth == 0) {
-              open = false
-            } else if (kj == Tok.Start && nj != null && HtmlNames.isRawtext(nj)) {
-              // rawtext bodies (script/style/…) are emitted as Text tokens —
-              // skip to the matching End so code never leaks into anchor text
-              val rid = arena.tagIds(j)
-              j += 1
-              while (j < arena.size &&
-                  !(arena.kinds(j) == Tok.End && arena.tagIds(j) == rid)) j += 1
-            } else if (kj == Tok.Start && nj != null && HtmlNames.isSkip(nj)) {
-              skipDepth += 1
-            } else if (kj == Tok.End && nj != null && HtmlNames.isSkip(nj) &&
-                skipDepth > 0) {
-              skipDepth -= 1
-            }
+      val href = anchorHref(input, arena, t)
+      if (href != null) {
+        val sb = new java.lang.StringBuilder()
+        var j = t + 1
+        var open = arena.kinds(t) == Tok.Start
+        var skipDepth = 0 // svg/noscript/iframe/object/… subtree depth
+        while (open && j < arena.size) {
+          val kj = arena.kinds(j)
+          val nj = if (arena.tagIds(j) >= 0) arena.tagName(arena.tagIds(j)) else null
+          if (kj == Tok.Text) {
+            // invisible subtrees contribute NO anchor text — the same
+            // HtmlNames.isSkip set the DOM walk excludes, so
+            // '<a><svg><text>42</text></svg>Home</a>' reads "Home", not
+            // "42 Home" (the flat walk previously skipped only rawtext)
+            if (skipDepth == 0)
+              sb.append(new String(input, arena.starts(j),
+                arena.ends(j) - arena.starts(j), java.nio.charset.StandardCharsets.UTF_8))
+          } else if ((kj == Tok.End || kj == Tok.Start) && nj == "a" && skipDepth == 0) {
+            open = false
+          } else if (kj == Tok.Start && nj != null && HtmlNames.isRawtext(nj)) {
+            // rawtext bodies (script/style/…) are emitted as Text tokens —
+            // skip to the matching End so code never leaks into anchor text
+            val rid = arena.tagIds(j)
             j += 1
+            while (j < arena.size &&
+                !(arena.kinds(j) == Tok.End && arena.tagIds(j) == rid)) j += 1
+          } else if (kj == Tok.Start && nj != null && HtmlNames.isSkip(nj)) {
+            skipDepth += 1
+          } else if (kj == Tok.End && nj != null && HtmlNames.isSkip(nj) &&
+              skipDepth > 0) {
+            skipDepth -= 1
           }
-          val raw = sb.toString
-          val decoded = graft.extract.Entities.decode(raw)
-          out += href -> decoded.split("\\s+").filter(_.nonEmpty).mkString(" ")
+          j += 1
         }
+        val raw = sb.toString
+        val decoded = graft.extract.Entities.decode(raw)
+        out += href -> decoded.split("\\s+").filter(_.nonEmpty).mkString(" ")
       }
       t += 1
     }
@@ -620,18 +678,16 @@ object HtmlTokenizer {
     var t = 0
     while (t < arena.size) {
       val k = arena.kinds(t)
-      if (k == Tok.Start || k == Tok.SelfClose) {
-        val name = arena.tagName(arena.tagIds(t))
-        if (name == "base" && !baseSeen) {
-          val h = attrValue(input, arena.starts(t), arena.ends(t), "href")
-          if (h != null && h.nonEmpty) {
-            base = graft.expressions.UrlKernel.resolve(docUrl, h)
-            baseSeen = true
-          }
-        } else if ((arena.flags(t) & TokenFlags.HasHref) != 0 && name == "a") {
-          val v = hrefValue(input, arena.starts(t), arena.ends(t))
-          if (v != null && v.nonEmpty) hrefs += v
+      if (!baseSeen && (k == Tok.Start || k == Tok.SelfClose) &&
+          arena.tagName(arena.tagIds(t)) == "base") {
+        val h = attrValue(input, arena.starts(t), arena.ends(t), "href")
+        if (h != null && h.nonEmpty) {
+          base = graft.expressions.UrlKernel.resolve(docUrl, h)
+          baseSeen = true
         }
+      } else {
+        val v = anchorHref(input, arena, t)
+        if (v != null) hrefs += v
       }
       t += 1
     }
@@ -712,142 +768,86 @@ object HtmlTokenizer {
     HeadMeta(title, desc, canonical, robots, ogTitle, ogDesc, lang)
   }
 
-  /** First href attribute value inside tag bytes [i0, end) — parseStartTag's
-    * attribute state machine with value capture instead of flag packing. */
-  private def hrefValue(input: Array[Byte], i0: Int, end: Int): String =
-    attrValue(input, i0, end, "href")
-
-  /** First value of attribute `name` inside tag bytes [i0, end) — the same
-    * state machine as parseStartTag with value capture; the value is
-    * ws-trimmed and entity-decoded (attribute-value semantics). Case
-    * matching on the attr NAME is exact-lowercase (the tokenizer lowercases
-    * nothing here; `nameIs` compares ASCII case-insensitively). */
+  /** First value of attribute `name` (ASCII lowercase, matched ignoring
+    * case) inside tag bytes [i0, end), read by the same [[AttrScanner]] as
+    * parseStartTag; the value is ws-trimmed and entity-decoded
+    * (attribute-value semantics). null when no such attribute has a value. */
   private[graft] def attrValue(input: Array[Byte], i0: Int, end: Int, name: String): String = {
-    var j = i0 + 1
-    while (j < end && (isAsciiLetter(input(j) & 0xff) ||
-        (j > i0 + 1 && { val c = input(j) & 0xff; (c >= '0' && c <= '9') || c == '-' }))) j += 1
-    while (j < end && input(j) != '>') {
-      val c = input(j) & 0xff
-      if (isAsciiLetter(c)) {
-        val anStart = j
-        while (j < end && { val cc = input(j) & 0xff
-          isAsciiLetter(cc) || (cc >= '0' && cc <= '9') || cc == '-' || cc == '_' }) j += 1
-        val anLen = j - anStart
-        while (j < end && (input(j) == ' ' || input(j) == '\t' || input(j) == '\n' || input(j) == '\r')) j += 1
-        var vStart = -1
-        var vEnd = -1
-        if (j < end && input(j) == '=') {
-          j += 1
-          while (j < end && (input(j) == ' ' || input(j) == '\t' || input(j) == '\n' || input(j) == '\r')) j += 1
-          if (j < end && (input(j) == '"' || input(j) == '\'')) {
-            val quote = input(j); j += 1
-            vStart = j
-            while (j < end && input(j) != quote) j += 1
-            vEnd = j
-            if (j < end) j += 1
-          } else {
-            vStart = j
-            while (j < end && { val cc = input(j) & 0xff; cc != ' ' && cc != '\t' && cc != '\n' && cc != '\r' && cc != '>' }) j += 1
-            vEnd = j
-          }
-        }
-        if (vStart >= 0 && nameIs(input, anStart, anLen, name)) {
-          var a = vStart
-          var b = vEnd
-          while (a < b && (input(a) & 0xff) <= ' ') a += 1
-          while (b > a && (input(b - 1) & 0xff) <= ' ') b -= 1
-          val raw = new String(input, a, b - a, java.nio.charset.StandardCharsets.UTF_8)
-          return graft.extract.Entities.decode(raw)
-        }
-      } else j += 1
+    val at = new AttrScanner
+    at.reset(input, tagNameEnd(input, i0 + 1, end), end)
+    while (at.next()) {
+      if (at.valueStart >= 0 && at.nameIs(name)) {
+        var a = at.valueStart
+        var b = at.valueEnd
+        while (a < b && (input(a) & 0xff) <= ' ') a += 1
+        while (b > a && (input(b - 1) & 0xff) <= ' ') b -= 1
+        return graft.extract.Entities.decode(
+          new String(input, a, b - a, java.nio.charset.StandardCharsets.UTF_8))
+      }
     }
     null
   }
+
+  /** The tag name in bytes [from, to), lowercased (tag names are ASCII). */
+  private def lowerName(input: Array[Byte], from: Int, to: Int): String =
+    new String(input, from, to - from, java.nio.charset.StandardCharsets.ISO_8859_1)
+      .toLowerCase(java.util.Locale.ROOT)
 
   /** Parse a start tag beginning at `i0` (input(i0)=='<'). Adds the token to the
     * arena and returns the index just past '>'; returns -1 if malformed (no '>'
     * found — caller treats '<' as text). Extracts href presence and class/id hints.
     */
   private def parseStartTag(input: Array[Byte], i0: Int, n: Int, arena: TokenArena): Int = {
-    var j = i0 + 1
-    val nameSb = new java.lang.StringBuilder(8)
-    while (j < n && (isAsciiLetter(input(j) & 0xff) ||
-        (nameSb.length > 0 && { val c = input(j) & 0xff; (c >= '0' && c <= '9') || c == '-' }))) {
-      nameSb.append(toLower(input(j) & 0xff).toChar); j += 1
-    }
+    val nameEnd = tagNameEnd(input, i0 + 1, n)
     var flag = 0
-    var selfClose = false
     // attribute scan — allocation-free: attr names are matched byte-wise
-    // against the only three we care about (href/class/id), values are
-    // scanned in place (no String per attribute)
-    while (j < n && input(j) != '>') {
-      val c = input(j) & 0xff
-      if (c == '/' && j + 1 < n && input(j + 1) == '>') { selfClose = true; j += 1 }
-      else if (isAsciiLetter(c)) {
-        val anStart = j
-        while (j < n && { val cc = input(j) & 0xff
-          isAsciiLetter(cc) || (cc >= '0' && cc <= '9') || cc == '-' || cc == '_' }) j += 1
-        val anLen = j - anStart
-        // skip ws
-        while (j < n && (input(j) == ' ' || input(j) == '\t' || input(j) == '\n' || input(j) == '\r')) j += 1
-        var vStart = -1
-        var vEnd = -1
-        if (j < n && input(j) == '=') {
-          j += 1
-          while (j < n && (input(j) == ' ' || input(j) == '\t' || input(j) == '\n' || input(j) == '\r')) j += 1
-          if (j < n && (input(j) == '"' || input(j) == '\'')) {
-            val quote = input(j); j += 1
-            vStart = j
-            while (j < n && input(j) != quote) j += 1
-            vEnd = j
-            if (j < n) j += 1
-          } else {
-            vStart = j
-            while (j < n && { val cc = input(j) & 0xff; cc != ' ' && cc != '\t' && cc != '\n' && cc != '\r' && cc != '>' }) j += 1
-            vEnd = j
+    // against the few we care about, values are scanned in place (no
+    // String per attribute)
+    val at = arena.attrs
+    at.reset(input, nameEnd, n)
+    while (at.next()) {
+      val vStart = at.valueStart
+      val vEnd = at.valueEnd
+      if (vStart >= 0) {
+        if (at.nameIs("href")) flag |= TokenFlags.HasHref
+        else if (at.nameIs("colspan")) {
+          if ((flag & TokenFlags.ColspanSeen) == 0) {
+            flag |= TokenFlags.ColspanSeen | TokenFlags.packSpan(
+              colspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.ColspanShift)
+          }
+        } else if (at.nameIs("rowspan")) {
+          if ((flag & TokenFlags.RowspanSeen) == 0) {
+            flag |= TokenFlags.RowspanSeen | TokenFlags.packSpan(
+              rowspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.RowspanShift)
           }
         }
-        if (vStart >= 0) {
-          if (nameIs(input, anStart, anLen, "href")) flag |= TokenFlags.HasHref
-          else if (nameIs(input, anStart, anLen, "colspan")) {
-            if ((flag & TokenFlags.ColspanSeen) == 0) {
-              flag |= TokenFlags.ColspanSeen | TokenFlags.packSpan(
-                colspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.ColspanShift)
+        else if (at.nameIs("encoding")) {
+          if (containsTexWord(input, vStart, vEnd)) flag |= TokenFlags.TexEncoding
+        }
+        else if (at.nameIs("class") || at.nameIs("id")) {
+          var k = 0
+          var done = false
+          while (k < boilerHintWords.length && !done) {
+            if (containsAscii(input, vStart, vEnd, boilerHintWords(k))) {
+              flag |= TokenFlags.HintBoiler; done = true
             }
-          } else if (nameIs(input, anStart, anLen, "rowspan")) {
-            if ((flag & TokenFlags.RowspanSeen) == 0) {
-              flag |= TokenFlags.RowspanSeen | TokenFlags.packSpan(
-                rowspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.RowspanShift)
-            }
+            k += 1
           }
-          else if (nameIs(input, anStart, anLen, "encoding")) {
-            if (containsTexWord(input, vStart, vEnd)) flag |= TokenFlags.TexEncoding
-          }
-          else if (nameIs(input, anStart, anLen, "class") || nameIs(input, anStart, anLen, "id")) {
-            var k = 0
-            var done = false
-            while (k < boilerHintWords.length && !done) {
-              if (containsAscii(input, vStart, vEnd, boilerHintWords(k))) {
-                flag |= TokenFlags.HintBoiler; done = true
+          if (!done) {
+            k = 0
+            while (k < contentHintWords.length && !done) {
+              if (containsAscii(input, vStart, vEnd, contentHintWords(k))) {
+                flag |= TokenFlags.HintContent; done = true
               }
               k += 1
             }
-            if (!done) {
-              k = 0
-              while (k < contentHintWords.length && !done) {
-                if (containsAscii(input, vStart, vEnd, contentHintWords(k))) {
-                  flag |= TokenFlags.HintContent; done = true
-                }
-                k += 1
-              }
-            }
           }
         }
-      } else j += 1
+      }
     }
-    if (j >= n) return -1 // no '>' — EOF in tag; caller drops '<'..EOF
-    j += 1 // consume '>'
-    val name = nameSb.toString
+    if (at.pos >= n) return -1 // no '>' — EOF in tag; caller drops '<'..EOF
+    val j = at.pos + 1 // past '>'
+    val name = lowerName(input, i0 + 1, nameEnd)
     // browsers IGNORE the self-closing slash on non-void HTML elements
     // (HTML5 tree construction): '<div id=x/>' OPENS a div whose content
     // follows as children — honoring the slash would orphan the content as
@@ -857,7 +857,7 @@ object HtmlTokenizer {
     // and the foreign-content roots svg/math, where HTML5 honors the slash:
     // '<a><svg class="icon"/>Home</a>' must not open a never-closed skip subtree.
     val kind =
-      if (HtmlNames.isVoid(name) || (selfClose && (name == "svg" || name == "math"))) Tok.SelfClose
+      if (HtmlNames.isVoid(name) || (at.selfClose && (name == "svg" || name == "math"))) Tok.SelfClose
       else Tok.Start
     arena.add(kind, i0, j, arena.intern(name), flag)
     j
@@ -883,17 +883,6 @@ object HtmlTokenizer {
   private def colspanValue(raw: Int): Int = if (raw <= 0) 1 else raw
   private def rowspanValue(raw: Int): Int =
     if (raw < 0) 1 else if (raw == 0) 1023 else raw
-
-  /** Case-insensitive byte-range equality against an ASCII-lowercase name. */
-  @inline private def nameIs(input: Array[Byte], start: Int, len: Int, name: String): Boolean = {
-    if (len != name.length) return false
-    var k = 0
-    while (k < len) {
-      if (toLower(input(start + k) & 0xff) != name.charAt(k)) return false
-      k += 1
-    }
-    true
-  }
 
   /** "tex" occurs in the encoding value NOT as the prefix of "text":
     * accepts the MathML annotation conventions ("application/x-tex",

@@ -77,6 +77,19 @@ class CharsetSpec extends AnyFunSuite {
     assert(got2.text == zh)
   }
 
+  test("end-to-end: the charset comes from a meta the page's tokenization holds") {
+    val ru = "Данные обработка система распределение вычисление двигатель документ."
+    // the meta after an abrupt comment is real; the one in the title is text
+    val doc = s"""<html><head><!--><title><meta charset="koi8-r"></title>""" +
+      s"""<meta charset="windows-1251"></head><body><p>$ru</p></body></html>"""
+    val bytes = doc.getBytes(Charset.forName("windows-1251"))
+    val got = Extractor.extract("u", bytes)
+    assert(got.charset == "windows-1251")
+    assert(got.text == ru)
+    val title = graft.htmltok.HtmlTokenizer.headMeta(bytes, new graft.htmltok.TokenArena()).title
+    assert(title == """<meta charset="koi8-r">""", title)
+  }
+
   test("UTF-32 BOMs detected (FF FE 00 00 is NOT UTF-16LE) and extract") {
     val p = "thirty-two bit pages decode too"
     val doc = s"<html><body><p>$p</p></body></html>"

@@ -64,23 +64,7 @@ class ChunkedExtractSpec extends AnyFunSuite {
   }
 
   test("chunked == single-pass on generated top-level soups (property)") {
-    val section = for {
-      n <- Gen.chooseNum(1, 4)
-      ps <- Gen.listOfN(n, Gen.nonEmptyListOf(Gen.alphaNumStr.suchThat(_.nonEmpty).map(_.take(6)))
-        .map(ws => s"<p>${ws.mkString(" ")} content words enough here</p>"))
-    } yield s"<section><h2>Heading words here</h2>${ps.mkString}</section>"
-    val navish = Gen.const("""<nav><a href="/a">A</a><a href="/b">B</a></nav>""")
-    val tableish = Gen.const(
-      "<table><tr><td>cell one here</td><td>cell two here</td></tr></table>")
-    val listish = Gen.const("<ul><li>item one words</li><li>item two words</li></ul>")
-    // pre: the one block kind whose TEXT contains newlines — the merge's
-    // group-text recovery relies on "\n\n" appearing only BETWEEN groups
-    // (newline runs inside pre collapse to one '\n'), so it must be in the mix
-    val preish = Gen.const(
-      "<pre>line one of code here\n\n\nline two stays\r\nline three ends</pre>")
-    val soup = Gen.listOf(Gen.oneOf(section, navish, tableish, listish, preish)).map { parts =>
-      s"<html><body>${parts.mkString}</body></html>"
-    }
+    import ChunkedExtractSpec.soup
     check(Prop.forAll(soup) { html =>
       val row = PageRow("u", new java.sql.Timestamp(0), html.getBytes(StandardCharsets.UTF_8), null, "en")
       equivalent(row, 64).isEmpty && equivalent(row, 300).isEmpty
@@ -274,5 +258,26 @@ class ChunkedExtractSpec extends AnyFunSuite {
     assert(plan.exists(c => c.start == divAt && c.prefix == "<html><body>"), plan)
     val row = PageRow("https://x/p-div", new java.sql.Timestamp(0L), bytes, null, "en")
     assert(equivalent(row, 256).isEmpty)
+  }
+}
+
+object ChunkedExtractSpec {
+  /** Top-level soups of sections, navs, tables, lists and pre blocks. */
+  private val section = for {
+    n <- Gen.chooseNum(1, 4)
+    ps <- Gen.listOfN(n, Gen.nonEmptyListOf(Gen.alphaNumStr.suchThat(_.nonEmpty).map(_.take(6)))
+      .map(ws => s"<p>${ws.mkString(" ")} content words enough here</p>"))
+  } yield s"<section><h2>Heading words here</h2>${ps.mkString}</section>"
+  private val navish = Gen.const("""<nav><a href="/a">A</a><a href="/b">B</a></nav>""")
+  private val tableish = Gen.const(
+    "<table><tr><td>cell one here</td><td>cell two here</td></tr></table>")
+  private val listish = Gen.const("<ul><li>item one words</li><li>item two words</li></ul>")
+  // pre: the one block kind whose TEXT contains newlines — the merge's
+  // group-text recovery relies on "\n\n" appearing only BETWEEN groups
+  // (newline runs inside pre collapse to one '\n'), so it must be in the mix
+  private val preish = Gen.const(
+    "<pre>line one of code here\n\n\nline two stays\r\nline three ends</pre>")
+  val soup: Gen[String] = Gen.listOf(Gen.oneOf(section, navish, tableish, listish, preish)).map { parts =>
+    s"<html><body>${parts.mkString}</body></html>"
   }
 }

@@ -59,6 +59,33 @@ class KernelUnitSpec extends AnyFunSuite {
     val metaHttp = """<meta http-equiv="Content-Type" content="text/html; charset=windows-1252">""".getBytes("UTF-8")
     assert(Charsets.sniff(metaHttp)._1.name() == "windows-1252")
     assert(Charsets.sniff("<html>plain".getBytes("UTF-8"))._1 == Charsets.Utf8)
+    // the prescan reads the <meta> tags the tokenizer emits, and only those
+    val real = """<meta charset="windows-1251">"""
+    val prefix = "<html><head>"
+    val fill = 1024 - prefix.length - real.length // real then ends at byte 1,024
+    val cases = Seq(
+      "<!-->" + real -> "windows-1251", // abrupt comments end at once
+      "<!--->" + real -> "windows-1251",
+      """<metadata charset="koi8-r">""" + real -> "windows-1251", // not a meta
+      """<meta-x charset="koi8-r">""" + real -> "windows-1251",
+      """<link title="<meta charset=koi8-r>">""" + real -> "windows-1251", // a value
+      // first of a repeated attribute wins
+      """<meta http-equiv="content-type" http-equiv="refresh" content="text/html; charset=windows-1251">""" ->
+        "windows-1251",
+      """<meta http-equiv="content-type" content="text/html; charset=windows-1251" content="text/html; charset=koi8-r">""" ->
+        "windows-1251",
+      // rawtext/RCDATA bodies and CDATA are text
+      "<script>var s = '<meta charset=koi8-r>'</script>" + real -> "windows-1251",
+      "<title><meta charset=koi8-r></title>" + real -> "windows-1251",
+      "<![CDATA[<meta charset=koi8-r>]]>" + real -> "windows-1251",
+      // values are entity-decoded
+      """<meta charset="windows&#45;1251">""" -> "windows-1251",
+      // a tag without its '>' inside the first 1,024 bytes is not read
+      " " * (fill + 1) + real -> "UTF-8",
+      " " * fill + real -> "windows-1251")
+    for ((head, want) <- cases)
+      assert(Charsets.sniff(s"$prefix$head</head><body>x</body>".getBytes("UTF-8"))._1.name() == want,
+        head.trim)
   }
 
   test("entity decode: named, decimal, hex, unknown passthrough, double-escape") {
