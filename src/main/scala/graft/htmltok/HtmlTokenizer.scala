@@ -322,84 +322,82 @@ object Charsets {
   }
 }
 
-/** The one reader of attribute syntax inside a tag's bytes. Each `next()`
-  * steps to the following attribute and leaves its name span
-  * [nameStart, nameEnd) and value span [valueStart, valueEnd), with
-  * valueStart = -1 for an attribute without `=`. A name is an ASCII letter,
-  * then letters, digits, '-' or '_'; a value is quoted ('…' or "…", a
-  * missing closing quote runs to the end) or runs to whitespace or '>', so
-  * `class=icon/` keeps its slash. The scan ends at the first '>' outside a
-  * quoted value, where `pos` is left, or at the end of the range; a "/>"
-  * there sets `selfClose`. Reused across tags: no allocation per attribute.
+/** The one reader of attribute syntax inside a tag's bytes. `scan` reads
+  * all attributes of one tag in one call (a call per attribute, which the
+  * JIT does not inline, made tokenizing up to twice as slow) and records
+  * for each attribute k < `count` its name span (see [[nameIs]]) and value
+  * span [valueStart(k), valueEnd(k)), with valueStart(k) = -1 for an
+  * attribute without `=`. A name is an ASCII letter, then letters, digits,
+  * '-' or '_'; a value is quoted ('…' or "…", a missing closing quote runs
+  * to the end) or runs to whitespace or '>', so `class=icon/` keeps its
+  * slash. The scan ends at the first '>' outside a quoted value, where `pos`
+  * is left, or at the end of the range; a "/>" there sets `selfClose`.
+  * Reused across tags: no allocation per attribute.
   */
 private[htmltok] final class AttrScanner {
-  private var input: Array[Byte] = Array.emptyByteArray
-  private var end = 0
+  /** four ints per attribute: name start, name end, value start, value end */
+  private var spans = new Array[Int](32)
+  var count = 0
   var pos = 0
-  var nameStart = 0
-  var nameEnd = 0
-  var valueStart = -1
-  var valueEnd = -1
   var selfClose = false
 
-  /** Scan the attributes in bytes [from, until). */
-  def reset(in: Array[Byte], from: Int, until: Int): Unit = {
-    input = in; pos = from; end = until; selfClose = false
-  }
+  def valueStart(k: Int): Int = spans(4 * k + 2)
+  def valueEnd(k: Int): Int = spans(4 * k + 3)
 
   private def isSpace(b: Byte): Boolean = b == ' ' || b == '\t' || b == '\n' || b == '\r'
 
-  /** Advance to the next attribute; false once the tag's '>' or the end of
-    * the range is reached. (The scan runs on locals, stored back on exit.) */
-  def next(): Boolean = {
-    val in = input
-    val e = end
-    var p = pos
-    while (p < e && in(p) != '>') {
+  /** Read the attributes in bytes [from, until) of `in`. */
+  def scan(in: Array[Byte], from: Int, until: Int): Unit = {
+    var sp = spans
+    var c4 = 0
+    var close = false
+    var p = from
+    while (p < until && in(p) != '>') {
       val c = in(p) & 0xff
-      if (c == '/' && p + 1 < e && in(p + 1) == '>') { selfClose = true; p += 1 }
+      if (c == '/' && p + 1 < until && in(p + 1) == '>') { close = true; p += 1 }
       else if (HtmlTokenizer.isAsciiLetter(c)) {
-        nameStart = p
-        while (p < e && { val cc = in(p) & 0xff
+        val ns = p
+        while (p < until && { val cc = in(p) & 0xff
           HtmlTokenizer.isAsciiLetter(cc) || (cc >= '0' && cc <= '9') || cc == '-' || cc == '_' }) p += 1
-        nameEnd = p
-        while (p < e && isSpace(in(p))) p += 1
+        val ne = p
+        while (p < until && isSpace(in(p))) p += 1
         var vs = -1
         var ve = -1
-        if (p < e && in(p) == '=') {
+        if (p < until && in(p) == '=') {
           p += 1
-          while (p < e && isSpace(in(p))) p += 1
-          if (p < e && (in(p) == '"' || in(p) == '\'')) {
+          while (p < until && isSpace(in(p))) p += 1
+          if (p < until && (in(p) == '"' || in(p) == '\'')) {
             val quote = in(p); p += 1
             vs = p
-            while (p < e && in(p) != quote) p += 1
+            while (p < until && in(p) != quote) p += 1
             ve = p
-            if (p < e) p += 1
+            if (p < until) p += 1
           } else {
             vs = p
-            while (p < e && !isSpace(in(p)) && in(p) != '>') p += 1
+            while (p < until && !isSpace(in(p)) && in(p) != '>') p += 1
             ve = p
           }
         }
-        valueStart = vs
-        valueEnd = ve
-        pos = p
-        return true
+        if (c4 == sp.length) { sp = java.util.Arrays.copyOf(sp, c4 * 2); spans = sp }
+        sp(c4) = ns; sp(c4 + 1) = ne; sp(c4 + 2) = vs; sp(c4 + 3) = ve
+        c4 += 4
       } else p += 1
     }
+    count = c4 >> 2
     pos = p
-    false
+    selfClose = close
   }
 
-  /** Does the current attribute's name equal `name` (ASCII lowercase),
+  /** Does attribute k's name in `in` equal `name` (ASCII lowercase),
     * ignoring ASCII case? */
-  def nameIs(name: String): Boolean = {
-    val len = nameEnd - nameStart
+  def nameIs(in: Array[Byte], k: Int, name: String): Boolean = {
+    val s = spans(4 * k)
+    val len = spans(4 * k + 1) - s
     if (len != name.length) return false
-    var k = 0
-    while (k < len) {
-      if (HtmlTokenizer.toLower(input(nameStart + k) & 0xff) != name.charAt(k)) return false
-      k += 1
+    var i = 0
+    while (i < len) {
+      if (HtmlTokenizer.toLower(in(s + i) & 0xff) != name.charAt(i)) return false
+      i += 1
     }
     true
   }
@@ -549,7 +547,12 @@ object HtmlTokenizer {
         } else {
           i += 1 // '<' followed by non-tag char: text
         }
-      } else i += 1
+      } else {
+        // a text run gets a loop of its own, so its per-byte cost does not
+        // hang on how the JIT lays out the loop over tags (up to 2x apart)
+        i += 1
+        while (i < n && input(i) != '<') i += 1
+      }
     }
     flushText(n)
   }
@@ -774,16 +777,18 @@ object HtmlTokenizer {
     * (attribute-value semantics). null when no such attribute has a value. */
   private[graft] def attrValue(input: Array[Byte], i0: Int, end: Int, name: String): String = {
     val at = new AttrScanner
-    at.reset(input, tagNameEnd(input, i0 + 1, end), end)
-    while (at.next()) {
-      if (at.valueStart >= 0 && at.nameIs(name)) {
-        var a = at.valueStart
-        var b = at.valueEnd
+    at.scan(input, tagNameEnd(input, i0 + 1, end), end)
+    var k = 0
+    while (k < at.count) {
+      if (at.valueStart(k) >= 0 && at.nameIs(input, k, name)) {
+        var a = at.valueStart(k)
+        var b = at.valueEnd(k)
         while (a < b && (input(a) & 0xff) <= ' ') a += 1
         while (b > a && (input(b - 1) & 0xff) <= ' ') b -= 1
         return graft.extract.Entities.decode(
           new String(input, a, b - a, java.nio.charset.StandardCharsets.UTF_8))
       }
+      k += 1
     }
     null
   }
@@ -804,27 +809,28 @@ object HtmlTokenizer {
     // against the few we care about, values are scanned in place (no
     // String per attribute)
     val at = arena.attrs
-    at.reset(input, nameEnd, n)
-    while (at.next()) {
-      val vStart = at.valueStart
-      val vEnd = at.valueEnd
+    at.scan(input, nameEnd, n)
+    var a = 0
+    while (a < at.count) {
+      val vStart = at.valueStart(a)
+      val vEnd = at.valueEnd(a)
       if (vStart >= 0) {
-        if (at.nameIs("href")) flag |= TokenFlags.HasHref
-        else if (at.nameIs("colspan")) {
+        if (at.nameIs(input, a, "href")) flag |= TokenFlags.HasHref
+        else if (at.nameIs(input, a, "colspan")) {
           if ((flag & TokenFlags.ColspanSeen) == 0) {
             flag |= TokenFlags.ColspanSeen | TokenFlags.packSpan(
               colspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.ColspanShift)
           }
-        } else if (at.nameIs("rowspan")) {
+        } else if (at.nameIs(input, a, "rowspan")) {
           if ((flag & TokenFlags.RowspanSeen) == 0) {
             flag |= TokenFlags.RowspanSeen | TokenFlags.packSpan(
               rowspanValue(parseUInt(input, vStart, vEnd)), TokenFlags.RowspanShift)
           }
         }
-        else if (at.nameIs("encoding")) {
+        else if (at.nameIs(input, a, "encoding")) {
           if (containsTexWord(input, vStart, vEnd)) flag |= TokenFlags.TexEncoding
         }
-        else if (at.nameIs("class") || at.nameIs("id")) {
+        else if (at.nameIs(input, a, "class") || at.nameIs(input, a, "id")) {
           var k = 0
           var done = false
           while (k < boilerHintWords.length && !done) {
@@ -844,6 +850,7 @@ object HtmlTokenizer {
           }
         }
       }
+      a += 1
     }
     if (at.pos >= n) return -1 // no '>' — EOF in tag; caller drops '<'..EOF
     val j = at.pos + 1 // past '>'
