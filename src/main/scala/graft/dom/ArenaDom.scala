@@ -1,25 +1,33 @@
 package graft.dom
 
-import graft.htmltok.{HtmlNames, HtmlTokenizer, Tok, TokenArena, TokenFlags}
+import graft.htmltok.{HtmlNames, Tok, TokenArena, TokenFlags}
 
 /** Compact arena-allocated DOM: parallel primitive arrays in document (pre-)order.
   * No Node objects — the north-star "arena-allocated DOM". Reused across documents
   * within a partition (reset between docs), like the reference constructing its
   * predictors once per process (tools/infer/predict_system.py:47-75).
   *
-  * Tag-soup recovery rules (HTML5-ish, deliberately minimal + deterministic):
+  * Tag-soup recovery rules (HTML5-ish, deliberately minimal + deterministic),
+  * each a bit test on the start tag's [[HtmlNames]] class:
   *  - stray end tags with no matching open ancestor are ignored
   *  - an end tag closes everything up to (and incl.) the nearest matching open tag
-  *  - <p>/<li>/<td>/<th>/<tr>/<dd>/<dt>/<option> auto-close an open same-name sibling
-  *  - any block-level start tag closes an open <p>
-  *  - <body> or any block-level start tag closes an open <head>
-  *  - in tables and <dl>s, a new row, cell, section or dt/dd closes the open
-  *    ones up to its table or list (HTML5 implied end tags)
+  *  - an `AutoClose` start closes an open same-name element up to the nearest
+  *    `Block` that is not `Para`
+  *  - a `Block` start (body is one) closes an open `Head`, and a non-`Para`
+  *    `Block` closes a `Para` on top of the stack
+  *  - implied end tags: a `Row` start clears `Row`/`Cell` back to a `Table`/
+  *    `Section`, a `Cell` start `Cell` back to `Row`/`Table`, a `Section` start
+  *    `Cell`/`Row`/`Section` back to `Table`, a `DefItem` start `DefItem` back
+  *    to `DefList`
   *
-  * HtmlChunker plans its seams on this tree too, so these rules live here
-  * alone.
+  * Each node keeps its class bits (`cls`) and one inherited context (`ctx`):
+  * the parent's context OR the node's own `Skip`, `Boiler`, `Anchor`, `Pre`
+  * and `AnyAnnotation` bits, class/id hints and TeX `Annotation`. HtmlChunker
+  * plans its seams on this tree too, so these rules live here alone.
   */
 final class DomArena(initialCapacity: Int = 512) {
+  import DomArena._
+
   var nNodes: Int = 0
   var parent: Array[Int] = new Array[Int](initialCapacity)
   var tagId: Array[Int] = new Array[Int](initialCapacity) // -1 = text node
@@ -28,23 +36,16 @@ final class DomArena(initialCapacity: Int = 512) {
     * of the start tag's '<' (HtmlChunker places its seams there). */
   var tStart: Array[Int] = new Array[Int](initialCapacity)
   var tEnd: Array[Int] = new Array[Int](initialCapacity) // text nodes: end of the byte range
-  // cached per-node ancestry facts, computed during build (O(1) via parent's value)
-  var inSkip: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inBoiler: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inHintBoiler: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inHintContent: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inLink: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inPre: Array[Boolean] = new Array[Boolean](initialCapacity)
+  /** own HtmlNames class bits (0 for text), plus [[DomArena.MathTex]] */
+  var cls: Array[Int] = new Array[Int](initialCapacity)
+  /** inherited context bits, see the class comment */
+  var ctx: Array[Int] = new Array[Int](initialCapacity)
   var blockAnchor: Array[Int] = new Array[Int](initialCapacity) // nearest block-level ancestor-or-self
-  // formula branch (MathML): nearest <math> ancestor-or-self (-1 = none),
-  // inside-any-<annotation>/-<annotation-xml> subtree, inside a TeX-encoded
-  // <annotation>, and per-<math>-root "a TeX annotation exists somewhere
-  // under me" (computed in one linear post-pass at the end of build)
+  // formula branch (MathML): nearest <math> ancestor-or-self (-1 = none)
   var mathRoot: Array[Int] = new Array[Int](initialCapacity)
-  var inAnn: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var inTexAnn: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var mathHasTex: Array[Boolean] = new Array[Boolean](initialCapacity)
-  var names: IndexedSeq[String] = Vector.empty // interned tag names (from TokenArena)
+  private var toks: TokenArena = null // the tokens (and tag names) of the last build
+  private var stack = new Array[Int](64) // open-element stack of node ids
+  private var sp = 0
 
   def reset(): Unit = nNodes = 0
 
@@ -55,23 +56,22 @@ final class DomArena(initialCapacity: Int = 512) {
     flags = java.util.Arrays.copyOf(flags, cap)
     tStart = java.util.Arrays.copyOf(tStart, cap)
     tEnd = java.util.Arrays.copyOf(tEnd, cap)
-    inSkip = java.util.Arrays.copyOf(inSkip, cap)
-    inBoiler = java.util.Arrays.copyOf(inBoiler, cap)
-    inHintBoiler = java.util.Arrays.copyOf(inHintBoiler, cap)
-    inHintContent = java.util.Arrays.copyOf(inHintContent, cap)
-    inLink = java.util.Arrays.copyOf(inLink, cap)
-    inPre = java.util.Arrays.copyOf(inPre, cap)
+    cls = java.util.Arrays.copyOf(cls, cap)
+    ctx = java.util.Arrays.copyOf(ctx, cap)
     blockAnchor = java.util.Arrays.copyOf(blockAnchor, cap)
     mathRoot = java.util.Arrays.copyOf(mathRoot, cap)
-    inAnn = java.util.Arrays.copyOf(inAnn, cap)
-    inTexAnn = java.util.Arrays.copyOf(inTexAnn, cap)
-    mathHasTex = java.util.Arrays.copyOf(mathHasTex, cap)
     pathCache = java.util.Arrays.copyOf(pathCache, cap)
   }
 
-  def name(node: Int): String = { val t = tagId(node); if (t < 0) "#text" else names(t) }
+  def name(node: Int): String = { val t = tagId(node); if (t < 0) "#text" else toks.tagName(t) }
 
   def isText(node: Int): Boolean = tagId(node) < 0
+
+  /** Does `node` itself carry class bit `c`? */
+  def is(node: Int, c: Int): Boolean = (cls(node) & c) != 0
+
+  /** Does `node` sit in (or is it) a subtree with context bit `c`? */
+  def within(node: Int, c: Int): Boolean = (ctx(node) & c) != 0
 
   /** Table-span attributes of a node (1 when absent; packed by the tokenizer). */
   def colspanOf(node: Int): Int = TokenFlags.colspan(flags(node))
@@ -104,63 +104,71 @@ final class DomArena(initialCapacity: Int = 512) {
     prefix
   }
 
-  private def addNode(p: Int, tag: Int, fl: Int, ts: Int, te: Int, tagName: String): Int = {
+  private def addNode(p: Int, tag: Int, fl: Int, ts: Int, te: Int): Int = {
     if (nNodes == parent.length) grow()
     val id = nNodes
+    val c = if (tag >= 0) toks.tagClass(tag) else 0
     parent(id) = p
     tagId(id) = tag
     flags(id) = fl
     tStart(id) = ts
     tEnd(id) = te
-    val isElem = tag >= 0
-    val nm = if (isElem) tagName else null
-    val pSkip = p >= 0 && inSkip(p)
-    val pBoiler = p >= 0 && inBoiler(p)
-    val pHintB = p >= 0 && inHintBoiler(p)
-    val pHintC = p >= 0 && inHintContent(p)
-    val pLink = p >= 0 && inLink(p)
-    val pPre = p >= 0 && inPre(p)
-    inSkip(id) = pSkip || (isElem && HtmlNames.isSkip(nm))
-    inPre(id) = pPre || (isElem && (nm == "pre" || nm == "textarea"))
-    inBoiler(id) = pBoiler || (isElem && HtmlNames.isBoiler(nm))
-    inHintBoiler(id) = pHintB || (fl & TokenFlags.HintBoiler) != 0
-    inHintContent(id) = pHintC || (fl & TokenFlags.HintContent) != 0
-    inLink(id) = pLink || (isElem && nm == "a")
+    cls(id) = c
+    var own = c & Inherited
+    if ((fl & TokenFlags.HintBoiler) != 0) own |= HintBoiler
+    if ((fl & TokenFlags.HintContent) != 0) own |= HintContent
+    if ((c & HtmlNames.Annotation) != 0 && (fl & TokenFlags.TexEncoding) != 0) own |= TexAnnotation
+    ctx(id) = (if (p >= 0) ctx(p) else 0) | own
     blockAnchor(id) =
-      if (isElem && HtmlNames.isBlock(nm)) id
+      if ((c & HtmlNames.Block) != 0) id
       else if (p >= 0) blockAnchor(p)
       else id
     mathRoot(id) =
-      if (isElem && nm == "math") id
+      if ((c & HtmlNames.Math) != 0) id
       else if (p >= 0) mathRoot(p)
       else -1
-    inAnn(id) = (p >= 0 && inAnn(p)) ||
-      (isElem && (nm == "annotation" || nm == "annotation-xml"))
-    inTexAnn(id) = (p >= 0 && inTexAnn(p)) ||
-      (isElem && nm == "annotation" && (fl & TokenFlags.TexEncoding) != 0)
-    mathHasTex(id) = false // set by build()'s post-pass (per-doc clean slate)
+    // a TeX source under a <math> root: the segmenter keeps it and drops
+    // the root's presentation text
+    if ((own & TexAnnotation) != 0 && mathRoot(id) >= 0) cls(mathRoot(id)) |= MathTex
     pathCache(id) = null // invalidate any stale path from a previous document
     nNodes += 1
     id
   }
 
-  /** Build from a tokenized arena. Returns this. */
+  private def top: Int = if (sp == 0) -1 else stack(sp - 1)
+
+  private def push(node: Int): Unit = {
+    if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
+    stack(sp) = node; sp += 1
+  }
+
+  /** Clear the open elements above the nearest `barrier`-class element,
+    * when one of them is of a `target` class — a stray cell/row tag with no
+    * table context must not close unrelated ancestors. */
+  private def clearAbove(target: Int, barrier: Int): Unit = {
+    var k = sp - 1
+    var bi = -1
+    var sawTarget = false
+    while (k >= 0 && bi < 0) {
+      val c = cls(stack(k))
+      if ((c & barrier) != 0) bi = k
+      else if ((c & target) != 0) sawTarget = true
+      k -= 1
+    }
+    if (bi >= 0 && sawTarget) sp = bi + 1
+  }
+
+  /** Build from a tokenized arena; names and classes are read from `toks`
+    * until the next build. Returns this. */
   def build(toks: TokenArena): DomArena = {
     reset()
-    names = toks.namesSnapshot
-    // open-element stack of node ids
-    var stack = new Array[Int](64)
-    var sp = 0
-    def top: Int = if (sp == 0) -1 else stack(sp - 1)
-    def push(node: Int): Unit = {
-      if (sp == stack.length) stack = java.util.Arrays.copyOf(stack, sp * 2)
-      stack(sp) = node; sp += 1
-    }
+    this.toks = toks
+    sp = 0
     var i = 0
     while (i < toks.size) {
       (toks.kinds(i): @annotation.switch) match {
         case Tok.Text =>
-          addNode(top, -1, 0, toks.starts(i), toks.ends(i), null)
+          addNode(top, -1, 0, toks.starts(i), toks.ends(i))
         case Tok.Cdata =>
           // strip the "<![CDATA[" wrapper (9 bytes) and, ONLY when the
           // closer exists (token flag 1), the trailing "]]>" — an unclosed
@@ -168,18 +176,18 @@ final class DomArena(initialCapacity: Int = 512) {
           val ts = toks.starts(i) + 9
           val closerLen = if (toks.flags(i) == 1) 3 else 0
           val te = math.max(ts, toks.ends(i) - closerLen)
-          if (te > ts) addNode(top, -1, 0, ts, te, null)
+          if (te > ts) addNode(top, -1, 0, ts, te)
         case Tok.Start =>
           val tid = toks.tagIds(i)
-          val nm = names(tid)
-          // implicit </head>: anything body-level (body itself or any block
-          // element) closes an open head — a page omitting </head> (legal
-          // HTML5) must not inherit head's skip-subtree status for its whole
-          // body, which extracted as EMPTY text
-          if (nm == "body" || HtmlNames.isBlock(nm)) {
+          val c = toks.tagClass(tid)
+          // implicit </head>: anything body-level closes an open head — a
+          // page omitting </head> (legal HTML5) must not inherit head's
+          // skip-subtree status for its whole body, which extracted as EMPTY
+          // text
+          if ((c & HtmlNames.Block) != 0) {
             var k = sp - 1
             while (k >= 0) {
-              if (tagId(stack(k)) >= 0 && name(stack(k)) == "head") { sp = k; k = 0 }
+              if ((cls(stack(k)) & HtmlNames.Head) != 0) { sp = k; k = 0 }
               k -= 1
             }
           }
@@ -192,58 +200,31 @@ final class DomArena(initialCapacity: Int = 512) {
           // the second row INSIDE the first cell (same-name auto-close
           // stopped at the td block boundary), corrupting depth/tagPath and
           // the table-assembly anchors.
-          locally {
-            def clearAbove(target: String => Boolean,
-                           barrier: String => Boolean): Unit = {
-              var k = sp - 1
-              var bi = -1
-              var sawTarget = false
-              while (k >= 0 && bi < 0) {
-                val nk = if (tagId(stack(k)) >= 0) name(stack(k)) else ""
-                if (barrier(nk)) bi = k
-                else if (target(nk)) sawTarget = true
-                k -= 1
-              }
-              // only clear when a closable element is actually open above
-              // the barrier — a stray cell/row tag with no table context
-              // must not close unrelated ancestors
-              if (bi >= 0 && sawTarget) sp = bi + 1
-            }
-            nm match {
-              case "tr" => clearAbove(
-                n => n == "td" || n == "th" || n == "tr",
-                n => n == "table" || n == "thead" || n == "tbody" || n == "tfoot")
-              case "td" | "th" => clearAbove(
-                n => n == "td" || n == "th",
-                n => n == "tr" || n == "table")
-              case "thead" | "tbody" | "tfoot" => clearAbove(
-                n => n == "td" || n == "th" || n == "tr" ||
-                  n == "thead" || n == "tbody" || n == "tfoot",
-                n => n == "table")
-              case "dt" | "dd" => clearAbove(
-                n => n == "dt" || n == "dd",
-                n => n == "dl")
-              case _ => ()
-            }
-          }
+          if ((c & HtmlNames.Row) != 0)
+            clearAbove(HtmlNames.Row | HtmlNames.Cell, HtmlNames.Table | HtmlNames.Section)
+          else if ((c & HtmlNames.Cell) != 0)
+            clearAbove(HtmlNames.Cell, HtmlNames.Row | HtmlNames.Table)
+          else if ((c & HtmlNames.Section) != 0)
+            clearAbove(HtmlNames.Cell | HtmlNames.Row | HtmlNames.Section, HtmlNames.Table)
+          else if ((c & HtmlNames.DefItem) != 0)
+            clearAbove(HtmlNames.DefItem, HtmlNames.DefList)
           // implicit closes
-          if (HtmlNames.autoCloses(nm)) {
+          if ((c & HtmlNames.AutoClose) != 0) {
             // close an open same-name sibling up to the nearest block boundary
             var k = sp - 1
             var found = -1
             while (k >= 0 && found < 0) {
               if (tagId(stack(k)) == tid) found = k
-              else if (HtmlNames.isBlock(name(stack(k))) && name(stack(k)) != "p") k = -1
+              else if ((cls(stack(k)) & (HtmlNames.Block | HtmlNames.Para)) == HtmlNames.Block) k = -1
               k -= 1
             }
             if (found >= 0) sp = found
           }
-          if (HtmlNames.isBlock(nm) && sp > 0 && name(top) == "p" && nm != "p") sp -= 1
-          val node = addNode(top, tid, toks.flags(i), toks.starts(i), 0, nm)
-          push(node)
+          if ((c & (HtmlNames.Block | HtmlNames.Para)) == HtmlNames.Block && sp > 0 &&
+              (cls(top) & HtmlNames.Para) != 0) sp -= 1
+          push(addNode(top, tid, toks.flags(i), toks.starts(i), 0))
         case Tok.SelfClose =>
-          val tid = toks.tagIds(i)
-          addNode(top, tid, toks.flags(i), toks.starts(i), 0, names(tid))
+          addNode(top, toks.tagIds(i), toks.flags(i), toks.starts(i), 0)
         case Tok.End =>
           val tid = toks.tagIds(i)
           var k = sp - 1
@@ -254,20 +235,19 @@ final class DomArena(initialCapacity: Int = 512) {
       }
       i += 1
     }
-    // formula post-pass: mark each <math> root that carries a TeX-encoded
-    // <annotation> descendant (source-selection fact for the segmenter —
-    // prefer the TeX source, drop the presentation linearization). Linear in
-    // nodes; an element IS its own inTexAnn when it is the annotation, so the
-    // check below fires exactly on TeX-annotation elements.
-    var k = 0
-    while (k < nNodes) {
-      if (tagId(k) >= 0 && inTexAnn(k) && mathRoot(k) >= 0 &&
-          (flags(k) & TokenFlags.TexEncoding) != 0 && name(k) == "annotation")
-        mathHasTex(mathRoot(k)) = true
-      k += 1
-    }
     this
   }
+}
+
+object DomArena {
+  /** The class bits a node passes on to its subtree as they are. */
+  private val Inherited = HtmlNames.Skip | HtmlNames.Boiler | HtmlNames.Anchor |
+    HtmlNames.Pre | HtmlNames.AnyAnnotation
+  // context and mark bits, above every HtmlNames class bit
+  final val HintBoiler = 1 << 26 // ctx: a class/id matched the boilerplate-hint lexicon
+  final val HintContent = 1 << 27 // ctx: a class/id matched the content-hint lexicon
+  final val TexAnnotation = 1 << 28 // ctx: inside a TeX-encoded <annotation>
+  final val MathTex = 1 << 29 // cls: a <math> root holding a TeX-encoded <annotation>
 }
 
 /** One segment of a block: a text-node byte range, or a break marker (<br>). */
@@ -288,8 +268,7 @@ final class BlockArena(initialCapacity: Int = 256) {
   var segKind: Array[Int] = new Array[Int](1024)
   var segStart: Array[Int] = new Array[Int](1024)
   var segEnd: Array[Int] = new Array[Int](1024)
-  var segInLink: Array[Boolean] = new Array[Boolean](1024)
-  var segInPre: Array[Boolean] = new Array[Boolean](1024)
+  var segCtx: Array[Int] = new Array[Int](1024) // the text node's DomArena.ctx
   // formula branch: the <math> root this segment belongs to (-1 = plain text).
   // Consecutive segments sharing one root form one math group in classify.
   var segMathRoot: Array[Int] = new Array[Int](1024)
@@ -308,8 +287,7 @@ final class BlockArena(initialCapacity: Int = 256) {
     segKind = java.util.Arrays.copyOf(segKind, cap)
     segStart = java.util.Arrays.copyOf(segStart, cap)
     segEnd = java.util.Arrays.copyOf(segEnd, cap)
-    segInLink = java.util.Arrays.copyOf(segInLink, cap)
-    segInPre = java.util.Arrays.copyOf(segInPre, cap)
+    segCtx = java.util.Arrays.copyOf(segCtx, cap)
     segMathRoot = java.util.Arrays.copyOf(segMathRoot, cap)
   }
 
@@ -322,14 +300,12 @@ final class BlockArena(initialCapacity: Int = 256) {
     segOff(nBlocks) = nSegs
   }
 
-  def addSeg(kind: Int, start: Int, end: Int, inLink: Boolean,
-             inPre: Boolean = false, mathRoot: Int = -1): Unit = {
+  def addSeg(kind: Int, start: Int, end: Int, ctx: Int, mathRoot: Int): Unit = {
     if (nSegs == segKind.length) growSegs()
     segKind(nSegs) = kind
     segStart(nSegs) = start
     segEnd(nSegs) = end
-    segInLink(nSegs) = inLink
-    segInPre(nSegs) = inPre
+    segCtx(nSegs) = ctx
     segMathRoot(nSegs) = mathRoot
     nSegs += 1
     segOff(nBlocks) = nSegs
@@ -356,7 +332,7 @@ object BlockSegmenter {
     var i = 0
     while (i < dom.nNodes) {
       if (dom.isText(i)) {
-        if (!dom.inSkip(i)) {
+        if (!dom.within(i, HtmlNames.Skip)) {
           val m = dom.mathRoot(i)
           // formula source selection (MathML): drop non-TeX <annotation>/
           // <annotation-xml> bodies (alternate renderings), and drop the
@@ -366,25 +342,22 @@ object BlockSegmenter {
           // ppstructure/predict_system.py:171-174)
           val keep =
             if (m < 0) true
-            else if (dom.inTexAnn(i)) true
-            else if (dom.inAnn(i)) false
-            else !dom.mathHasTex(m)
+            else if (dom.within(i, DomArena.TexAnnotation)) true
+            else if (dom.within(i, HtmlNames.AnyAnnotation)) false
+            else !dom.is(m, DomArena.MathTex)
           if (keep) {
             val a = dom.blockAnchor(i)
             if (a != curAnchor) { blocks.startBlock(a); curAnchor = a }
-            blocks.addSeg(SegKind.Text, dom.tStart(i), dom.tEnd(i), dom.inLink(i),
-              dom.inPre(i), m)
+            blocks.addSeg(SegKind.Text, dom.tStart(i), dom.tEnd(i), dom.ctx(i), m)
           }
         }
-      } else {
-        val nm = dom.name(i)
-        if (nm == "br" && curAnchor == dom.blockAnchor(i) && curAnchor >= 0 && !dom.inSkip(i)) {
-          blocks.addSeg(SegKind.Break, 0, 0, inLink = false, dom.inPre(i), dom.mathRoot(i))
-        } else if (HtmlNames.isBlock(nm)) {
-          // a block element boundary always terminates the running block,
-          // even if the next text re-anchors to the same node (e.g. <p>a<div>x</div>b</p>)
-          curAnchor = -2
-        }
+      } else if (dom.is(i, HtmlNames.Br)) {
+        if (curAnchor == dom.blockAnchor(i) && curAnchor >= 0 && !dom.within(i, HtmlNames.Skip))
+          blocks.addSeg(SegKind.Break, 0, 0, dom.ctx(i), dom.mathRoot(i))
+      } else if (dom.is(i, HtmlNames.Block)) {
+        // a block element boundary always terminates the running block,
+        // even if the next text re-anchors to the same node (e.g. <p>a<div>x</div>b</p>)
+        curAnchor = -2
       }
       i += 1
     }

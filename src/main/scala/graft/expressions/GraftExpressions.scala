@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
   UnaryExpression}
@@ -358,6 +359,109 @@ case class SrpBucketsExpr(child: Expression, nTables: Int, nPlanes: Int, dim: In
       c => s"graft.expressions.SrpKernel.compute($c, $nTables, $nPlanes, $dim)")
 
   override protected def withNewChildInternal(newChild: Expression): SrpBucketsExpr =
+    copy(child = newChild)
+}
+
+/** The BPE merge kernel (Sennrich et al. 2016, public): a ' '-joined piece
+  * sequence through a rank-ordered merge table. Its [[step]] is the one
+  * definition of the greedy leftmost-first non-overlapping merge: the first
+  * piece seeds the output, and a piece equal to `r` right after an output
+  * piece equal to `l` fuses into `l + r` (a fresh merge result is never the
+  * left operand again) — DuckDB's `list_reduce(string_split(s, ' '), …)`
+  * oracle lambda. [[apply]] applies the table's merges in rank order, each
+  * once over the whole sequence; a merge whose pair is not adjacent leaves
+  * the sequence as it is, so it jumps from rank to the next rank whose pair
+  * is adjacent. Pieces and merge tokens never contain ' ' (pieces come from
+  * space-split tokens), so a pair is two adjacent pieces. */
+object BpeKernel {
+  /** A merge table in rank order; its pair → ranks index is built once per
+    * deserialized copy (once per executor for a broadcast table). */
+  final class Table(val left: Array[String], val right: Array[String]) extends Serializable {
+    def size: Int = left.length
+
+    @transient private lazy val index: java.util.HashMap[String, java.util.HashMap[String, Array[Int]]] = {
+      val m = new java.util.HashMap[String, java.util.HashMap[String, Array[Int]]]()
+      var k = 0
+      while (k < size) {
+        val byRight = m.computeIfAbsent(left(k), _ => new java.util.HashMap[String, Array[Int]]())
+        val had = byRight.get(right(k))
+        byRight.put(right(k), if (had == null) Array(k) else had :+ k)
+        k += 1
+      }
+      m
+    }
+
+    /** The lowest rank >= `from` whose pair is adjacent in `p(0 until n)`,
+      * or -1. */
+    def nextRank(p: Array[String], n: Int, from: Int): Int = {
+      var best = -1
+      var i = 0
+      while (i + 1 < n) {
+        val byRight = index.get(p(i))
+        if (byRight != null) {
+          val ranks = byRight.get(p(i + 1))
+          if (ranks != null) {
+            var j = 0
+            while (j < ranks.length && ranks(j) < from) j += 1
+            if (j < ranks.length && (best < 0 || ranks(j) < best)) best = ranks(j)
+          }
+        }
+        i += 1
+      }
+      best
+    }
+  }
+
+  def table(merges: Seq[(String, String)]): Table =
+    new Table(merges.map(_._1).toArray, merges.map(_._2).toArray)
+
+  /** One merge (l, r) over `p(0 until n)`, in place; returns the new length. */
+  def step(p: Array[String], n: Int, l: String, r: String): Int = {
+    var out = 1
+    var i = 1
+    while (i < n) {
+      if (p(i) == r && p(out - 1) == l) p(out - 1) = l + r
+      else { p(out) = p(i); out += 1 }
+      i += 1
+    }
+    out
+  }
+
+  def apply(seq: UTF8String, merges: Broadcast[Table]): UTF8String = {
+    val t = merges.value
+    val p = seq.toString.split(" ", -1) // Spark's split(s, " ")
+    var n = p.length
+    var rank = t.nextRank(p, n, 0)
+    while (rank >= 0) {
+      n = step(p, n, t.left(rank), t.right(rank))
+      rank = t.nextRank(p, n, rank + 1)
+    }
+    UTF8String.fromString(String.join(" ", java.util.Arrays.asList(p: _*).subList(0, n)))
+  }
+}
+
+/** `graft_bpe_merge(seq STRING) -> STRING`: [[BpeKernel]] over one piece
+  * sequence. The merge table is a Spark broadcast variable, so the plan holds
+  * one handle whatever the vocabulary size (the [[SrpBucketsExpr]]
+  * plan-compactness rationale; folding each merge into the plan as an
+  * expression grew it by one lambda per merge). No SQL registration: the
+  * table is a plan-side object. */
+case class BpeMergeExpr(child: Expression, merges: Broadcast[BpeKernel.Table])
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def dataType: DataType = StringType
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def prettyName: String = "graft_bpe_merge"
+
+  override def nullSafeEval(input: Any): Any =
+    BpeKernel(input.asInstanceOf[UTF8String], merges)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("bpeMerges", merges, classOf[Broadcast[_]].getName)
+    defineCodeGen(ctx, ev, c => s"graft.expressions.BpeKernel.apply($c, $m)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BpeMergeExpr =
     copy(child = newChild)
 }
 
@@ -1359,6 +1463,8 @@ object GraftExpressions {
       ColumnBridge.expression(base), ColumnBridge.expression(ref)))
   def nfc(c: Column): Column =
     ColumnBridge.column(NfcExpr(ColumnBridge.expression(c)))
+  def bpeMerge(c: Column, merges: Broadcast[BpeKernel.Table]): Column =
+    ColumnBridge.column(BpeMergeExpr(ColumnBridge.expression(c), merges))
   def srpBuckets(c: Column, nTables: Int, nPlanes: Int, dim: Int): Column =
     ColumnBridge.column(SrpBucketsExpr(ColumnBridge.expression(c), nTables, nPlanes, dim))
   /** No SQL registration: the centroid matrix is a plan-side object, not an

@@ -342,7 +342,7 @@ object Extractor {
     val kept =
       if (nGroups == sizes.length) keptAll else keptAll.take(keptSizes.sum)
 
-    val text = assemble(kept, state.dom)
+    val text = assemble(kept, keptSizes, state.dom)
     t0 = System.nanoTime(); state.assembleNanos += t0 - t1
 
     (ExtractedDoc(url, text, kept.length, kept.map(_.span),
@@ -350,8 +350,9 @@ object Extractor {
       truncated), keptSizes)
   }
 
-  /** Group partition of the kept sequence — the exact runs [[assemble]]
-    * walks (table run / list run / singleton paragraph). */
+  /** Group partition of the kept sequence: a table run, a list run or a
+    * singleton paragraph. [[assemble]] walks it, and the block cap and
+    * ChunkedExtract's merge count by it. */
   private def groupSizes(kept: Vector[Kept]): Vector[Int] = {
     val out = Vector.newBuilder[Int]
     var i = 0
@@ -396,13 +397,10 @@ object Extractor {
     var tableAnc = -1; var trAnc = -1; var listAnc = -1; var cellAnc = -1
     var cur = node
     while (cur >= 0) {
-      if (!dom.isText(cur)) {
-        val nm = dom.name(cur)
-        if (trAnc < 0 && nm == "tr") trAnc = cur
-        if (cellAnc < 0 && (nm == "td" || nm == "th")) cellAnc = cur
-        if (tableAnc < 0 && nm == "table") tableAnc = cur
-        if (listAnc < 0 && (nm == "ul" || nm == "ol" || nm == "dl")) listAnc = cur
-      }
+      if (trAnc < 0 && dom.is(cur, HtmlNames.Row)) trAnc = cur
+      if (cellAnc < 0 && dom.is(cur, HtmlNames.Cell)) cellAnc = cur
+      if (tableAnc < 0 && dom.is(cur, HtmlNames.Table)) tableAnc = cur
+      if (listAnc < 0 && dom.is(cur, HtmlNames.List)) listAnc = cur
       cur = dom.parent(cur)
     }
     (tableAnc, trAnc, listAnc, cellAnc)
@@ -442,15 +440,15 @@ object Extractor {
         }
         if (blocks.segKind(s) == SegKind.Break) {
           // <br> inside <pre> is a preserved line break, like a literal '\n'
-          w.break(blocks.segInPre(s))
+          w.break((blocks.segCtx(s) & HtmlNames.Pre) != 0)
         }
         else {
           val from = math.max(blocks.segStart(s), bom)
           val segEnd = blocks.segEnd(s)
           val len = segEnd - from
           if (len > 0) {
-            val inLink = blocks.segInLink(s)
-            val inPre = blocks.segInPre(s)
+            val inLink = (blocks.segCtx(s) & HtmlNames.Anchor) != 0
+            val inPre = (blocks.segCtx(s) & HtmlNames.Pre) != 0
             // fast path: a pure-ASCII segment with no entity start decodes to
             // its own bytes under EVERY rawByteSafe charset (the 0x00-0x7F
             // roundtrip probe in Charsets guarantees it), so the String
@@ -515,16 +513,16 @@ object Extractor {
       // plain-webtext display math (the MathJax source convention): a block
       // that IS one `$$…$$` / `\[…\]` group — MathML-free blocks only
       val texSrc = if (w.mathGroups == 0) texDelimited(text) else null
-      val anchorName = if (anchor >= 0 && !dom.isText(anchor)) dom.name(anchor) else ""
-      val isHeading = HtmlNames.isHeading(anchorName)
-      val isCell = anchorName == "td" || anchorName == "th"
-      val isItem = anchorName == "li" || anchorName == "dd" || anchorName == "dt"
+      val isHeading = dom.is(anchor, HtmlNames.Heading)
+      val isCell = dom.is(anchor, HtmlNames.Cell)
+      val isItem = dom.is(anchor, HtmlNames.Item)
 
       // the cascade (first matching rule wins) — deterministic integer gates
       var label: String = null
       if (nonWs == 0) label = null // empty
-      else if (dom.inBoiler(anchor)) label = null // nav/header/footer/aside subtree
-      else if (dom.inHintBoiler(anchor) && !dom.inHintContent(anchor)) label = null
+      else if (dom.within(anchor, HtmlNames.Boiler)) label = null // nav/header/footer/aside subtree
+      else if (dom.within(anchor, DomArena.HintBoiler) && !dom.within(anchor, DomArena.HintContent))
+        label = null
       else if (isHeading) label = Labels.Title
       else if ((pureMath || texSrc != null) && linkChars * 2 < nonWs)
         // before the length gates: $E=mc^2$ is short. Links must be a strict
@@ -602,34 +600,19 @@ object Extractor {
   @inline private def rendered(k: Kept): String =
     if (k.span.label == Labels.Formula) "$" + k.span.text + "$" else k.span.text
 
-  private def assemble(kept: Vector[Kept], dom: DomArena): String = {
-    if (kept.isEmpty) return ""
-    val groups = Vector.newBuilder[String]
+  private def assemble(kept: Vector[Kept], sizes: Vector[Int], dom: DomArena): String = {
+    val sb = new java.lang.StringBuilder(256)
     var i = 0
-    while (i < kept.length) {
+    for (n <- sizes) {
+      if (i > 0) sb.append("\n\n")
       val k = kept(i)
-      if (k.tableAnc >= 0) {
-        var j = i + 1
-        while (j < kept.length && kept(j).tableAnc == k.tableAnc) j += 1
-        groups += assembleTable(kept, i, j, dom)
-        i = j
-      } else if (k.listAnc >= 0) {
-        val sb = new java.lang.StringBuilder(64)
-        sb.append(rendered(k))
-        var j = i + 1
-        while (j < kept.length && kept(j).listAnc == k.listAnc) {
-          sb.append('\n').append(rendered(kept(j)))
-          j += 1
-        }
-        groups += sb.toString
-        i = j
-      } else {
-        groups += (if (k.span.label == Labels.Formula) "$$" + k.span.text + "$$"
-                   else k.span.text)
-        i += 1
-      }
+      if (k.tableAnc >= 0) sb.append(assembleTable(kept, i, i + n, dom))
+      else if (k.listAnc >= 0) {
+        for (j <- i until i + n) { if (j > i) sb.append('\n'); sb.append(rendered(kept(j))) }
+      } else sb.append(if (k.span.label == Labels.Formula) "$$" + k.span.text + "$$" else k.span.text)
+      i += n
     }
-    groups.result().mkString("\n\n")
+    sb.toString
   }
 
   /** Assemble one table run kept[from, until) with colspan/rowspan occupancy

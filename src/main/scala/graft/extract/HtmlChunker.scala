@@ -14,9 +14,10 @@ import graft.htmltok.{HtmlNames, HtmlTokenizer, TokenArena}
   *    block terminates there in the single-pass segmenter too, so no block
   *    can span a seam), and
   *  - when every DOM ancestor of that element is a plain `<html>`/`<body>`
-  *    (no class/id hints, no boilerplate/link/pre ancestry, no open table or
-  *    list) — so a fragment prefixed with those ancestors as bare tags
-  *    reproduces the exact ancestry facts of the original position.
+  *    (`HtmlNames.Frame`; no class/id hints, no boilerplate/link/pre
+  *    ancestry, no open table or list) — so a fragment prefixed with those
+  *    ancestors as bare tags reproduces the exact ancestry facts of the
+  *    original position.
   *
   * Whatever the element implicitly closes (a top-level `<p>`, `<li>` or
   * `<head>`) ends exactly where the fragment before the seam ends, so such
@@ -48,10 +49,9 @@ object HtmlChunker {
       if (!dom.isText(n)) {
         val p = dom.parent(n)
         val underPlain = p < 0 || plain(p)
-        val nm = dom.name(n)
-        plain(n) = underPlain && dom.flags(n) == 0 && (nm == "html" || nm == "body")
+        plain(n) = underPlain && dom.flags(n) == 0 && dom.is(n, HtmlNames.Frame)
         val at = dom.tStart(n)
-        if (underPlain && HtmlNames.isBlock(nm) && at - chunkStart >= minChunkBytes) {
+        if (underPlain && dom.is(n, HtmlNames.Block) && at - chunkStart >= minChunkBytes) {
           out += Chunk(chunkStart, at, pendingPrefix)
           nChunks += 1
           chunkStart = at

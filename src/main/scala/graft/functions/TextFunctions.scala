@@ -1,8 +1,11 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+
+import graft.expressions.{BpeKernel, GraftExpressions}
 
 /** Text-analysis operators for the training-data pipeline, over the driver's
   * `documents` table (doc_id, text, lang, source, n_chars).
@@ -436,13 +439,45 @@ object TextFunctions {
       .orderBy("doc_id")
   }
 
+  /** `merges` as a broadcast table for [[GraftExpressions.bpeMerge]], the
+    * one merge kernel of [[bpeLearn]] and [[bpeEncode]]. */
+  private def broadcastMerges(docs: DataFrame,
+                              merges: Seq[(String, String)]): Broadcast[BpeKernel.Table] =
+    docs.sparkSession.sparkContext.broadcast(BpeKernel.table(merges))
+
+  /** BPE ENCODING with a learned merge table — the apply side of
+    * [[bpeLearn]] (train on a slice, tokenize the corpus): each word
+    * char-splits, then every merge applies IN RANK ORDER through the merge
+    * kernel. Emits per doc the word count and the resulting subword count —
+    * the fertility/compression statistic a tokenizer rollout reports.
+    *
+    * Scale shape: zero shuffle — the merge table is a broadcast variable
+    * (the plan holds one handle at any vocab size, the graft_srp_buckets
+    * precedent) and the kernel runs row-local inside the scan stage at any
+    * corpus size. Merge tokens are space-free pieces, as [[bpeLearn]]
+    * emits them. */
+  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    require(merges.forall { case (l, r) => !l.contains(' ') && !r.contains(' ') },
+      "BPE merge tokens cannot contain ' '")
+    val seqs0 = transform(tokens(col("text")),
+      w => rtrim(regexp_replace(w, "(.)", "$1 ")))
+    val table = broadcastMerges(docs, merges)
+    val seqs = transform(seqs0, s => GraftExpressions.bpeMerge(s, table))
+    docs.select(
+      col("doc_id"),
+      size(tokens(col("text"))).cast("long").as("n_words"),
+      aggregate(seqs, lit(0L),
+        (acc, s) => acc + size(split(s, " ")).cast("long")).as("n_subwords"))
+      .orderBy("doc_id")
+  }
+
   /** BPE tokenizer TRAINING — the full merge loop of Sennrich et al. 2016
     * (public): [[bpePairCounts]] is step 1; THIS runs the whole algorithm
     * for `nMerges` rounds. Each round: adjacent-pair counts over the word
     * dictionary (ONE combining shuffle), global argmax with a total
     * tie-order (count desc, left asc, right asc — engine-deterministic),
     * then the greedy leftmost-first non-overlapping merge applied row-local
-    * via an `aggregate` fold over the token sequence. Returns the learned
+    * by the merge kernel (a one-merge broadcast table per round). Returns the learned
     * merge table (step, left_tok, right_tok, merged, pair_count) — the
     * artifact a tokenizer trainer persists.
     *
@@ -453,46 +488,8 @@ object TextFunctions {
     * (pair, freq) post-combine; the argmax collects ONE row (control
     * plane); rounds are sequential BY NATURE (round r+1's counts depend on
     * r's merge) — the vocab-size loop every production BPE trainer runs.
-    * Each round's fold is localCheckpointed so round k never re-executes
+    * Each round's merge is localCheckpointed so round k never re-executes
     * rounds 1..k−1 (the x13/d18 discipline). */
-  /** Greedy leftmost-first non-overlapping application of ONE merge (l, r)
-    * to a space-joined token sequence — the BPE merge step, shared by
-    * [[bpeLearn]] (training) and [[bpeEncode]] (application) so the two
-    * sides can never diverge. Semantics ≡ DuckDB's
-    * `list_reduce(string_split(s,' '), …)` with the same CASE (first
-    * element seeds the accumulator; a fresh merge result never re-matches
-    * as the left operand). */
-  private def mergeFold(s: Column, l: String, r: String): Column =
-    aggregate(split(s, " "), lit(""), (acc, x) =>
-      when(x === lit(r) && (acc === lit(l) || acc.endsWith(lit(" " + l))),
-        concat(acc.substr(lit(1), length(acc) - lit(l.length)), lit(l + r)))
-        .when(acc === lit(""), x)
-        .otherwise(concat(acc, lit(" "), x)))
-
-  /** BPE ENCODING with a learned merge table — the apply side of
-    * [[bpeLearn]] (train on a slice, tokenize the corpus): each word
-    * char-splits, then every merge applies IN RANK ORDER via [[mergeFold]].
-    * Emits per doc the word count and the resulting subword count — the
-    * fertility/compression statistic a tokenizer rollout reports.
-    *
-    * Scale shape: zero shuffle — the merge table arrives as plan literals
-    * (vocab-sized control plane; at 32k merges a map-typed broadcast kernel
-    * is the move, the graft_srp_buckets precedent) and the folds run
-    * row-local inside the scan stage at any corpus size. */
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val seqs0 = transform(tokens(col("text")),
-      w => rtrim(regexp_replace(w, "(.)", "$1 ")))
-    val seqs = merges.foldLeft(seqs0) { case (c, (l, r)) =>
-      transform(c, s => mergeFold(s, l, r))
-    }
-    docs.select(
-      col("doc_id"),
-      size(tokens(col("text"))).cast("long").as("n_words"),
-      aggregate(seqs, lit(0L),
-        (acc, s) => acc + size(split(s, " ")).cast("long")).as("n_subwords"))
-      .orderBy("doc_id")
-  }
-
   def bpeLearn(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -523,8 +520,9 @@ object TextFunctions {
         val l = top(0).getString(0); val r = top(0).getString(1)
         out += ((step.toLong, l, r, l + r, top(0).getLong(2)))
         val prev = words
-        words = words.select(mergeFold(col("seq"), l, r).as("seq"), col("freq"))
-          .localCheckpoint()
+        words = words.select(
+          GraftExpressions.bpeMerge(col("seq"), broadcastMerges(words, Seq((l, r)))).as("seq"),
+          col("freq")).localCheckpoint()
         // only the newest dictionary is ever read again — at production
         // vocab sizes (32k rounds) keeping every round's checkpoint would
         // grow executor storage linearly with rounds

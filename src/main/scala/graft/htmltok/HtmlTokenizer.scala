@@ -32,16 +32,17 @@ final class TokenArena(initialCapacity: Int = 1024) {
   /** the tokenizer's attribute reader, reused for every start tag */
   private[htmltok] val attrs = new AttrScanner
 
-  // per-document tag-name intern table
+  // per-document tag-name intern table: id → name and id → HtmlNames class
   private val internMap = new java.util.HashMap[String, Integer](64)
   private val internNames = new scala.collection.mutable.ArrayBuffer[String](64)
+  private var internClasses = new Array[Int](64)
 
   def reset(): Unit = { size = 0; internMap.clear(); internNames.clear() }
 
   def tagName(id: Int): String = internNames(id)
 
-  /** Immutable view of the interned names, id-indexed (for the DOM builder). */
-  def namesSnapshot: IndexedSeq[String] = internNames.toIndexedSeq
+  /** The [[HtmlNames]] class bits of interned tag `id`. */
+  def tagClass(id: Int): Int = internClasses(id)
 
   def intern(name: String): Int = {
     val got = internMap.get(name)
@@ -50,6 +51,8 @@ final class TokenArena(initialCapacity: Int = 1024) {
       val id = internNames.length
       internNames += name
       internMap.put(name, id)
+      if (id == internClasses.length) internClasses = java.util.Arrays.copyOf(internClasses, id * 2)
+      internClasses(id) = HtmlNames.classOf(name)
       id
     }
   }
@@ -289,7 +292,8 @@ object Charsets {
     var t = 0
     while (t < arena.size) {
       val k = arena.kinds(t)
-      if ((k == Tok.Start || k == Tok.SelfClose) && arena.tagName(arena.tagIds(t)) == "meta") {
+      if ((k == Tok.Start || k == Tok.SelfClose) &&
+          (arena.tagClass(arena.tagIds(t)) & HtmlNames.Meta) != 0) {
         val label = metaLabel(b, arena.starts(t), arena.ends(t))
         if (label != null) {
           val declared = resolve(label)
@@ -538,9 +542,9 @@ object HtmlTokenizer {
             // per-block decode pass, which is exactly RCDATA semantics).
             // parseStartTag forces these to Tok.Start even when written
             // XHTML-style as <script/>, so the guard is on the name alone.
-            val name = arena.tagName(arena.tagIds(tokIdx))
-            if (HtmlNames.isRawtext(name) && arena.kinds(tokIdx) == Tok.Start) {
-              val close = findCloseTag(input, i, n, name)
+            val id = arena.tagIds(tokIdx)
+            if ((arena.tagClass(id) & HtmlNames.Rawtext) != 0 && arena.kinds(tokIdx) == Tok.Start) {
+              val close = findCloseTag(input, i, n, arena.tagName(id))
               if (close > i) { arena.add(Tok.Text, i, close, -1, 0); i = close; textStart = i }
             }
           }
@@ -603,7 +607,7 @@ object HtmlTokenizer {
     val k = arena.kinds(t)
     if ((k == Tok.Start || k == Tok.SelfClose) &&
         (arena.flags(t) & TokenFlags.HasHref) != 0 &&
-        arena.tagName(arena.tagIds(t)) == "a") {
+        (arena.tagClass(arena.tagIds(t)) & HtmlNames.Anchor) != 0) {
       val v = attrValue(input, arena.starts(t), arena.ends(t), "href")
       if (v != null && v.nonEmpty) v else null
     } else null
@@ -630,28 +634,28 @@ object HtmlTokenizer {
         var skipDepth = 0 // svg/noscript/iframe/object/… subtree depth
         while (open && j < arena.size) {
           val kj = arena.kinds(j)
-          val nj = if (arena.tagIds(j) >= 0) arena.tagName(arena.tagIds(j)) else null
+          val cj = if (arena.tagIds(j) >= 0) arena.tagClass(arena.tagIds(j)) else 0
           if (kj == Tok.Text) {
             // invisible subtrees contribute NO anchor text — the same
-            // HtmlNames.isSkip set the DOM walk excludes, so
+            // HtmlNames.Skip class the DOM walk excludes, so
             // '<a><svg><text>42</text></svg>Home</a>' reads "Home", not
             // "42 Home" (the flat walk previously skipped only rawtext)
             if (skipDepth == 0)
               sb.append(new String(input, arena.starts(j),
                 arena.ends(j) - arena.starts(j), java.nio.charset.StandardCharsets.UTF_8))
-          } else if ((kj == Tok.End || kj == Tok.Start) && nj == "a" && skipDepth == 0) {
+          } else if ((kj == Tok.End || kj == Tok.Start) && (cj & HtmlNames.Anchor) != 0 &&
+              skipDepth == 0) {
             open = false
-          } else if (kj == Tok.Start && nj != null && HtmlNames.isRawtext(nj)) {
+          } else if (kj == Tok.Start && (cj & HtmlNames.Rawtext) != 0) {
             // rawtext bodies (script/style/…) are emitted as Text tokens —
             // skip to the matching End so code never leaks into anchor text
             val rid = arena.tagIds(j)
             j += 1
             while (j < arena.size &&
                 !(arena.kinds(j) == Tok.End && arena.tagIds(j) == rid)) j += 1
-          } else if (kj == Tok.Start && nj != null && HtmlNames.isSkip(nj)) {
+          } else if (kj == Tok.Start && (cj & HtmlNames.Skip) != 0) {
             skipDepth += 1
-          } else if (kj == Tok.End && nj != null && HtmlNames.isSkip(nj) &&
-              skipDepth > 0) {
+          } else if (kj == Tok.End && (cj & HtmlNames.Skip) != 0 && skipDepth > 0) {
             skipDepth -= 1
           }
           j += 1
@@ -854,7 +858,8 @@ object HtmlTokenizer {
     }
     if (at.pos >= n) return -1 // no '>' — EOF in tag; caller drops '<'..EOF
     val j = at.pos + 1 // past '>'
-    val name = lowerName(input, i0 + 1, nameEnd)
+    val id = arena.intern(lowerName(input, i0 + 1, nameEnd))
+    val cls = arena.tagClass(id)
     // browsers IGNORE the self-closing slash on non-void HTML elements
     // (HTML5 tree construction): '<div id=x/>' OPENS a div whose content
     // follows as children — honoring the slash would orphan the content as
@@ -864,9 +869,9 @@ object HtmlTokenizer {
     // and the foreign-content roots svg/math, where HTML5 honors the slash:
     // '<a><svg class="icon"/>Home</a>' must not open a never-closed skip subtree.
     val kind =
-      if (HtmlNames.isVoid(name) || (at.selfClose && (name == "svg" || name == "math"))) Tok.SelfClose
+      if ((cls & HtmlNames.Void) != 0 || (at.selfClose && (cls & HtmlNames.Foreign) != 0)) Tok.SelfClose
       else Tok.Start
-    arena.add(kind, i0, j, arena.intern(name), flag)
+    arena.add(kind, i0, j, id, flag)
     j
   }
 
@@ -954,30 +959,59 @@ object HtmlTokenizer {
   }
 }
 
-/** Static HTML name classes (HTML5 spec lists; public knowledge). */
+/** The one table of HTML tag semantics (HTML5 spec lists; public knowledge):
+  * each class bit below is declared with its lowercase member names.
+  * [[TokenArena.intern]] reads a name's bits once per document, and every tag
+  * question downstream (tokenizer, DOM, segmenter, classifier, chunk planner,
+  * link walks) is a bit test on them. */
 object HtmlNames {
-  private val voidTags = Set("area", "base", "br", "col", "embed", "hr", "img",
-    "input", "link", "meta", "param", "source", "track", "wbr")
-  private val blockTags = Set("address", "article", "aside", "blockquote", "body",
-    "caption", "dd", "div", "dl", "dt", "fieldset", "figcaption", "figure", "footer",
-    "form", "h1", "h2", "h3", "h4", "h5", "h6", "header", "hr", "html", "li", "main",
-    "nav", "ol", "p", "pre", "section", "table", "tbody", "td", "tfoot", "th",
-    "thead", "tr", "ul")
-  private val skipSubtree = Set("script", "style", "noscript", "svg", "head",
-    "iframe", "object", "template")
-  private val boilerTags = Set("nav", "header", "footer", "aside")
-  private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
-  /** rawtext (script/style) + RCDATA (textarea/title): content is literal
-    * text to the matching close tag, and the self-closing slash is ignored */
-  private val rawtextTags = Set("script", "style", "textarea", "title")
-  /** end tag of these implicitly closes an open sibling of the same name */
-  private val autoCloseSibling = Set("p", "li", "td", "th", "tr", "option", "dd", "dt")
+  private val table = new java.util.HashMap[String, Integer](128)
 
-  def isVoid(t: String): Boolean = voidTags.contains(t)
-  def isBlock(t: String): Boolean = blockTags.contains(t)
-  def isSkip(t: String): Boolean = skipSubtree.contains(t)
-  def isBoiler(t: String): Boolean = boilerTags.contains(t)
-  def isHeading(t: String): Boolean = headingTags.contains(t)
-  def isRawtext(t: String): Boolean = rawtextTags.contains(t)
-  def autoCloses(t: String): Boolean = autoCloseSibling.contains(t)
+  private def bit(i: Int, names: String*): Int = {
+    names.foreach(n => table.put(n, classOf(n) | 1 << i))
+    1 << i
+  }
+
+  /** The class bits of a lowercase tag name (0 for a name the table lacks). */
+  def classOf(name: String): Int = {
+    val bits = table.get(name)
+    if (bits eq null) 0 else bits.intValue
+  }
+
+  // no content and no end tag
+  val Void: Int = bit(0, "area", "base", "br", "col", "embed", "hr", "img", "input", "link",
+    "meta", "param", "source", "track", "wbr")
+  // anchors the text under it and ends a running block; closes an open Para and Head
+  val Block: Int = bit(1, "address", "article", "aside", "blockquote", "body", "caption",
+    "dd", "div", "dl", "dt", "fieldset", "figcaption", "figure", "footer", "form", "h1",
+    "h2", "h3", "h4", "h5", "h6", "header", "hr", "html", "li", "main", "nav", "ol", "p",
+    "pre", "section", "table", "tbody", "td", "tfoot", "th", "thead", "tr", "ul")
+  // an invisible subtree: no text
+  val Skip: Int = bit(2, "script", "style", "noscript", "svg", "head", "iframe", "object", "template")
+  val Boiler: Int = bit(3, "nav", "header", "footer", "aside") // subtree is no content
+  val Heading: Int = bit(4, "h1", "h2", "h3", "h4", "h5", "h6") // title blocks
+  // rawtext (script/style) + RCDATA (textarea/title): content is literal text
+  // to the matching close tag, and the self-closing slash is ignored
+  val Rawtext: Int = bit(5, "script", "style", "textarea", "title")
+  // a start closes an open same-name element up to the nearest non-Para Block
+  val AutoClose: Int = bit(6, "p", "li", "td", "th", "tr", "option", "dd", "dt")
+  val Para: Int = bit(7, "p")
+  val Head: Int = bit(8, "head")
+  val Frame: Int = bit(9, "html", "body") // the ancestors a chunk prefix reopens
+  val Br: Int = bit(10, "br")
+  val Anchor: Int = bit(11, "a")
+  val Pre: Int = bit(12, "pre", "textarea") // newlines survive
+  val Math: Int = bit(13, "math") // a formula root
+  val Foreign: Int = bit(14, "svg", "math") // the self-closing slash is honored
+  val Annotation: Int = bit(15, "annotation") // a formula's source when TeX-encoded
+  val AnyAnnotation: Int = bit(16, "annotation", "annotation-xml") // alternate renderings
+  val Table: Int = bit(17, "table")
+  val Row: Int = bit(18, "tr")
+  val Cell: Int = bit(19, "td", "th")
+  val Section: Int = bit(20, "thead", "tbody", "tfoot")
+  val List: Int = bit(21, "ul", "ol", "dl") // one assembly group
+  val Item: Int = bit(22, "li", "dd", "dt")
+  val DefItem: Int = bit(23, "dt", "dd")
+  val DefList: Int = bit(24, "dl")
+  val Meta: Int = bit(25, "meta") // the charset prescan reads it
 }

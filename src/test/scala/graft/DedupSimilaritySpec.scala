@@ -987,6 +987,52 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(r0(1L) == 9L && r0(2L) == 10L && r0(3L) == 6L, r0.toString)
   }
 
+  test("bpeEncode: 32,000 merges keep the plan of one merge and encode exactly") {
+    import spark.implicits._
+    // a synthetic production-size table: each merge fuses two tokens of the
+    // vocabulary so far, so later ranks build on earlier merge results
+    val rng = new java.util.Random(46L)
+    val vocab = scala.collection.mutable.ArrayBuffer(('a' to 'z').map(_.toString): _*)
+    val merges = (0 until 32000).map { _ =>
+      val l = vocab(rng.nextInt(vocab.length)); val r = vocab(rng.nextInt(vocab.length))
+      if (l.length + r.length <= 8) vocab += l + r
+      (l, r)
+    }
+    val short = vocab.filter(_.length <= 4).toIndexedSeq
+    val texts = (0 until 40).map(_ =>
+      (0 until 12).map(_ => (0 until 1 + rng.nextInt(3)).map(_ => short(rng.nextInt(short.length)))
+        .mkString).mkString(" "))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    // plan size: expression nodes of the analyzed plan, and its text
+    def planSize(n: Int): (Int, Int) = {
+      val plan = TextFunctions.bpeEncode(docs, merges.take(n)).queryExecution.analyzed
+      (plan.collect { case op => op.expressions.map(_.collect { case e => e }.size).sum }.sum,
+        plan.treeString.length)
+    }
+    val (nodes1, text1) = planSize(1)
+    for (n <- Seq(64, 32000)) {
+      val (nodes, text) = planSize(n)
+      assert(nodes == nodes1, s"$n merges: $nodes plan expression nodes vs $nodes1 for one")
+      assert(math.abs(text - text1) < 8, s"$n merges: plan text $text chars vs $text1 for one")
+    }
+    // the reference: every merge in rank order, each a greedy leftmost-first
+    // pass (the first piece seeds; a fresh merge result is no left operand)
+    def subwords(word: String): Long = {
+      var p = word.map(_.toString).toVector
+      for ((l, r) <- merges) {
+        val out = scala.collection.mutable.ArrayBuffer(p.head)
+        for (x <- p.tail) if (x == r && out.last == l) out(out.length - 1) = l + r else out += x
+        p = out.toVector
+      }
+      p.length.toLong
+    }
+    val want = texts.zipWithIndex.map { case (t, i) => i.toLong -> t.split(" ").map(subwords).sum }.toMap
+    val got = TextFunctions.bpeEncode(docs, merges).collect()
+      .map(x => x.getLong(0) -> x.getLong(2)).toMap
+    assert(got == want)
+    assert(want.values.sum < texts.map(_.count(_ != ' ')).sum, "some merges must apply")
+  }
+
   test("bpeLearn: exhausts gracefully when no pairs remain") {
     import spark.implicits._
     val docs = Seq((1L, "a b")).toDF("doc_id", "text") // single-char words: no pairs

@@ -102,6 +102,35 @@ class TagSoupHardeningSpec extends AnyFunSuite {
     assert(got2 == "start words enough here tail kept]]", got2)
   }
 
+  test("tag classes no other spec reads: hr, aside, h3, textarea, tbody, ol, dd") {
+    def doc(body: String) = Extractor.extract("u", s"<html><body>$body</body></html>".getBytes("UTF-8"))
+    // Void: <hr> closes at once, so the text after it stays the div's
+    val hr = doc("<div>first part of the words<hr>second part of the words</div>")
+    assert(hr.spans.map(_.tagPath) == Seq("html/body/div", "html/body/div"), hr.spans)
+    // Boiler: an <aside> subtree is no content
+    assert(doc("<aside><p>related reading with enough characters</p></aside>" +
+      "<p>main article paragraph with enough characters</p>").text ==
+      "main article paragraph with enough characters")
+    // Heading: a short <h3> is a title, not short stray text
+    assert(doc("<h3>Short</h3><p>main article paragraph with enough characters</p>").text ==
+      "Short\n\nmain article paragraph with enough characters")
+    // Pre: newlines inside <textarea> survive
+    assert(doc("<div><textarea>line one words\nline two words</textarea></div>").text ==
+      "line one words\nline two words")
+    // Section: a new row clears back to its <tbody>, and a <tbody> start
+    // closes the open <thead>
+    val tb = doc("<table><thead><tr><th>head cell<tbody><tr><td>cell one words" +
+      "<tr><td>cell two words</table>")
+    assert(tb.spans.map(_.tagPath) == Seq("html/body/table/thead/tr/th",
+      "html/body/table/tbody/tr/td", "html/body/table/tbody/tr/td"), tb.spans)
+    // List: an <ol>'s items are one group
+    assert(doc("<ol><li>first item words</li><li>second item words</li></ol>").text ==
+      "first item words\nsecond item words")
+    // Item: a short <dd> is a list item
+    assert(doc("<dl><dt>Term</dt><dd>short def</dd></dl>").spans.map(_.label) ==
+      Seq("item", "item"))
+  }
+
   test("fuzz: random byte soup never throws and extracts deterministically") {
     val rng = new java.util.Random(1234)
     val fragments = Array("<div>", "</div>", "<p ", "class=\"x", "<!--", "-->",
