@@ -102,7 +102,7 @@ class TagSoupHardeningSpec extends AnyFunSuite {
     assert(got2 == "start words enough here tail kept]]", got2)
   }
 
-  test("tag classes no other spec reads: hr, aside, h3, textarea, tbody, ol, dd") {
+  test("the tag classes of hr, aside, h3, textarea, tbody, ol and dd shape the output") {
     def doc(body: String) = Extractor.extract("u", s"<html><body>$body</body></html>".getBytes("UTF-8"))
     // Void: <hr> closes at once, so the text after it stays the div's
     val hr = doc("<div>first part of the words<hr>second part of the words</div>")
